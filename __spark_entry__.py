@@ -1628,6 +1628,11 @@ def pipe_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SESS_FEED_ROWS: dict[str, int] = {}
 
 
+class StreamTimeoutError(TimeoutError):
+    """A bounded streaming query outlived its wait; reading its sink would
+    return partial output."""
+
+
 def _stage_session_feed(spark: SparkSession, sf_dir: str) -> str:
     """One-time parquet staging of the events feed for the stateful stream
     (idempotent per sf_dir; also called from bench warmup as setup cost)."""
@@ -1709,7 +1714,12 @@ def pipe_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        if not q.awaitTermination(300):
+            q.stop()
+            raise StreamTimeoutError(
+                "pipe_stateful_sessionize: availableNow stream did not finish in 300 s; "
+                "its output would be partial"
+            )
     return (
         spark.read.schema(
             "user_id long, start_us long, end_us long, n_events long, total_value double"

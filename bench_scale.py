@@ -262,7 +262,7 @@ def main() -> None:
                 "unit": f"x ({FACTOR}x data => ideal <= {FACTOR})",
                 "queries": detail,
                 "sf": sf_dir.rstrip("/").rsplit("sf", 1)[-1],
-                "cpus": os.environ.get("SPARK_GRAFT_CPUS"),
+                "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
             }
         )
     )

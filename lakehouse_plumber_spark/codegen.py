@@ -15,11 +15,11 @@ Covered surface:
 - transforms: sql, schema, python, temp_table
 - writes: materialized_view, streaming_table standard (batch + availableNow
   streaming with per-flow checkpoints, fan-in append), streaming_table CDC
-  SCD1/SCD2 (foreachBatch append to a raw-events table + window-rebuild
-  merge body — the standalone distillation of operators/cdc.py),
-  snapshot_cdc (source_function polling loop + presence-grid delete
-  derivation + the same SCD rebuild), sinks (delta path/table, kafka
-  simulate + real writer, foreachbatch handler, custom Python Data Source)
+  SCD1/SCD2 (foreachBatch append to a raw-events table + the engine's SCD
+  functions rebuilding the table from it), snapshot_cdc (source_function
+  polling loop + presence-grid delete derivation + the same functions),
+  sinks (delta path/table, kafka simulate + real writer, foreachbatch
+  handler, custom Python Data Source)
 
 Incremental MVs compile as accumulate-then-recompute (same table contents
 by the IMV contract; incremental COST stays engine-only). CDC compiles
@@ -31,12 +31,15 @@ expectations_file resolves at compile time when `base_dir` is passed.
 Streaming quarantine remains in-engine and raises — never silently
 wrong.
 
-Generated CDC note: the standalone script maintains an append-only
-raw-events table next to the target and rebuilds the visible snapshot from
-it on every run — same event-sourced semantics as the engine
-(operators/cdc.py:19-37) without the engine's hidden log/bucket layout.
-Events and snapshot are different paths, so the rebuild never reads what it
-overwrites.
+Generated CDC note: there is one SCD implementation. Scripts with a CDC or
+snapshot-CDC write carry the engine's store-free functions from
+operators/cdc.py (event tagging, the (key, seq) dedup, truncates, forward
+fill, the SCD1/SCD2 rebuilds), their source copied at compile time, so they
+plan and resolve ties exactly as the engine does. What differs is storage:
+the script keeps an append-only raw-events table next to the target and
+rebuilds the visible table from all of it on every run, where the engine
+merges each batch into a bucketed table with a hidden event log. Events and
+target are different paths, so the rebuild never reads what it overwrites.
 """
 
 from __future__ import annotations
@@ -134,14 +137,16 @@ def _load_module(path, name):
     spec.loader.exec_module(mod)
     return mod
 
+'''
 
+_BUILD = '''\
 def build(spark, out_dir):
-    """Run the pipeline; writes tables under out_dir, returns {{name: DataFrame}}."""
-    views = {{}}
-    written = {{}}
+    """Run the pipeline; writes tables under out_dir, returns {name: DataFrame}."""
+    views = {}
+    written = {}
     _dq_checks = []
-    _pending_compact = {{}}
-    _uc_tags = {{}}
+    _pending_compact = {}
+    _uc_tags = {}
 
     def _tbl_path(name):
         return os.path.join(out_dir, name.replace(".", "/"))
@@ -342,28 +347,72 @@ def _emit_python_call(a: Action, call_shape: str) -> list[str]:
     return lines
 
 
+def _scd_prelude() -> str:
+    """Module-level block of compiled CDC scripts: the engine's store-free
+    SCD functions (operators/cdc.py STANDALONE_*), their source copied
+    verbatim. `CDCConfig` binds the functions' annotation name to a plain
+    namespace; each action builds its config from the fields they read."""
+    import inspect
+
+    from lakehouse_plumber_spark.operators import cdc
+
+    lines = [
+        "# SCD change application: the engine's own functions, copied verbatim",
+        "# from lakehouse_plumber_spark/operators/cdc.py at compile time.",
+        "from types import SimpleNamespace as CDCConfig",
+        "",
+        "from pyspark.sql import DataFrame",
+        "",
+    ]
+    lines += [f"{c} = {getattr(cdc, c)!r}" for c in cdc.STANDALONE_CONSTANTS]
+    for fn in cdc.STANDALONE_FUNCTIONS:
+        lines += ["", "", inspect.getsource(getattr(cdc, fn)).rstrip()]
+    return "\n".join(lines) + "\n\n"
+
+
+def _emit_scd_apply(cfg) -> list[str]:
+    """Lines turning `_ev` (raw events plus an `_PRIO` ordinal) into the
+    visible SCD table `_out`, through the engine functions that
+    `_scd_prelude` copies — the same dedup and rebuild the engine's merge
+    runs, over all events instead of one batch and the affected keys' log."""
+    import inspect
+    import re
+
+    from lakehouse_plumber_spark.operators import cdc
+
+    read = sorted({
+        m for fn in cdc.STANDALONE_FUNCTIONS
+        for m in re.findall(r"\bcfg\.(\w+)", inspect.getsource(getattr(cdc, fn)))
+    })
+    lines = ["    _cdc = CDCConfig("]
+    lines += [f"        {f}={getattr(cfg, f)!r}," for f in read]
+    lines += [
+        "    )",
+        "    _dc = _data_columns(_ev.columns, _cdc)",
+        "    _ev = _dedup_key_seq(_prepare_events(_ev, _cdc, _dc), _cdc)",
+    ]
+    if cfg.scd_type == 2:
+        return lines + [
+            "    _out = (_rebuild_scd2(_ev.drop(_PRIO), _cdc, _dc)",
+            "            .filter(~F.col(TOMBSTONE)).drop(TOMBSTONE, EVENT_DEL))",
+        ]
+    return lines + [
+        "    _out = (_rebuild_scd1(_forward_fill_nulls(_ev, _cdc, _dc), _cdc, _dc)",
+        "            .filter(~F.col(TOMBSTONE)).drop('__seq', TOMBSTONE))",
+    ]
+
+
 def _emit_cdc_merge(a: Action) -> list[str]:
-    """CDC streaming-table write: foreachBatch body appending raw events +
-    the SCD1/SCD2 window-rebuild merge (standalone distillation of
-    operators/cdc.py:163-280; reference emits create_auto_cdc_flow at
-    templates/write/streaming_table.py.j2:45)."""
+    """CDC streaming-table write: a foreachBatch body appends raw events to
+    an append-only table, then `_emit_scd_apply` rebuilds the visible
+    SCD1/SCD2 table from all of them with the engine's functions (reference
+    emits create_auto_cdc_flow at templates/write/streaming_table.py.j2:45)."""
     wt = a.write_target
     cfg = wt.cdc_config
     if cfg is None:
         raise NotImplementedError(f"cdc write {a.name!r} missing cdc_config")
     name = wt.full_name
     ident = _py_ident(a.name)
-    multi_seq = len(cfg.sequence_cols) > 1
-    seq = "__seq" if multi_seq else cfg.sequence_cols[0]
-    seq_struct = "F.struct(*" + repr(list(cfg.sequence_cols)) + ")"
-    keys = list(cfg.keys)
-    del_expr = cfg.apply_as_deletes or "false"
-    drop_cols = []
-    if cfg.except_column_list:
-        drop_cols = [c for c in cfg.except_column_list if c not in keys]
-    track_list = cfg.track_history_column_list
-    track_except = cfg.track_history_except_column_list
-
     lines = [
         f"    df = views[{str(a.source)!r}]",
         f"    _ev_path_{ident} = os.path.join(out_dir, '_cdc_events', {name.replace('.', '/')!r})",
@@ -394,64 +443,13 @@ def _emit_cdc_merge(a: Action) -> list[str]:
         "    # merge body: rebuild the visible snapshot from ALL raw events —",
         "    # late/out-of-order arrivals splice in exactly (event-sourced CDC)",
         f"    _ev = spark.read.option('mergeSchema', 'true').parquet(_ev_path_{ident})",
-        "    # events appended by pre-__prio script versions read as null: rank",
-        "    # them below every stamped append",
-        "    _ev = (_ev.withColumn('__prio', F.coalesce(F.col('__prio'), F.lit(-1)))",
-        "           if '__prio' in _ev.columns else _ev.withColumn('__prio', F.lit(-1)))",
-        f"    _ev = _ev.withColumn('__del', F.coalesce(F.expr({del_expr!r}), F.lit(False)))",
+        "    # the append ordinal is the engine's batch priority; events appended",
+        "    # by pre-__prio script versions read as null and rank below every",
+        "    # stamped append",
+        "    _ev = (_ev.withColumn(_PRIO, F.coalesce(F.col('__prio'), F.lit(-1))).drop('__prio')",
+        "           if '__prio' in _ev.columns else _ev.withColumn(_PRIO, F.lit(-1)))",
     ]
-    if cfg.apply_as_truncates and cfg.scd_type == 1:
-        # engine _apply_truncates semantics over the event-sourced log:
-        # everything strictly older (by sequence) than the newest truncate
-        # event is discarded; truncate events themselves are never emitted
-        lines += [
-            f"    _ev = _ev.withColumn('__trunc', F.coalesce(F.expr({cfg.apply_as_truncates!r}), F.lit(False)))",
-            f"    _tm = _ev.filter('__trunc').agg(F.max({seq_struct}).alias('__t'))",
-            "    _ev = _ev.crossJoin(F.broadcast(_tm))",
-            f"    _ev = _ev.filter((F.col('__t').isNull() | ({seq_struct} >= F.col('__t')))",
-            "                     & ~F.col('__trunc')).drop('__t', '__trunc')",
-        ]
-    lines += [
-        f"    _ev = _ev.drop(*{drop_cols!r})",
-    ]
-    if multi_seq:
-        # ordering key = struct of the sequence columns (engine cdc.py:173)
-        lines.append(
-            f"    _ev = _ev.withColumn('__seq', F.struct(*{list(cfg.sequence_cols)!r}))"
-        )
-    lines += [
-        "    # dedup order mirrors the engine's _dedup_key_seq: newest append,",
-        "    # then delete flag, then a TOTAL order over value columns so",
-        "    # ambiguous same-(key, seq) conflicts resolve identically anywhere",
-        "    # (types containing maps are excluded: not orderable)",
-        f"    _vcols = sorted(c for c, _t in _ev.dtypes",
-        f"                    if c not in {keys!r} and c not in ({seq!r}, '__del', '__prio')"
-        + " and 'map<' not in _t"
-        + (f" and c not in {list(cfg.sequence_cols)!r})" if multi_seq else ")"),
-        f"    _w = (Window.partitionBy(*{keys!r}, {seq!r})",
-        "          .orderBy(F.col('__prio').desc(), F.col('__del').desc(),",
-        "                   *[F.col(c).desc_nulls_last() for c in _vcols]))",
-        "    _ev = (_ev.withColumn('__rn', F.row_number().over(_w))",
-        "           .filter('__rn = 1').drop('__rn', '__prio'))",
-    ]
-    if cfg.ignore_null_updates:
-        # null columns in an upsert inherit the previous value; deletes keep
-        # theirs (engine cdc.py:_forward_fill_nulls)
-        lines += [
-            f"    _wf = (Window.partitionBy(*{keys!r}).orderBy({seq!r})",
-            "           .rowsBetween(Window.unboundedPreceding, Window.currentRow))",
-            f"    _fill = [c for c in _ev.columns if c not in {keys!r} and c not in ({seq!r}, '__del')"
-            + (f" and c not in {list(cfg.sequence_cols)!r}]" if multi_seq else "]"),
-            "    for _c in _fill:",
-            "        _ev = _ev.withColumn(_c, F.when(F.col('__del'), F.col(_c))",
-            "                             .otherwise(F.last(_c, ignorenulls=True).over(_wf)))",
-        ]
-    lines += _emit_scd_rebuild(
-        keys, seq, cfg.scd_type, track_list, track_except,
-        seq_cols=list(cfg.sequence_cols) if multi_seq else None,
-    )
-    if multi_seq:
-        lines.append("    _out = _out.drop('__seq')")
+    lines += _emit_scd_apply(cfg)
     lines += [
         f"    _out.write.mode('overwrite').parquet(_snap_path_{ident})",
         f"    written[{name!r}] = spark.read.parquet(_snap_path_{ident})",
@@ -459,62 +457,12 @@ def _emit_cdc_merge(a: Action) -> list[str]:
     return lines
 
 
-def _emit_scd_rebuild(
-    keys: list[str], seq: str, scd_type: int,
-    track_list=None, track_except=None, seq_cols=None,
-) -> list[str]:
-    """Lines turning `_ev` (one row per (key, seq), bool `__del`) into `_out`
-    — the standalone distillation of operators/cdc.py:163-280. `seq_cols`
-    lists every sequence-derived column to exclude from history tracking
-    (the raw columns plus a `__seq` struct for multi-column sequence_by)."""
-    seq_excl = list(seq_cols or []) + [seq]
-    lines = [f"    _wk = Window.partitionBy(*{keys!r}).orderBy({seq!r})"]
-    if scd_type == 1:
-        lines += [
-            f"    _wd = Window.partitionBy(*{keys!r}).orderBy(F.col({seq!r}).desc())",
-            "    _last = _ev.withColumn('__rn', F.row_number().over(_wd)).filter('__rn = 1')",
-            "    _out = _last.filter('NOT __del').drop('__rn', '__del')",
-        ]
-        return lines
-    if track_list:
-        tracked_expr = f"[c for c in {list(track_list)!r} if c in _ev.columns]"
-    elif track_except:
-        tracked_expr = (
-            f"[c for c in _ev.columns if c not in {keys!r} and c not in {seq_excl!r} "
-            f"and c != '__del' and c not in {list(track_except)!r}]"
-        )
-    else:
-        tracked_expr = (
-            f"[c for c in _ev.columns if c not in {keys!r} and c not in {seq_excl!r} and c != '__del']"
-        )
-    lines += [
-        f"    _tracked = {tracked_expr}",
-        "    _t = F.struct(*[F.col(c) for c in _tracked]) if _tracked else F.lit(0)",
-        "    _chg = ((F.row_number().over(_wk) == 1)",
-        "            | (~_t.eqNullSafe(F.lag(_t).over(_wk)))",
-        "            | F.col('__del')",
-        "            | F.coalesce(F.lag(F.col('__del')).over(_wk), F.lit(False)))",
-        "    _r = (_ev.withColumn('__chg', _chg.cast('int'))",
-        "          .withColumn('__run', F.sum('__chg').over(",
-        "              _wk.rowsBetween(Window.unboundedPreceding, Window.currentRow))))",
-        f"    _vals = [c for c in _r.columns if c not in {keys!r} and c not in ('__chg', '__run')]",
-        f"    _agg = (_r.groupBy(*{keys!r}, '__run')",
-        f"            .agg(F.min({seq!r}).alias('__start_at'),",
-        f"                 F.max_by(F.struct(*[F.col(c) for c in _vals]), F.col({seq!r})).alias('__v')))",
-        f"    _agg = _agg.select(*{keys!r}, '__run', '__start_at',",
-        "                       *[F.col('__v').getField(c).alias(c) for c in _vals])",
-        f"    _wv = Window.partitionBy(*{keys!r}).orderBy('__start_at')",
-        "    _agg = _agg.withColumn('__end_at', F.lead('__start_at').over(_wv))",
-        "    _out = _agg.filter('NOT __del').drop('__del', '__run')",
-    ]
-    return lines
-
-
 def _emit_snapshot_cdc(a: Action) -> list[str]:
     """snapshot_cdc streaming-table write: pull (df, version) snapshots,
     accumulate them in an append-only snapshots table, derive upsert/delete
-    events from presence transitions, SCD-rebuild (standalone distillation of
-    operators/cdc.py:417-458; reference emits
+    events from presence transitions, then apply them with the engine's
+    functions under the engine's own config mapping
+    (operators/cdc.py:snapshot_cdc_config; reference emits
     create_auto_cdc_from_snapshot_flow, streaming_table.py.j2:114).
 
     Delete derivation: a key absent from snapshot v but present in the
@@ -589,7 +537,6 @@ def _emit_snapshot_cdc(a: Action) -> list[str]:
             f"     .write.mode('append').parquet(_ev_path_{ident}))",
             f"    _record_version_{ident}(0)",
         ]
-    seq = "__snapshot_version"
     lines += [
         "    try:",
         f"        _snaps = spark.read.parquet(_ev_path_{ident})",
@@ -600,9 +547,6 @@ def _emit_snapshot_cdc(a: Action) -> list[str]:
         "            raise",
         "        _snaps = (spark.createDataFrame([], _snap_schema_" + ident + ")",
         "                  .withColumn('__snapshot_version', F.lit(None).cast('long')))",
-        "    # one row per (key, version): re-sent unchanged rows are idempotent",
-        f"    _wsv = Window.partitionBy(*{keys!r}, '__snapshot_version').orderBy(F.lit(1))",
-        "    _snaps = _snaps.withColumn('__rn', F.row_number().over(_wsv)).filter('__rn = 1').drop('__rn')",
         "    # presence grid -> delete events at present->absent transitions;",
         "    # the version axis is the RECORDED list (includes empty snapshots)",
         f"    _seen_vs = _json.load(open(_vfile_{ident})) if os.path.exists(_vfile_{ident}) else []",
@@ -618,16 +562,18 @@ def _emit_snapshot_cdc(a: Action) -> list[str]:
         "    _dels = (_grid.withColumn('__was', F.coalesce(F.lag('__p').over(_wg), F.lit(False)))",
         "             .filter('NOT __p AND __was')",
         f"             .select(*{keys!r}, '__snapshot_version'))",
-        f"    _data_cols = [c for c in _snaps.columns if c not in {keys!r} and c != '__snapshot_version']",
+        f"    _vcols = [c for c in _snaps.columns if c not in {keys!r} and c != '__snapshot_version']",
         "    _dels = _dels.select('*', *[F.lit(None).cast(_snaps.schema[c].dataType).alias(c)",
-        "                                for c in _data_cols])",
-        "    _ev = (_snaps.withColumn('__del', F.lit(False))",
-        "           .unionByName(_dels.withColumn('__del', F.lit(True))))",
+        "                                for c in _vcols])",
+        "    # one batch: duplicate (key, version) rows resolve by the engine's",
+        "    # dedup order, as they do within one snapshot there",
+        "    _ev = (_snaps.withColumn('__deleted', F.lit(False))",
+        "           .unionByName(_dels.withColumn('__deleted', F.lit(True)))",
+        "           .withColumn(_PRIO, F.lit(0)))",
     ]
-    lines += _emit_scd_rebuild(
-        keys, seq, cfg.stored_as_scd_type,
-        cfg.track_history_column_list, cfg.track_history_except_column_list,
-    )
+    from lakehouse_plumber_spark.operators.cdc import snapshot_cdc_config
+
+    lines += _emit_scd_apply(snapshot_cdc_config(cfg))
     lines += [
         "    if _out.isEmpty():",
         "        # a zero-row multi-task write emits no files; one task keeps",
@@ -1437,6 +1383,14 @@ def compile_flowgroup(fg: FlowGroup, base_dir: str | None = None) -> str:
     wtoken = _compile_written_views.set(_views_feeding_writes(fg.actions))
     try:
         out = [_HEADER.format(pipeline=fg.pipeline, flowgroup=fg.flowgroup)]
+        if any(
+            a.write_target is not None
+            and a.write_target.type.value == "streaming_table"
+            and a.write_target.mode in ("cdc", "snapshot_cdc")
+            for a in fg.actions
+        ):
+            out.append(_scd_prelude())
+        out.append(_BUILD)
         if any(
             a.write_target is not None
             and a.write_target.cluster_by_auto

@@ -188,20 +188,6 @@ def top_ngram_fraction_expr(text_col: str = "text", n: int = REP_TOP_N) -> str:
     )
 
 
-def top_ngram_fraction(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    n: int = REP_TOP_N, out: str = "top2_frac",
-) -> DataFrame:
-    """Most-frequent-n-gram fraction per document — one narrow projection
-    over the scan (see `top_ngram_fraction_expr` for why no shuffle is
-    needed)."""
-    from lakehouse_plumber_spark.llm.dedup import spread_for_compute
-
-    return spread_for_compute(df, [id_col, text_col]).select(
-        F.col(id_col), F.expr(top_ngram_fraction_expr(text_col, n)).alias(out)
-    )
-
-
 def repetition_metrics(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per-document repetition scores used by training-data quality filters:
 

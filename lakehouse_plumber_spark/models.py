@@ -32,16 +32,6 @@ class ActionType(str, Enum):
     TEST = "test"
 
 
-class LoadSourceType(str, Enum):
-    CLOUDFILES = "cloudfiles"
-    DELTA = "delta"
-    SQL = "sql"
-    PYTHON = "python"
-    JDBC = "jdbc"
-    KAFKA = "kafka"
-    CUSTOM_DATASOURCE = "custom_datasource"
-
-
 class TransformType(str, Enum):
     SQL = "sql"
     PYTHON = "python"

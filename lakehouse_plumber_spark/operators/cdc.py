@@ -64,6 +64,18 @@ import os as _os
 N_BUCKETS_ENV = _os.environ.get("LHP_CDC_BUCKETS")
 ROWS_PER_BUCKET = int(_os.environ.get("LHP_CDC_ROWS_PER_BUCKET", "2000000"))
 
+# The store-free bodies compiled CDC and snapshot-CDC scripts carry:
+# codegen copies these constants and the functions' source verbatim, so the
+# functions may use only each other, these constants, F, Window, DataFrame
+# and attributes of `cfg`.
+STANDALONE_CONSTANTS = (
+    "START_COL", "END_COL", "_DEL", "_TRUNC", "_PRIO", "TOMBSTONE", "EVENT_DEL", "BUCKET_COL",
+)
+STANDALONE_FUNCTIONS = (
+    "_seq_cols", "_data_columns", "_tracked_columns", "_normalize_events", "_prepare_events",
+    "_dedup_key_seq", "_apply_truncates", "_forward_fill_nulls", "_rebuild_scd2", "_rebuild_scd1",
+)
+
 
 def _creation_buckets(first_batch_rows: int) -> int:
     from lakehouse_plumber_spark.tables import adaptive_bucket_count
@@ -104,7 +116,7 @@ def _tracked_columns(data_cols: list[str], cfg: CDCConfig) -> list[str]:
 
 
 def _normalize_events(batch: DataFrame, cfg: CDCConfig) -> DataFrame:
-    """Tag delete/truncate events and drop exact (key, seq) duplicates."""
+    """Tag delete and truncate events."""
     df = batch
     df = df.withColumn(
         _DEL,
@@ -115,6 +127,14 @@ def _normalize_events(batch: DataFrame, cfg: CDCConfig) -> DataFrame:
         F.coalesce(F.expr(cfg.apply_as_truncates), F.lit(False)) if cfg.apply_as_truncates else F.lit(False),
     )
     return df
+
+
+def _prepare_events(batch: DataFrame, cfg: CDCConfig, data_cols: list[str]) -> DataFrame:
+    """Tagged events (the caller sets _PRIO) projected to the stored columns
+    plus _DEL and _PRIO, with SCD1 truncates applied."""
+    events = _normalize_events(batch, cfg)
+    events = _apply_truncates(events, cfg) if cfg.scd_type == 1 else events.drop(_TRUNC)
+    return events.select(*data_cols, _DEL, _PRIO)
 
 
 def _dedup_key_seq(events: DataFrame, cfg: CDCConfig) -> DataFrame:
@@ -350,16 +370,12 @@ def apply_changes(
         # against an existing target flow through the normal path: the
         # affected-key set is empty and the merge is a no-op.)
         empty = batch.sparkSession.createDataFrame([], batch.schema)
-        empty = _normalize_events(empty, cfg).withColumn(_PRIO, F.lit(1))
-        empty = empty.select(*data_cols, _DEL, _PRIO)
+        empty = _prepare_events(empty.withColumn(_PRIO, F.lit(1)), cfg, data_cols)
         out = _rebuild_scd1(empty, cfg, data_cols) if cfg.scd_type == 1 \
             else _rebuild_scd2(empty, cfg, data_cols)
         store.overwrite(target, out, partition_columns=partition_columns)
         return
-    events = _normalize_events(batch.select(*[c for c in batch.columns]), cfg)
-    events = events.withColumn(_PRIO, F.lit(1))
-    events = _apply_truncates(events, cfg) if cfg.scd_type == 1 else events.drop(_TRUNC)
-    events = events.select(*data_cols, _DEL, _PRIO)
+    events = _prepare_events(batch.withColumn(_PRIO, F.lit(1)), cfg, data_cols)
 
     # apply_as_truncates clears ALL state older than the newest truncate event,
     # including keys absent from this batch (DLT truncate semantics)
@@ -486,6 +502,24 @@ def apply_changes(
             cached.unpersist()
 
 
+def snapshot_cdc_config(cfg: SnapshotCDCConfig) -> CDCConfig:
+    """The CDC config a snapshot flow applies its derived events with: each
+    row is sequenced by `__snapshot_version`, and `__deleted` flags the
+    delete events of keys absent from a snapshot."""
+    track_except = None
+    if cfg.track_history_except_column_list:
+        track_except = list(cfg.track_history_except_column_list) + ["__snapshot_version"]
+    return CDCConfig(
+        keys=cfg.keys,
+        sequence_by="__snapshot_version",
+        scd_type=cfg.stored_as_scd_type,
+        apply_as_deletes="__deleted = true",
+        except_column_list=["__deleted"],
+        track_history_column_list=cfg.track_history_column_list,
+        track_history_except_column_list=track_except,
+    )
+
+
 def apply_snapshot(
     store: ParquetTableStore,
     target: str,
@@ -500,18 +534,7 @@ def apply_snapshot(
     the full snapshot is safe and idempotent). Delete events: keys open in the
     target but absent from the snapshot.
     """
-    track_except = None
-    if cfg.track_history_except_column_list:
-        track_except = list(cfg.track_history_except_column_list) + ["__snapshot_version"]
-    cdc = CDCConfig(
-        keys=cfg.keys,
-        sequence_by="__snapshot_version",
-        scd_type=cfg.stored_as_scd_type,
-        apply_as_deletes="__deleted = true",
-        except_column_list=["__deleted"],
-        track_history_column_list=cfg.track_history_column_list,
-        track_history_except_column_list=track_except,
-    )
+    cdc = snapshot_cdc_config(cfg)
     snap = snapshot.withColumn("__snapshot_version", F.lit(version))
     events = snap.withColumn("__deleted", F.lit(False))
     if store.exists(target):

@@ -78,20 +78,6 @@ def non_mergeable_aggs(aggs: dict[str, str]) -> dict[str, str]:
     return {a: s for a, s in aggs.items() if not _match_mergeable(s)}
 
 
-def _partial_cols(parsed: list[tuple[str, str, str]]) -> list[str]:
-    cols = []
-    for alias, fn, _ in parsed:
-        if fn in ("sum", "avg"):
-            cols.append(f"__p_{alias}_sum")
-        if fn in ("count", "avg"):
-            cols.append(f"__p_{alias}_cnt")
-        if fn == "min":
-            cols.append(f"__p_{alias}_min")
-        if fn == "max":
-            cols.append(f"__p_{alias}_max")
-    return cols
-
-
 def _stabilize_partials(partials: DataFrame) -> DataFrame:
     """Pin decimal partial columns to max precision (38, same scale).
 

@@ -246,11 +246,7 @@ def _quarantine_merge_batch(
     ctx.store.append(dlq_table, new_rows, part_cols)
     if created:
         ctx.store.set_meta(dlq_table, "dlq_buckets", n_buckets)
-    ctx.store.log_changes(
-        dlq_table,
-        new_rows.drop(DLQ_BUCKET_COL) if part_cols else new_rows,
-        "insert",
-    )
+    ctx.store.log_changes(dlq_table, new_rows.drop(DLQ_BUCKET_COL), "insert")
     ctx.log(action.name, "quarantined", dlq_table=dlq_table)
     return clean
 

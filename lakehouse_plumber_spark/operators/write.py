@@ -641,7 +641,11 @@ def write_sink(ctx: BuildContext, action: Action) -> Optional[DataFrame]:
             for k, v in (wt.options or {}).items():
                 writer = writer.option(k, str(v))
             if df.isStreaming:
-                q = writer.option("checkpointLocation", ctx.checkpoint("sink", action.name)).start()
+                q = (
+                    writer.option("checkpointLocation", ctx.checkpoint("sink", action.name))
+                    .trigger(availableNow=True)
+                    .start()
+                )
                 q.awaitTermination()
             else:
                 writer.save()

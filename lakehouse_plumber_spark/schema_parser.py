@@ -77,23 +77,6 @@ def schema_from_file(path: str) -> T.StructType:
         return schema_from_dict(yaml.safe_load(f))
 
 
-def schema_to_ddl_hints(schema: T.StructType) -> str:
-    """Render `name TYPE [NOT NULL], ...` schema-hints DDL (reference schema_parser.py:53-92).
-
-    Identifiers are backtick-quoted when not plain identifiers.
-    """
-    parts = []
-    for f in schema.fields:
-        name = f.name
-        if not name.replace("_", "").isalnum() or name[0].isdigit():
-            name = f"`{name}`"
-        s = f"{name} {f.dataType.simpleString().upper()}"
-        if not f.nullable:
-            s += " NOT NULL"
-        parts.append(s)
-    return ", ".join(parts)
-
-
 def coerce_schema(spec: Any) -> T.StructType:
     """Accept a StructType, YAML dict, DDL string, or file path."""
     if isinstance(spec, T.StructType):

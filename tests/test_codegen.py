@@ -659,6 +659,139 @@ def test_compiled_cdc_truncate_matches_engine(spark, runner, tmp_path):
     assert {r["id"] for r in rows} == {3}
 
 
+def _cdc_scd_spec(scd):
+    return {
+        "pipeline": "p", "flowgroup": f"cdcplan{scd}",
+        "actions": [
+            {"name": "ld", "type": "load", "target": "v_ev",
+             "source": {"type": "sql", "sql": (
+                 "SELECT * FROM (VALUES (1, 'a', 1, 'U'), (1, 'b', 2, 'U'), "
+                 "(2, 'x', 1, 'D')) AS t(id, v, seq, op)")}},
+            {"name": "wr", "type": "write", "source": "v_ev",
+             "write_target": {"type": "streaming_table", "database": "m.pl",
+                              "table": f"t{scd}", "mode": "cdc",
+                              "cdc_config": {"keys": ["id"], "sequence_by": "seq",
+                                             "scd_type": scd,
+                                             "apply_as_deletes": "op = 'D'",
+                                             "except_column_list": ["op"]}}},
+        ],
+    }
+
+
+def test_compiled_cdc_carries_engine_functions_verbatim():
+    """Compiled CDC scripts run the engine's own SCD functions, copied at
+    compile time — not an engine import and not a second copy of the logic."""
+    import inspect
+
+    from lakehouse_plumber_spark.operators import cdc
+
+    src = compile_flowgroup(load_flowgroup(_cdc_scd_spec(2)))
+    assert inspect.getsource(cdc._dedup_key_seq) in src
+    assert inspect.getsource(cdc._rebuild_scd2) in src
+    assert "import lakehouse_plumber_spark" not in src
+    # the helpers stay out of scripts without a CDC write
+    assert "_dedup_key_seq" not in compile_flowgroup(load_flowgroup(FG_SPEC))
+
+
+@pytest.mark.parametrize("scd", [1, 2])
+def test_compiled_scd_rebuild_shuffles_once_on_keys(spark, tmp_path, monkeypatch, scd):
+    """The compiled SCD rebuild plans the engine's single exchange, keyed on
+    the CDC keys only: dedup, forward fill and the rebuild windows all share
+    it."""
+    import re
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = {}
+    parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        plans[path] = self._df._jdf.queryExecution().executedPlan().toString()
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    src = compile_flowgroup(load_flowgroup(_cdc_scd_spec(scd)))
+    ns: dict = {}
+    exec(compile(src, "<generated>", "exec"), ns)
+    written = ns["build"](spark, str(tmp_path))
+    plan = plans[str(tmp_path / "m" / "pl" / f"t{scd}")]
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert re.search(r"Exchange hashpartitioning\(id#\d+, \d+\)", plan)
+    got = sorted(r.v for r in written[f"m.pl.t{scd}"].collect())
+    assert got == (["b"] if scd == 1 else ["a", "b"])  # id 2 deleted
+
+
+def test_compiled_snapshot_duplicate_key_resolves_like_engine(spark, runner, tmp_path):
+    """Two rows for one key within a snapshot: the engine keeps one by its
+    total dedup order ('z' over 'a'); the compiled script must keep the same
+    row, whatever the input order."""
+    spec = {
+        "pipeline": "p", "flowgroup": "snapdup",
+        "actions": [
+            {"name": "ld", "type": "load", "target": "v_snap",
+             "source": {"type": "sql", "sql": (
+                 "SELECT * FROM (VALUES (1, 'z'), (1, 'a'), (2, 'b')) AS t(id, v)")}},
+            {"name": "wr", "type": "write",
+             "write_target": {"type": "streaming_table", "database": "m.sd",
+                              "table": "t", "mode": "snapshot_cdc",
+                              "snapshot_cdc_config": {"keys": ["id"],
+                                                      "stored_as_scd_type": 1,
+                                                      "source": "v_snap"}}},
+        ],
+    }
+    runner.run(load_flowgroup(spec))
+    engine = sorted(
+        tuple(r) for r in runner.store.read("m.sd.t")
+        .filter("NOT __tombstone").select("id", "v").collect()
+    )
+    src = compile_flowgroup(load_flowgroup(spec))
+    ns: dict = {}
+    exec(compile(src, "<generated>", "exec"), ns)
+    written = ns["build"](spark, str(tmp_path / "gen"))
+    gen = sorted(tuple(r) for r in written["m.sd.t"].select("id", "v").collect())
+    assert engine == gen == [(1, "z"), (2, "b")]
+
+
+def test_streaming_kafka_sink_sets_available_now_trigger(spark, runner, tmp_path, monkeypatch):
+    """A streaming Kafka sink must run as a bounded availableNow query, like
+    every other streaming write: without the trigger, awaitTermination on a
+    streaming source never returns. The connector is not needed: start() is
+    intercepted."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    land = tmp_path / "landing"
+    spark.createDataFrame([("k", "v")], "key string, value string").write.json(str(land))
+    calls = {}
+    trigger = DataStreamWriter.trigger
+
+    def record_trigger(self, **kwargs):
+        calls["trigger"] = kwargs
+        return trigger(self, **kwargs)
+
+    class _Done:
+        def awaitTermination(self, timeout=None):
+            return True
+
+    def fake_start(self, *args, **kwargs):
+        calls["started"] = True
+        return _Done()
+
+    monkeypatch.setattr(DataStreamWriter, "trigger", record_trigger)
+    monkeypatch.setattr(DataStreamWriter, "start", fake_start)
+    runner.run(load_flowgroup({
+        "pipeline": "p", "flowgroup": "kafka_stream",
+        "actions": [
+            {"name": "ld", "type": "load", "target": "v_raw", "readMode": "stream",
+             "source": {"type": "cloudfiles", "path": str(land), "format": "json",
+                        "schema": "key STRING, value STRING"}},
+            {"name": "snk", "type": "write", "source": "v_raw",
+             "write_target": {"type": "sink", "sink_type": "kafka", "topic": "t",
+                              "bootstrap_servers": "localhost:9092"}},
+        ],
+    }))
+    assert calls == {"trigger": {"availableNow": True}, "started": True}
+
+
 def test_dq_check_registered_for_mv_sql_consumer(spark, tmp_path):
     """A view consumed ONLY through a materialized view's write_target.sql is
     real data flow: its fail-expectations must register and fire."""

@@ -110,8 +110,9 @@ cdc_events_st = st.lists(
           suppress_health_check=[HealthCheck.function_scoped_fixture,
                                  HealthCheck.too_slow])
 def test_compiled_cdc_scd2_matches_engine_on_random_streams(spark, tmp_path_factory, batches):
-    """Two independent SCD2 implementations — the engine's bucket-merged
-    event log and the generated standalone script's window rebuild — must
+    """One SCD2 rebuild over two storage layouts — the engine's
+    bucket-merged table with its hidden event log, and the generated
+    script's append-only raw-events table rebuilt whole on every run — must
     produce the same visible history for ANY batch split of any event
     stream (dedup ties, delete/reinsert, late arrivals included)."""
     from lakehouse_plumber_spark.codegen import compile_flowgroup
@@ -165,8 +166,9 @@ def test_compiled_cdc_scd2_matches_engine_on_random_streams(spark, tmp_path_fact
           suppress_health_check=[HealthCheck.function_scoped_fixture,
                                  HealthCheck.too_slow])
 def test_compiled_cdc_scd1_matches_engine_on_random_streams(spark, tmp_path_factory, batches):
-    """SCD1 variant of the parity property: latest visible row per key must
-    agree between the engine and the generated script for any stream."""
+    """SCD1 variant of the parity property: the shared SCD1 rebuild over
+    the engine's merged state and over the generated script's raw-events
+    table must agree on the latest visible row per key for any stream."""
     from lakehouse_plumber_spark.codegen import compile_flowgroup
     from lakehouse_plumber_spark.parsers import load_flowgroup
     from lakehouse_plumber_spark.runner import PipelineRunner
