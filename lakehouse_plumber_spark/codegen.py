@@ -21,6 +21,14 @@ Covered surface:
   sinks (delta path/table, kafka simulate + real writer, foreachbatch
   handler, custom Python Data Source)
 
+Every streaming write in a generated script is drained by one emitted
+block (`_emit_available_now`), the counterpart of the engine's
+`BuildContext.run_available_now`: the flow's writer gets its own checkpoint
+(`_ckpt(action)`) and `trigger(availableNow=True)`, is started, and is
+waited for, so `build()` returns only once the input present at start has
+been processed. A batch input takes the plain write or one `body(df, 0)`
+call instead.
+
 Incremental MVs compile as accumulate-then-recompute (same table contents
 by the IMV contract; incremental COST stays engine-only). CDC compiles
 the full option surface: multi-column sequence_by (struct ordering key),
@@ -305,6 +313,19 @@ def _emit_callable_source(fn) -> list[str]:
     return ["    " + line for line in src.rstrip().splitlines()]
 
 
+def _emit_available_now(head: str, ckpt: str) -> list[str]:
+    """Lines that drain one streaming writer as a bounded availableNow query
+    with its own checkpoint and wait for it: the generated counterpart of
+    BuildContext.run_available_now. `head` is a DataStreamWriter expression
+    with its sink set; `ckpt` is the checkpoint path expression."""
+    return [
+        f"        _q = ({head}",
+        f"              .option('checkpointLocation', {ckpt})",
+        "              .trigger(availableNow=True).start())",
+        "        _q.awaitTermination()",
+    ]
+
+
 def _register(target) -> list[str]:
     return [
         f"    views[{target!r}] = df",
@@ -434,10 +455,7 @@ def _emit_cdc_merge(a: Action) -> list[str]:
         f"        (batch_df.withColumn('__prio', F.lit(_prio_{ident}[0]))",
         f"         .write.mode('append').parquet(_ev_path_{ident}))",
         "    if df.isStreaming:",
-        f"        _q = (df.writeStream.foreachBatch(_append_events_{ident})",
-        f"              .option('checkpointLocation', _ckpt({a.name!r}))",
-        "              .trigger(availableNow=True).start())",
-        "        _q.awaitTermination()",
+        *_emit_available_now(f"df.writeStream.foreachBatch(_append_events_{ident})", f"_ckpt({a.name!r})"),
         "    else:",
         f"        _append_events_{ident}(df, 0)",
         "    # merge body: rebuild the visible snapshot from ALL raw events —",
@@ -717,10 +735,7 @@ def _emit_quarantine(a: Action) -> list[str]:
         f"            os.replace(_em_{ident} + '.tmp', _em_{ident})",
         f"        _schema_{ident} = df.schema",
         f"        _cols_{ident} = list(df.columns)",
-        f"        _q = (df.writeStream.foreachBatch(_one_batch_{ident})",
-        f"              .option('checkpointLocation', _ckpt_{ident})",
-        "              .trigger(availableNow=True).start())",
-        "        _q.awaitTermination()",
+        *_emit_available_now(f"df.writeStream.foreachBatch(_one_batch_{ident})", f"_ckpt_{ident}"),
         f"        _rec = _q_consume_fixes_{ident}(_schema_{ident}, _cols_{ident})",
         "        if _rec is not None:",
         f"            _rec.write.mode('append').parquet(_stage_path_{ident})",
@@ -769,10 +784,10 @@ def _emit_incremental_mv(a: Action) -> list[str]:
         f"    _stage_{ident} = os.path.join(out_dir, '_imv_staging', {name.replace('.', '/')!r})",
         f"    _mv_path_{ident} = _tbl_path({name!r})",
         "    if df.isStreaming:",
-        f"        _q = (df.writeStream.foreachBatch(lambda b, _e: b.write.mode('append').parquet(_stage_{ident}))",
-        f"              .option('checkpointLocation', _ckpt({a.name!r}))",
-        "              .trigger(availableNow=True).start())",
-        "        _q.awaitTermination()",
+        *_emit_available_now(
+            f"df.writeStream.foreachBatch(lambda b, _e: b.write.mode('append').parquet(_stage_{ident}))",
+            f"_ckpt({a.name!r})",
+        ),
         "    else:",
         f"        df.write.mode('append').parquet(_stage_{ident})",
         f"    _all = spark.read.parquet(_stage_{ident})",
@@ -795,10 +810,10 @@ def _emit_sink(a: Action) -> list[str]:
         lines += [
             f"    _sink_path_{ident} = {target}",
             "    if df.isStreaming:",
-            f"        _q = (df.writeStream.foreachBatch(lambda b, _e: b.write.mode('append').parquet(_sink_path_{ident}))",
-            f"              .option('checkpointLocation', _ckpt({a.name!r}))",
-            "              .trigger(availableNow=True).start())",
-            "        _q.awaitTermination()",
+            *_emit_available_now(
+                f"df.writeStream.foreachBatch(lambda b, _e: b.write.mode('append').parquet(_sink_path_{ident}))",
+                f"_ckpt({a.name!r})",
+            ),
             "    else:",
             f"        df.write.mode('append').parquet(_sink_path_{ident})",
         ]
@@ -814,10 +829,10 @@ def _emit_sink(a: Action) -> list[str]:
                 f"    _out = df.select(*[c for c in ('key', 'value') if c in df.columns], F.lit({wt.topic!r}).alias('topic'))",
                 f"    _sim_{ident} = os.path.join(out_dir, {str(sim)!r})",
                 "    if _out.isStreaming:",
-                f"        _q = (_out.writeStream.format('parquet').option('path', _sim_{ident})",
-                f"              .option('checkpointLocation', _ckpt({a.name!r}))",
-                "              .trigger(availableNow=True).start())",
-                "        _q.awaitTermination()",
+                *_emit_available_now(
+                    f"_out.writeStream.format('parquet').option('path', _sim_{ident})",
+                    f"_ckpt({a.name!r})",
+                ),
                 "    else:",
                 f"        _out.write.mode('append').parquet(_sim_{ident})",
             ]
@@ -830,8 +845,7 @@ def _emit_sink(a: Action) -> list[str]:
                 f"    for _k, _v in {opts!r}.items():",
                 "        _w = _w.option(_k, _v)",
                 "    if df.isStreaming:",
-                f"        _q = _w.option('checkpointLocation', _ckpt({a.name!r})).trigger(availableNow=True).start()",
-                "        _q.awaitTermination()",
+                *_emit_available_now("_w", f"_ckpt({a.name!r})"),
                 "    else:",
                 "        _w.save()",
             ]
@@ -851,10 +865,7 @@ def _emit_sink(a: Action) -> list[str]:
             raise NotImplementedError(f"foreachbatch sink {a.name!r}: no handler")
         lines += [
             "    if df.isStreaming:",
-            f"        _q = (df.writeStream.foreachBatch({fn_expr})",
-            f"              .option('checkpointLocation', _ckpt({a.name!r}))",
-            "              .trigger(availableNow=True).start())",
-            "        _q.awaitTermination()",
+            *_emit_available_now(f"df.writeStream.foreachBatch({fn_expr})", f"_ckpt({a.name!r})"),
             "    else:",
             f"        {fn_expr}(df, 0)",
         ]
@@ -871,8 +882,7 @@ def _emit_sink(a: Action) -> list[str]:
             f"    for _k, _v in {opts!r}.items():",
             "        _w = _w.option(_k, _v)",
             "    if df.isStreaming:",
-            f"        _q = _w.option('checkpointLocation', _ckpt({a.name!r})).trigger(availableNow=True).start()",
-            "        _q.awaitTermination()",
+            *_emit_available_now("_w", f"_ckpt({a.name!r})"),
             "    else:",
             "        _w.mode('append').save()",
         ]
@@ -1333,10 +1343,7 @@ def _compile_action(a: Action) -> list[str]:
                 "        # per-flow checkpoint: each append flow into the fan-in",
                 "        # target tracks its own source offsets (reference",
                 "        # streaming_table.py.j2:128-244 emits one append_flow each)",
-                f"        _q = (df.writeStream.foreachBatch(_append_flow_{ident})",
-                f"              .option('checkpointLocation', _ckpt({a.name!r}))",
-                "              .trigger(availableNow=True).start())",
-                "        _q.awaitTermination()",
+                *_emit_available_now(f"df.writeStream.foreachBatch(_append_flow_{ident})", f"_ckpt({a.name!r})"),
                 "    else:",
                 f"        _append_flow_{ident}(df, 0)",
             ]

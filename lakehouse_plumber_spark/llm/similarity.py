@@ -443,8 +443,8 @@ def ivfpq_search(
     # higher-order functions), and a small single-row-group parquet arrives
     # as ONE scan partition — serializing the whole encode onto one core.
     # Round-robin spread is a no-op when the input is already split (the
-    # 100 TB case).  Interleaved A/B at sf0.1 (scripts_ab_r15_ivfpq.py):
-    # 0.76x end-to-end, outputs bit-identical.
+    # 100 TB case).  Interleaved A/B at sf0.1 (OPTIMIZATION_r15.md, change
+    # #1): 0.76x end-to-end, outputs bit-identical.
     from lakehouse_plumber_spark.llm.dedup import spread_for_compute
 
     encoded = spread_for_compute(base).select(

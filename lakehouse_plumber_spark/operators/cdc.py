@@ -58,11 +58,8 @@ BUCKET_COL = "__kb"  # hidden key-hash bucket: CDC targets are stored
 # partitioned by it so merges touch only affected partitions. The count is
 # picked ADAPTIVELY from the first batch's size at table creation
 # (tables.adaptive_bucket_count) and persisted per table — pruning is only
-# sound against the stored layout. LHP_CDC_BUCKETS forces a fixed count.
-import os as _os
-
-N_BUCKETS_ENV = _os.environ.get("LHP_CDC_BUCKETS")
-ROWS_PER_BUCKET = int(_os.environ.get("LHP_CDC_ROWS_PER_BUCKET", "2000000"))
+# sound against the stored layout.
+ROWS_PER_BUCKET = 2_000_000
 
 # The store-free bodies compiled CDC and snapshot-CDC scripts carry:
 # codegen copies these constants and the functions' source verbatim, so the
@@ -80,8 +77,6 @@ STANDALONE_FUNCTIONS = (
 def _creation_buckets(first_batch_rows: int) -> int:
     from lakehouse_plumber_spark.tables import adaptive_bucket_count
 
-    if N_BUCKETS_ENV:
-        return int(N_BUCKETS_ENV)
     return adaptive_bucket_count(first_batch_rows, rows_per_bucket=ROWS_PER_BUCKET)
 
 

@@ -40,19 +40,15 @@ _DISTINCT = re.compile(r"^\s*distinct\b", re.IGNORECASE)
 def _match_mergeable(spec: str):
     m = _AGG.match(spec)
     return None if m is None or _DISTINCT.match(m.group(2)) else m
+
+
 BUCKET_COL = "__gb"
-
-import os as _os
-
-AGG_BUCKETS_ENV = _os.environ.get("LHP_AGG_BUCKETS")  # forces a fixed count
-AGG_GROUPS_PER_BUCKET = int(_os.environ.get("LHP_AGG_GROUPS_PER_BUCKET", "1000000"))
+AGG_GROUPS_PER_BUCKET = 1_000_000
 
 
 def _creation_buckets(first_batch_groups: int) -> int:
     from lakehouse_plumber_spark.tables import adaptive_bucket_count
 
-    if AGG_BUCKETS_ENV:
-        return int(AGG_BUCKETS_ENV)
     # state rows = distinct groups, so groups (not input rows) drive sizing
     return adaptive_bucket_count(first_batch_groups, rows_per_bucket=AGG_GROUPS_PER_BUCKET)
 

@@ -27,8 +27,6 @@ engine's store:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -39,16 +37,13 @@ from lakehouse_plumber_spark.expectations import Expectation, combined_predicate
 from lakehouse_plumber_spark.models import Action
 
 DLQ_BUCKET_COL = "_dlq_bucket"
-DLQ_BUCKETS_ENV = os.environ.get("LHP_DLQ_BUCKETS")  # forces a fixed count
-DLQ_ROWS_PER_BUCKET = int(os.environ.get("LHP_DLQ_ROWS_PER_BUCKET", "2000000"))
+DLQ_ROWS_PER_BUCKET = 2_000_000
 RESCUE_COL = "_rescued_data"
 
 
 def _dlq_creation_buckets(first_batch_rows: int) -> int:
     from lakehouse_plumber_spark.tables import adaptive_bucket_count
 
-    if DLQ_BUCKETS_ENV:
-        return int(DLQ_BUCKETS_ENV)
     return adaptive_bucket_count(first_batch_rows, rows_per_bucket=DLQ_ROWS_PER_BUCKET)
 
 
@@ -129,32 +124,12 @@ def run_quarantine(
 
     if df.isStreaming:
         staging = f"{dlq_table}__clean"
-        ckpt = ctx.checkpoint("quarantine", action.name)
-
-        def _one_batch(bdf: DataFrame, epoch: int) -> None:
-            # foreachBatch is at-least-once and the staging append is not
-            # idempotent: skip epochs already applied, keyed by the checkpoint
-            # INCARNATION (same replay guard as the incremental-MV path in
-            # write.py — deleting the checkpoint dir mints a new incarnation,
-            # so a restart-from-scratch is never suppressed)
-            from lakehouse_plumber_spark.operators.write import _checkpoint_incarnation
-
-            key = f"last_epoch:{_checkpoint_incarnation(ckpt)}"
-            last = ctx.store.get_meta(staging, key)
-            if last is not None and epoch <= int(last):
-                ctx.log(action.name, "quarantine_epoch_skipped", epoch=epoch)
-                return
-            clean_b = _quarantine_merge_batch(ctx, action, bdf, exps)
-            ctx.store.append(staging, clean_b)
-            ctx.store.set_meta(staging, key, int(epoch))
-
-        q = (
-            df.writeStream.foreachBatch(_one_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        # the staging append is not idempotent: replayed epochs are skipped
+        ctx.for_each_batch(
+            df,
+            lambda b, _e: ctx.store.append(staging, _quarantine_merge_batch(ctx, action, b, exps)),
+            "quarantine", action.name, replay_guard=staging,
         )
-        q.awaitTermination()
         new_recycled = _consume_fixed_into_outbox(
             ctx, df.schema, exps, dlq_table, first_time_only=True
         )

@@ -531,15 +531,7 @@ def transform_temp_table(ctx: BuildContext, action: Action) -> DataFrame:
         df = ctx.resolve_view(str(action.source))
     name = f"_tmp.{ctx.flowgroup.flowgroup}.{action.target or action.name}"
     if df.isStreaming:
-        q = (
-            df.writeStream.foreachBatch(
-                lambda b, _eid: ctx.store.append(name, b)
-            )
-            .option("checkpointLocation", ctx.checkpoint("tmp", action.name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        ctx.for_each_batch(df, lambda b, _e: ctx.store.append(name, b), "tmp", action.name)
     else:
         ctx.store.overwrite(name, df)
     return ctx.store.read(name)

@@ -71,21 +71,6 @@ def _cdf_enabled(wt: WriteTarget) -> bool:
     return str((wt.table_properties or {}).get("delta.enableChangeDataFeed", "false")).lower() == "true"
 
 
-def _checkpoint_incarnation(ckpt: str) -> str:
-    """Stable uuid for one lifetime of a checkpoint directory. Deleting the
-    directory (the standard 'reprocess from scratch' move) mints a new id,
-    so epoch-dedup markers keyed by it can never suppress the replay."""
-    import uuid
-
-    marker = os.path.join(ckpt, ".lhp_incarnation")
-    if not os.path.exists(marker):
-        os.makedirs(ckpt, exist_ok=True)
-        with open(marker, "w") as f:
-            f.write(uuid.uuid4().hex)
-    with open(marker) as f:
-        return f.read().strip()
-
-
 @contextmanager
 def _with_spark_conf(spark, conf: Optional[dict]):
     """Per-table `spark_conf` (reference _action.py:35 -> "apply on the
@@ -121,11 +106,13 @@ def write_streaming_table(ctx: BuildContext, action: Action) -> Optional[DataFra
     """Streaming table with append flows / AUTO CDC / snapshot CDC
     (reference write/streaming_table.py.j2:1-244).
 
-    - standard: each flow appends; streaming inputs run through a checkpointed
-      `writeStream.foreachBatch` with `trigger(availableNow=True)` (the
-      triggered-DLT execution model); `once: true` flows run a single backfill
+    - standard: each flow appends; a streaming input is drained by
+      `BuildContext.for_each_batch` (one availableNow foreachBatch query per
+      flow, with its own checkpoint: the triggered-DLT execution model), a
+      batch input is appended once; `once: true` flows run a single backfill
       guarded by a marker file.
-    - cdc: every micro-batch goes through `apply_changes` (SCD1/SCD2 merge).
+    - cdc: every micro-batch (or the one batch frame) goes through
+      `apply_changes` (SCD1/SCD2 merge), drained the same way.
     - snapshot_cdc: pull (df, version) snapshots until exhausted, diff, merge.
 
     Scale: appends are file-level (no rewrite); CDC merges shuffle only on the
@@ -201,20 +188,11 @@ def _write_streaming_table_inner(
 
     if wt.mode == "cdc":
         assert wt.cdc_config is not None, "cdc mode requires cdc_config"
-        df = ctx.resolve_view(str(action.source))
-        if df.isStreaming:
-            def _merge(batch_df: DataFrame, _epoch: int) -> None:
-                apply_changes(ctx.store, target, batch_df, wt.cdc_config, wt.partition_columns)
-
-            q = (
-                df.writeStream.foreachBatch(_merge)
-                .option("checkpointLocation", ctx.checkpoint("cdc", action.name))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        else:
-            apply_changes(ctx.store, target, df, wt.cdc_config, wt.partition_columns)
+        ctx.for_each_batch(
+            ctx.resolve_view(str(action.source)),
+            lambda b, _e: apply_changes(ctx.store, target, b, wt.cdc_config, wt.partition_columns),
+            "cdc", action.name,
+        )
         ctx.log(action.name, "cdc_applied", target=target, scd_type=wt.cdc_config.scd_type)
 
     elif wt.mode == "snapshot_cdc":
@@ -252,25 +230,14 @@ def _write_streaming_table_inner(
             if os.path.exists(marker):
                 ctx.log(action.name, "once_flow_skipped", target=target)
                 return _register_read(ctx, action, target)
-        if df.isStreaming:
-            def _append(batch_df: DataFrame, _epoch: int) -> None:
-                with _clustered_for_write(batch_df, wt) as (laid, owf):
-                    ctx.store.append(target, laid, wt.partition_columns, order_within_files=owf)
-                if cdf:
-                    ctx.store.log_changes(target, batch_df, "insert")
 
-            q = (
-                df.writeStream.foreachBatch(_append)
-                .option("checkpointLocation", ctx.checkpoint("flow", action.name))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        else:
-            with _clustered_for_write(df, wt) as (laid, owf):
+        def _append(batch_df: DataFrame, _epoch: int) -> None:
+            with _clustered_for_write(batch_df, wt) as (laid, owf):
                 ctx.store.append(target, laid, wt.partition_columns, order_within_files=owf)
             if cdf:
-                ctx.store.log_changes(target, df, "insert")
+                ctx.store.log_changes(target, batch_df, "insert")
+
+        ctx.for_each_batch(df, _append, "flow", action.name)
         if action.once:
             with open(marker, "w") as f:
                 f.write(ctx.run_id)
@@ -421,27 +388,11 @@ def _write_mv_full_recompute(
     the scalable fix, and the logged event names the offending aggregates so
     the user can see exactly what to replace."""
     base = f"{target}__base"
-
-    def _append(batch_df: DataFrame, epoch: int) -> None:
-        # same at-least-once epoch dedup as the incremental path: a blind
-        # append is not idempotent either
-        ckpt = ctx.checkpoint("imv", action.name)
-        key = f"last_epoch:{_checkpoint_incarnation(ckpt)}"
-        last = ctx.store.get_meta(base, key)
-        if last is not None and epoch <= int(last):
-            ctx.log(action.name, "imv_epoch_skipped", epoch=epoch)
-            return
-        ctx.store.append(base, batch_df)
-        ctx.store.set_meta(base, key, int(epoch))
-
     with _with_spark_conf(ctx.spark, wt.spark_conf):
-        q = (
-            df.writeStream.foreachBatch(_append)
-            .option("checkpointLocation", ctx.checkpoint("imv", action.name))
-            .trigger(availableNow=True)
-            .start()
+        # a blind append is not idempotent: replayed epochs are skipped
+        ctx.for_each_batch(
+            df, lambda b, _e: ctx.store.append(base, b), "imv", action.name, replay_guard=base
         )
-        q.awaitTermination()
         full = ctx.store.read(base).groupBy(*cfg.group_by).agg(
             *[F.expr(spec).alias(alias) for alias, spec in cfg.aggs.items()]
         )
@@ -499,36 +450,14 @@ def write_materialized_view(ctx: BuildContext, action: Action) -> DataFrame:
             # cost is attributable (and fixable by switching to a sketch).
             return _write_mv_full_recompute(ctx, action, wt, target, cfg, df, bad)
         state = f"{target}__state"
-
-        def _update(batch_df: DataFrame, epoch: int) -> None:
-            # foreachBatch is at-least-once: after a failure/restart the same
-            # epoch id is replayed. The merge is NOT idempotent (it adds
-            # partials), so skip epochs already applied. The dedup marker is
-            # keyed by the checkpoint INCARNATION (a uuid minted inside the
-            # checkpoint dir on first use), not the checkpoint path: deleting
-            # the checkpoint dir to reprocess restarts epoch ids at 0, and a
-            # path-keyed marker would then skip every batch forever.
-            ckpt = ctx.checkpoint("imv", action.name)
-            key = f"last_epoch:{_checkpoint_incarnation(ckpt)}"
-            last = ctx.store.get_meta(state, key)
-            if last is not None and epoch <= int(last):
-                ctx.log(action.name, "imv_epoch_skipped", epoch=epoch)
-                return
-            incremental_update(ctx.store, state, batch_df, cfg.group_by, cfg.aggs)
-            # NOTE: the state merge and the epoch marker are two writes, not
-            # one commit — a crash between them still double-applies that one
-            # epoch on replay (window narrowed, not eliminated; a Delta store
-            # would fold the marker into the merge transaction).
-            ctx.store.set_meta(state, key, int(epoch))
-
         with _with_spark_conf(ctx.spark, wt.spark_conf):
-            q = (
-                df.writeStream.foreachBatch(_update)
-                .option("checkpointLocation", ctx.checkpoint("imv", action.name))
-                .trigger(availableNow=True)
-                .start()
+            # the merge adds partials, so it is not idempotent: replayed
+            # epochs are skipped
+            ctx.for_each_batch(
+                df,
+                lambda b, _e: incremental_update(ctx.store, state, b, cfg.group_by, cfg.aggs),
+                "imv", action.name, replay_guard=state,
             )
-            q.awaitTermination()
             finalize_incremental(
                 ctx.store, target, state, cfg.group_by, cfg.aggs, wt.partition_columns
             )
@@ -592,24 +521,14 @@ def write_sink(ctx: BuildContext, action: Action) -> Optional[DataFrame]:
     if sink_type == "delta":
         path = wt.path or (wt.options or {}).get("path")
         table = (wt.options or {}).get("tableName") or wt.table
-        if df.isStreaming:
-            def _append(batch_df: DataFrame, _epoch: int) -> None:
-                if path:
-                    batch_df.write.mode("append").parquet(ctx.resolve_path(path))
-                else:
-                    ctx.store.append(table, batch_df)
 
-            q = (
-                df.writeStream.foreachBatch(_append)
-                .option("checkpointLocation", ctx.checkpoint("sink", action.name))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        elif path:
-            df.write.mode("append").parquet(ctx.resolve_path(path))
-        else:
-            ctx.store.append(table, df)
+        def _append(batch_df: DataFrame, _epoch: int) -> None:
+            if path:
+                batch_df.write.mode("append").parquet(ctx.resolve_path(path))
+            else:
+                ctx.store.append(table, batch_df)
+
+        ctx.for_each_batch(df, _append, "sink", action.name)
         ctx.log(action.name, "sink_delta", path=path, table=table)
         return None
 
@@ -623,14 +542,10 @@ def write_sink(ctx: BuildContext, action: Action) -> Optional[DataFrame]:
                 F.lit(wt.topic).alias("topic"),
             )
             if out.isStreaming:
-                q = (
-                    out.writeStream.format("parquet")
-                    .option("path", ctx.resolve_path(sim))
-                    .option("checkpointLocation", ctx.checkpoint("sink", action.name))
-                    .trigger(availableNow=True)
-                    .start()
+                ctx.run_available_now(
+                    out.writeStream.format("parquet").option("path", ctx.resolve_path(sim)),
+                    "sink", action.name,
                 )
-                q.awaitTermination()
             else:
                 out.write.mode("append").parquet(ctx.resolve_path(sim))
         else:
@@ -641,12 +556,7 @@ def write_sink(ctx: BuildContext, action: Action) -> Optional[DataFrame]:
             for k, v in (wt.options or {}).items():
                 writer = writer.option(k, str(v))
             if df.isStreaming:
-                q = (
-                    writer.option("checkpointLocation", ctx.checkpoint("sink", action.name))
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
+                ctx.run_available_now(writer, "sink", action.name)
             else:
                 writer.save()
         ctx.log(action.name, "sink_kafka", topic=wt.topic)
@@ -657,16 +567,7 @@ def write_sink(ctx: BuildContext, action: Action) -> Optional[DataFrame]:
         if handler is None:
             mod = _import_module(ctx.resolve_path(wt.batch_handler), f"lhp_fb_{action.name}")
             handler = getattr(mod, "handle_batch", None) or getattr(mod, "batch_handler")
-        if df.isStreaming:
-            q = (
-                df.writeStream.foreachBatch(handler)
-                .option("checkpointLocation", ctx.checkpoint("sink", action.name))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        else:
-            handler(df, 0)
+        ctx.for_each_batch(df, handler, "sink", action.name)
         ctx.log(action.name, "sink_foreachbatch")
         return None
 
@@ -679,14 +580,7 @@ def write_sink(ctx: BuildContext, action: Action) -> Optional[DataFrame]:
         fmt = (wt.options or {}).get("format") or cls.name()
         opts = {k: str(v) for k, v in (wt.options or {}).items() if k not in ("format", "sink_class_obj")}
         if df.isStreaming:
-            q = (
-                df.writeStream.format(fmt)
-                .options(**opts)
-                .option("checkpointLocation", ctx.checkpoint("sink", action.name))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            ctx.run_available_now(df.writeStream.format(fmt).options(**opts), "sink", action.name)
         else:
             df.write.format(fmt).options(**opts).mode("append").save()
         ctx.log(action.name, "sink_custom", format=fmt)

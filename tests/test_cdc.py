@@ -195,7 +195,6 @@ class TestScaleLayout:
     def test_bucket_count_persisted_from_first_batch(self, spark, runner, monkeypatch):
         import lakehouse_plumber_spark.operators.cdc as cdc_mod
 
-        monkeypatch.setattr(cdc_mod, "N_BUCKETS_ENV", None)
         monkeypatch.setattr(cdc_mod, "ROWS_PER_BUCKET", 2)  # tiny for the test
         rows = [(i, f"v{i}", 1, None) for i in range(64)]
         apply_changes(runner.store, "t.adapt", _mk(spark, rows), CFG1)

@@ -752,11 +752,77 @@ def test_compiled_snapshot_duplicate_key_resolves_like_engine(spark, runner, tmp
     assert engine == gen == [(1, "z"), (2, "b")]
 
 
+@pytest.mark.parametrize(
+    "sink", ["delta_path", "delta_table", "kafka_simulate", "foreachbatch"]
+)
+def test_streaming_sink_lands_each_row_once(spark, runner, tmp_path, sink):
+    """A streaming source drained into a sink twice, with a new file landed
+    in between: the per-flow checkpoint makes the second run read only the
+    new file, so every row lands exactly once."""
+    land = tmp_path / "landing"
+    out = str(tmp_path / "out")
+    seen: list = []
+    write_target = {
+        "delta_path": {"type": "sink", "sink_type": "delta", "path": out},
+        "delta_table": {"type": "sink", "sink_type": "delta",
+                        "options": {"tableName": "m.snk.t"}},
+        "kafka_simulate": {"type": "sink", "sink_type": "kafka", "topic": "t",
+                           "options": {"simulate_path": out}},
+        "foreachbatch": {"type": "sink", "sink_type": "foreachbatch",
+                         "batch_handler_callable":
+                             lambda b, _e: seen.extend(r.key for r in b.collect())},
+    }[sink]
+
+    def land_rows(keys):
+        spark.createDataFrame(
+            [(k, f"v{k}") for k in keys], "key string, value string"
+        ).coalesce(1).write.mode("append").json(str(land))
+
+    def run():
+        runner.run(load_flowgroup({
+            "pipeline": "p", "flowgroup": f"snk_{sink}",
+            "actions": [
+                {"name": "ld", "type": "load", "target": "v_raw", "readMode": "stream",
+                 "source": {"type": "cloudfiles", "path": str(land), "format": "json",
+                            "schema": "key STRING, value STRING"}},
+                {"name": "snk", "type": "write", "source": "v_raw",
+                 "write_target": write_target},
+            ],
+        }))
+
+    def landed():
+        if sink == "foreachbatch":
+            return sorted(seen)
+        rows = (runner.store.read("m.snk.t") if sink == "delta_table"
+                else spark.read.parquet(out)).collect()
+        return sorted(r.key for r in rows)
+
+    land_rows(["k0", "k1", "k2"])
+    run()
+    assert landed() == ["k0", "k1", "k2"]
+    land_rows(["k3", "k4"])
+    run()
+    assert landed() == ["k0", "k1", "k2", "k3", "k4"]
+
+
+def _null_sink_class():
+    """A Python Data Source that only registers a name: with start()
+    intercepted it is never asked to write."""
+    from pyspark.sql.datasource import DataSource
+
+    class NullSink(DataSource):
+        @classmethod
+        def name(cls):
+            return "lhp_null_sink"
+
+    return NullSink
+
+
 def test_streaming_kafka_sink_sets_available_now_trigger(spark, runner, tmp_path, monkeypatch):
-    """A streaming Kafka sink must run as a bounded availableNow query, like
-    every other streaming write: without the trigger, awaitTermination on a
-    streaming source never returns. The connector is not needed: start() is
-    intercepted."""
+    """Streaming Kafka and custom sinks must run as bounded availableNow
+    queries, like every other streaming write: without the trigger,
+    awaitTermination on a streaming source never returns. Neither the Kafka
+    connector nor a streaming writer is needed: start() is intercepted."""
     from pyspark.sql.streaming.readwriter import DataStreamWriter
 
     land = tmp_path / "landing"
@@ -778,18 +844,26 @@ def test_streaming_kafka_sink_sets_available_now_trigger(spark, runner, tmp_path
 
     monkeypatch.setattr(DataStreamWriter, "trigger", record_trigger)
     monkeypatch.setattr(DataStreamWriter, "start", fake_start)
-    runner.run(load_flowgroup({
-        "pipeline": "p", "flowgroup": "kafka_stream",
-        "actions": [
-            {"name": "ld", "type": "load", "target": "v_raw", "readMode": "stream",
-             "source": {"type": "cloudfiles", "path": str(land), "format": "json",
-                        "schema": "key STRING, value STRING"}},
-            {"name": "snk", "type": "write", "source": "v_raw",
-             "write_target": {"type": "sink", "sink_type": "kafka", "topic": "t",
-                              "bootstrap_servers": "localhost:9092"}},
-        ],
-    }))
-    assert calls == {"trigger": {"availableNow": True}, "started": True}
+    for sink_type, write_target in [
+        ("kafka", {"type": "sink", "sink_type": "kafka", "topic": "t",
+                   "bootstrap_servers": "localhost:9092"}),
+        ("custom", {"type": "sink", "sink_type": "custom", "options": {}}),
+    ]:
+        calls.clear()
+        fg = load_flowgroup({
+            "pipeline": "p", "flowgroup": f"{sink_type}_stream",
+            "actions": [
+                {"name": "ld", "type": "load", "target": "v_raw", "readMode": "stream",
+                 "source": {"type": "cloudfiles", "path": str(land), "format": "json",
+                            "schema": "key STRING, value STRING"}},
+                {"name": "snk", "type": "write", "source": "v_raw",
+                 "write_target": write_target},
+            ],
+        })
+        if sink_type == "custom":
+            fg.actions[1].write_target.options["sink_class_obj"] = _null_sink_class()
+        runner.run(fg)
+        assert calls == {"trigger": {"availableNow": True}, "started": True}, sink_type
 
 
 def test_dq_check_registered_for_mv_sql_consumer(spark, tmp_path):

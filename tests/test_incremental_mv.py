@@ -133,6 +133,59 @@ def test_checkpoint_incarnation_resets_epoch_dedup(spark, tmp_path, runner):
     assert got == want, "replayed epochs were skipped by a stale epoch marker"
 
 
+@pytest.mark.parametrize(
+    "incremental_config,guarded",
+    [
+        ({"group_by": ["k"], "aggs": {"n": "count(*)"}}, "m.g.kv__state"),
+        ({"group_by": ["k"], "aggs": {"n": "count(*)", "med": "median(v)"},
+          "on_non_mergeable": "recompute"}, "m.g.kv__base"),
+    ],
+    ids=["incremental", "recompute"],
+)
+def test_imv_replay_does_not_double_apply(spark, runner, tmp_path, incremental_config, guarded):
+    """foreachBatch is at-least-once: wiping the stream checkpoint while
+    keeping its incarnation marker replays the same epoch ids, and the epoch
+    guard must skip them. Neither the partial-aggregate merge nor the
+    recompute path's base append is idempotent, so a replay that got
+    through would double every count."""
+    import shutil
+
+    from lakehouse_plumber_spark import load_flowgroup
+
+    feed = tmp_path / "feed"
+    spark.createDataFrame(
+        [("a", 1.0), ("b", 2.0), ("a", 3.0)], "k string, v double"
+    ).coalesce(1).write.parquet(str(feed))
+    spec = {
+        "pipeline": "gold", "flowgroup": "imv_rp",
+        "actions": [
+            {"name": "feed", "type": "load", "readMode": "stream",
+             "source": {"type": "cloudfiles", "path": str(feed), "format": "parquet",
+                        "schema": "k string, v double"},
+             "target": "v_feed"},
+            {"name": "mv", "type": "write", "source": "v_feed",
+             "write_target": {
+                 "type": "materialized_view", "catalog": "m", "schema": "g",
+                 "table": "kv", "refresh_policy": "incremental",
+                 "incremental_config": incremental_config}},
+        ],
+    }
+    runner.run(load_flowgroup(spec))
+    counts = {r.k: r.n for r in runner.store.read("m.g.kv").collect()}
+    assert counts == {"a": 2, "b": 1}
+
+    ckpt = runner.store.checkpoint_dir("gold", "imv_rp", "imv", "mv")
+    for entry in os.listdir(ckpt):
+        if entry != ".lhp_incarnation":
+            p = os.path.join(ckpt, entry)
+            shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
+
+    ctx = runner.run(load_flowgroup(spec))
+    assert {r.k: r.n for r in runner.store.read("m.g.kv").collect()} == counts
+    skipped = [e["details"] for e in ctx.event_log if e["event"] == "epoch_skipped"]
+    assert skipped and {d["table"] for d in skipped} == {guarded}
+
+
 def test_on_non_mergeable_flag_validation():
     """'error' (default) rejects non-mergeable aggs at spec time; 'recompute'
     accepts them; anything else is rejected."""
