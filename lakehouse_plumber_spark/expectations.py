@@ -14,6 +14,7 @@ Enforcement is Spark-native:
 
 from __future__ import annotations
 
+import functools
 import json
 from dataclasses import dataclass
 from typing import Any, Optional
@@ -99,10 +100,17 @@ def parse_expectations(spec: Any) -> list[Expectation]:
 
 
 def load_expectations_file(path: str) -> list[Expectation]:
-    with open(path) as f:
-        if path.endswith(".json"):
-            return parse_expectations(json.load(f))
-        return parse_expectations(yaml.safe_load(f))
+    """Expectations from a JSON or YAML file. One file is shared by many
+    data_quality actions, so the parse is memoized on the file's bytes: an
+    edited file misses, and each call gets its own list."""
+    with open(path, "rb") as f:
+        data = f.read()
+    return list(_parse_expectations_text(data, path.endswith(".json")))
+
+
+@functools.lru_cache(maxsize=64)
+def _parse_expectations_text(data: bytes, is_json: bool) -> tuple[Expectation, ...]:
+    return tuple(parse_expectations(json.loads(data) if is_json else yaml.safe_load(data)))
 
 
 def combined_predicate(exps: list[Expectation]) -> Optional[str]:

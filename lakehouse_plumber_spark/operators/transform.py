@@ -531,7 +531,10 @@ def transform_temp_table(ctx: BuildContext, action: Action) -> DataFrame:
         df = ctx.resolve_view(str(action.source))
     name = f"_tmp.{ctx.flowgroup.flowgroup}.{action.target or action.name}"
     if df.isStreaming:
-        ctx.for_each_batch(df, lambda b, _e: ctx.store.append(name, b), "tmp", action.name)
+        ctx.for_each_batch(
+            df, lambda b, _e: ctx.store.append(name, b), "tmp", action.name,
+            replay_guard=name,
+        )
     else:
         ctx.store.overwrite(name, df)
     return ctx.store.read(name)

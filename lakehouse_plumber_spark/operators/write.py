@@ -237,7 +237,7 @@ def _write_streaming_table_inner(
             if cdf:
                 ctx.store.log_changes(target, batch_df, "insert")
 
-        ctx.for_each_batch(df, _append, "flow", action.name)
+        ctx.for_each_batch(df, _append, "flow", action.name, replay_guard=target)
         if action.once:
             with open(marker, "w") as f:
                 f.write(ctx.run_id)

@@ -7,6 +7,13 @@ by the sha256 of the file BYTES makes staleness impossible by construction —
 an edited file simply misses and re-parses, and the old entry becomes
 garbage (bounded by project size; `clear()` prunes).
 
+Two kinds of text share the cache: flowgroup and blueprint files
+(`load_yaml(path)`, which reads the bytes and calls `load_text`) and the
+rendered text of a `use_template` flowgroup (`load_text(data)`, called by
+`parsers._expand_template`). A rendered template is keyed by the hash of
+its text, so it re-parses only after an edit to the template or to the
+flowgroup's `template_parameters`.
+
 Entries are pickled parsed dicts written atomically (tmp + rename) so
 concurrent discoveries never observe torn files. Any read failure falls back
 to a real parse — the cache can only ever be a speedup, never a correctness
@@ -31,7 +38,10 @@ class ParseCache:
     def load_yaml(self, path: str) -> Any:
         """Parsed YAML for `path`, from cache when the content hash matches."""
         with open(path, "rb") as f:
-            data = f.read()
+            return self.load_text(f.read())
+
+    def load_text(self, data: bytes) -> Any:
+        """Parsed YAML for `data`, from cache when its hash has an entry."""
         key = hashlib.sha256(data).hexdigest()
         entry = os.path.join(self.dir, key + ".pkl")
         if os.path.exists(entry):

@@ -4,6 +4,17 @@ Pipeline mirrors the reference's resolution order
 (src/lhp/core/processing/flowgroup_resolver.py:66-253): local %{var}
 variables -> Jinja template expansion -> preset deep-merge chain -> ${token}
 substitution -> validation.
+
+Shared inputs are resolved once per discovery, not once per flowgroup that
+names them: each preset file is parsed once, and each template file is read,
+has its `parameters:` declaration parsed, and is compiled to a
+`jinja2.Template` once (`_discovery_memo`). The memo lives for one
+`discover_flowgroups` call (a standalone `load_flowgroup` gets a fresh one),
+so an edit between two discoveries is always seen; failures are never
+memoized, so every flowgroup that hits one raises the same `SpecError`.
+Rendered template text goes through the project's content-hash
+`ParseCache`, like a flowgroup file, so an unedited templated flowgroup is
+not re-parsed even across CLI processes.
 """
 
 from __future__ import annotations
@@ -33,22 +44,38 @@ def deep_merge(base: dict, override: dict) -> dict:
     return out
 
 
-def _load_presets(preset_names: list[str], presets_dir: Optional[str]) -> dict:
+def _discovery_memo(parse_cache=None) -> dict:
+    """Shared inputs resolved once per discovery: parsed preset dicts and
+    template files (raw text and declared `parameters`) keyed by path, and
+    compiled templates keyed by their text. `parse_cache` (a `ParseCache` or
+    None) parses rendered template text. Memoized values are never
+    mutated."""
+    return {"parse_cache": parse_cache, "presets": {}, "templates": {}, "jinja": {}}
+
+
+def _load_presets(preset_names: list[str], presets_dir: Optional[str], memo: dict) -> dict:
     merged: dict = {}
     for name in preset_names:
         if not presets_dir:
             raise SpecError(f"preset {name!r} requested but no presets_dir given")
         path = os.path.join(presets_dir, f"{name}.yaml")
-        try:
-            with open(path) as f:
-                preset = yaml.safe_load(f) or {}
-        except FileNotFoundError as e:
-            raise SpecError(f"preset {name!r}: file not found: {path}") from e
+        preset = memo["presets"].get(path)
+        if preset is None:
+            try:
+                with open(path) as f:
+                    preset = yaml.safe_load(f) or {}
+            except FileNotFoundError as e:
+                raise SpecError(f"preset {name!r}: file not found: {path}") from e
+            memo["presets"][path] = preset
         # presets may themselves extend other presets
-        parent = preset.pop("extends", None)
+        parent = preset.get("extends")
         if parent:
-            merged = deep_merge(merged, _load_presets([parent], presets_dir))
-        merged = deep_merge(merged, preset.get("defaults", preset))
+            merged = deep_merge(merged, _load_presets([parent], presets_dir, memo))
+        if "defaults" in preset:
+            defaults = preset["defaults"]
+        else:
+            defaults = {k: v for k, v in preset.items() if k != "extends"}
+        merged = deep_merge(merged, defaults)
     return merged
 
 
@@ -82,18 +109,13 @@ def _extract_parameters_block(raw: str) -> list:
     return decl if isinstance(decl, list) else []
 
 
-def _expand_template(
-    spec: dict, templates_dir: Optional[str], params: Mapping[str, Any]
-) -> dict:
-    """`use_template` expansion via Jinja2 (reference template_engine.py)."""
-    name = spec.get("use_template")
-    if not name:
-        return spec
-    if not templates_dir:
-        raise SpecError(f"template {name!r} requested but no templates_dir given")
-    import jinja2
-
+def _template_file(name: str, templates_dir: str, memo: dict) -> tuple[str, Any]:
+    """A template's raw text and its declared `parameters` (None when it
+    declares none), read and parsed once per discovery."""
     path = os.path.join(templates_dir, f"{name}.yaml")
+    entry = memo["templates"].get(path)
+    if entry is not None:
+        return entry
     try:
         with open(path) as f:
             raw = f.read()
@@ -106,12 +128,28 @@ def _expand_template(
     # the common case — so when it does, fall back to parsing just the
     # top-level `parameters:` block textually (its declarations are plain
     # YAML by construction; only values elsewhere carry Jinja).
-    final_params = dict(params)
     try:
         pre = yaml.safe_load(raw) or {}
     except yaml.YAMLError:
         pre = {"parameters": _extract_parameters_block(raw)}
     declared = pre.get("parameters") if isinstance(pre, dict) else None
+    entry = memo["templates"][path] = (raw, declared)
+    return entry
+
+
+def _expand_template(
+    spec: dict, templates_dir: Optional[str], params: Mapping[str, Any], memo: dict
+) -> dict:
+    """`use_template` expansion via Jinja2 (reference template_engine.py)."""
+    name = spec.get("use_template")
+    if not name:
+        return spec
+    if not templates_dir:
+        raise SpecError(f"template {name!r} requested but no templates_dir given")
+    import jinja2
+
+    raw, declared = _template_file(name, templates_dir, memo)
+    final_params = dict(params)
     if isinstance(declared, list):
         missing = []
         for p in declared:
@@ -128,15 +166,19 @@ def _expand_template(
                 f"template {name!r}: missing required parameters {sorted(missing)}"
             )
     try:
-        rendered = jinja2.Template(raw, undefined=jinja2.StrictUndefined).render(
-            **final_params
-        )
+        compiled = memo["jinja"].get(raw)
+        if compiled is None:
+            compiled = jinja2.Template(raw, undefined=jinja2.StrictUndefined)
+            memo["jinja"][raw] = compiled
+        rendered = compiled.render(**final_params)
     except (jinja2.UndefinedError, jinja2.TemplateSyntaxError) as e:
         # StrictUndefined and syntax failures become the same clean spec
         # error the declared-parameter check raises (not a raw Jinja
         # traceback) so `validate` reports a FAIL line
         raise SpecError(f"template {name!r}: {getattr(e, 'message', None) or e}") from e
-    template = yaml.safe_load(rendered) or {}
+    cache = memo["parse_cache"]
+    template = (cache.load_text(rendered.encode()) if cache is not None
+                else yaml.safe_load(rendered)) or {}
     merged = deep_merge({k: v for k, v in template.items() if k != "parameters"}, spec)
     merged.pop("use_template", None)
     merged.pop("template_parameters", None)
@@ -170,11 +212,18 @@ def load_flowgroup(
     presets_dir: Optional[str] = None,
     templates_dir: Optional[str] = None,
     validate: bool = True,
+    memo: Optional[dict] = None,
 ) -> FlowGroup:
-    """Resolve a raw YAML dict into a validated FlowGroup model."""
+    """Resolve a raw YAML dict into a validated FlowGroup model. `memo`
+    (`_discovery_memo`) shares parsed presets and templates across the
+    flowgroups of one discovery; without it the call resolves its own."""
+    if memo is None:
+        memo = _discovery_memo()
     spec = copy.deepcopy(spec)
-    spec = _expand_template(spec, templates_dir, spec.get("template_parameters", {}) or {})
-    preset_defaults = _load_presets(spec.get("presets", []) or [], presets_dir)
+    spec = _expand_template(
+        spec, templates_dir, spec.get("template_parameters", {}) or {}, memo
+    )
+    preset_defaults = _load_presets(spec.get("presets", []) or [], presets_dir, memo)
     if preset_defaults:
         # presets provide defaults under the flowgroup (actions keep their own fields)
         spec = deep_merge(preset_defaults, spec)
@@ -285,6 +334,10 @@ def discover_flowgroups(
     bp_dir = _find_dir(project_root, "blueprints")
     bp_paths = sorted(glob.glob(os.path.join(bp_dir, "*.yaml"))) if bp_dir else []
 
+    from lakehouse_plumber_spark.parse_cache import cache_for
+
+    cache = cache_for(project_root)
+    memo = _discovery_memo(cache)
     presets_dir = _find_dir(project_root, "presets")
     templates_dir = _find_dir(project_root, "templates")
     blueprints: dict[str, Blueprint] = {}
@@ -304,12 +357,9 @@ def discover_flowgroups(
         except PydanticValidationError as e:
             raise SpecError(f"{path}: {e}") from e
         return load_flowgroup(
-            spec, tokens=tokens, presets_dir=presets_dir, templates_dir=templates_dir
+            spec, tokens=tokens, presets_dir=presets_dir, templates_dir=templates_dir,
+            memo=memo,
         )
-
-    from lakehouse_plumber_spark.parse_cache import cache_for
-
-    cache = cache_for(project_root)
 
     def _read_yaml(p: str) -> dict:
         try:
@@ -338,6 +388,7 @@ def discover_flowgroups(
                 tokens=tokens,
                 presets_dir=presets_dir,
                 templates_dir=templates_dir,
+                memo=memo,
             )
         )
     return out

@@ -545,7 +545,9 @@ class ParquetTableStore:
 
     def set_meta(self, name: str, key: str, value) -> None:
         """Tiny per-table metadata sidecar (e.g. the CDC bucket count, which
-        must stay fixed for the table's lifetime for pruning to be sound)."""
+        must stay fixed for the table's lifetime for pruning to be sound).
+        Written to a temp file and renamed over the old one, so a crash
+        mid-write leaves the previous sidecar, never torn JSON."""
         import json
 
         d = self._cdf_dir(name)
@@ -556,8 +558,14 @@ class ParquetTableStore:
             with open(p) as f:
                 meta = json.load(f)
         meta[key] = value
-        with open(p, "w") as f:
-            json.dump(meta, f)
+        tmp = f"{p}.{uuid.uuid4().hex[:8]}.tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(meta, f)
+            os.replace(tmp, p)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
     def get_meta(self, name: str, key: str, default=None):
         import json

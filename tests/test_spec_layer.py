@@ -13,7 +13,13 @@ import yaml
 
 from lakehouse_plumber_spark.dag import CycleError
 from lakehouse_plumber_spark.expectations import parse_expectations
-from lakehouse_plumber_spark.parsers import deep_merge, load_flowgroup, load_flowgroup_file
+from lakehouse_plumber_spark.models import SpecError
+from lakehouse_plumber_spark.parsers import (
+    _discovery_memo,
+    deep_merge,
+    load_flowgroup,
+    load_flowgroup_file,
+)
 from lakehouse_plumber_spark.substitution import UnresolvedTokenError, substitute
 
 BASE_ACTIONS = [
@@ -179,6 +185,24 @@ class TestExpectationFormats:
         refstyle = parse_expectations({"id > 0": {"name": "positive", "failureAction": "drop"}})
         assert refstyle[0].constraint == "id > 0"
         assert refstyle[0].name == "positive" and refstyle[0].action == "drop"
+
+    @pytest.mark.parametrize("ext", ["yaml", "json"])
+    def test_file_parse_follows_content(self, tmp_path, ext):
+        """The file parse is memoized on the bytes: each call gets its own
+        list, and an edited file is re-parsed."""
+        import json
+
+        from lakehouse_plumber_spark.expectations import load_expectations_file
+
+        path = tmp_path / f"dq.{ext}"
+        dump = json.dumps if ext == "json" else yaml.safe_dump
+        path.write_text(dump([{"name": "a", "constraint": "x > 0", "type": "expect_or_drop"}]))
+        first = load_expectations_file(str(path))
+        first.append("caller's own")
+        second = load_expectations_file(str(path))
+        assert [(e.name, e.constraint, e.action) for e in second] == [("a", "x > 0", "drop")]
+        path.write_text(dump([{"name": "b", "constraint": "y > 1"}]))
+        assert [e.name for e in load_expectations_file(str(path))] == ["b"]
 
 
 class TestCdcCompatibilityValidators:
@@ -352,6 +376,118 @@ class TestParseCache:
         discover_flowgroups(str(proj))
         assert not (proj / ".lhp").exists()
 
+    def _shared_proj(self, tmp_path, n):
+        """`n` flowgroups that all use one template (unquoted Jinja scalars,
+        so its full-text pre-parse fails) and a two-level preset chain."""
+        proj = tmp_path / "shared"
+        for d in ("pipelines", "presets", "templates"):
+            (proj / d).mkdir(parents=True)
+        (proj / "presets" / "base.yaml").write_text(
+            "defaults:\n  variables: {layer: bronze, tier: raw}\n")
+        (proj / "presets" / "silver.yaml").write_text(
+            "extends: base\ndefaults:\n  variables: {layer: silver}\n")
+        (proj / "templates" / "agg.yaml").write_text(
+            "parameters:\n  - {name: out, required: true}\n  - {name: lim, default: 7}\n"
+            "pipeline: p\nflowgroup: {{ out }}\nactions:\n"
+            "  - {name: ld, type: load, target: v,\n"
+            "     source: {type: sql, sql: 'SELECT %{layer} AS x LIMIT {{ lim }}'}}\n"
+            "  - name: wr\n    type: write\n    source: v\n"
+            "    write_target: {type: materialized_view, database: m.s, table: {{ out }}}\n")
+        for i in range(n):
+            (proj / "pipelines" / f"fg{i:03d}.yaml").write_text(
+                f"use_template: agg\ntemplate_parameters: {{out: t{i}}}\n"
+                "presets: [silver]\n")
+        return proj
+
+    @staticmethod
+    def _count_parses(monkeypatch):
+        """Record the text of every yaml.safe_load and the number of
+        jinja2.Template compiles."""
+        import jinja2
+
+        texts, compiles = [], []
+        real_load, real_template = yaml.safe_load, jinja2.Template
+
+        def safe_load(stream):
+            text = stream.read() if hasattr(stream, "read") else stream
+            texts.append(text.decode() if isinstance(text, bytes) else text)
+            return real_load(text)
+
+        def template(*a, **kw):
+            compiles.append(a[0])
+            return real_template(*a, **kw)
+
+        monkeypatch.setattr(yaml, "safe_load", safe_load)
+        monkeypatch.setattr(jinja2, "Template", template)
+        return texts, compiles
+
+    def test_shared_inputs_parsed_once_per_discovery(self, tmp_path, monkeypatch):
+        """Each preset and template file is parsed and compiled once per
+        discovery, however many flowgroups name it; a warm second discovery
+        parses no rendered template and no flowgroup file."""
+        from lakehouse_plumber_spark.parsers import discover_flowgroups
+
+        n = 40
+        proj = self._shared_proj(tmp_path, n)
+        shared = [(proj / "presets" / "base.yaml").read_text(),
+                  (proj / "presets" / "silver.yaml").read_text(),
+                  (proj / "templates" / "agg.yaml").read_text()]
+        texts, compiles = self._count_parses(monkeypatch)
+        fgs = discover_flowgroups(str(proj))
+        assert len(fgs) == n
+        assert fgs[5].flowgroup == "t5" and fgs[5].variables == {"layer": "silver", "tier": "raw"}
+        assert fgs[5].actions[0].source["sql"] == "SELECT silver AS x LIMIT 7"
+        assert [texts.count(t) for t in shared] == [1, 1, 1]
+        assert len(compiles) == 1
+        # cold: the n flowgroup files, the n rendered templates, the three
+        # shared files and the template's textual `parameters:` block
+        assert len(texts) == 2 * n + 4
+
+        texts.clear()
+        compiles.clear()
+        assert [fg.model_dump() for fg in discover_flowgroups(str(proj))] == \
+            [fg.model_dump() for fg in fgs]
+        assert [texts.count(t) for t in shared] == [1, 1, 1]
+        assert len(texts) == 4 and len(compiles) == 1
+
+    @pytest.mark.parametrize("edited", ["preset", "template"])
+    def test_shared_input_edit_seen_by_next_discovery(self, tmp_path, edited):
+        from lakehouse_plumber_spark.parsers import discover_flowgroups
+
+        proj = self._shared_proj(tmp_path, 3)
+        before = discover_flowgroups(str(proj))
+        assert before[0].actions[0].source["sql"] == "SELECT silver AS x LIMIT 7"
+        if edited == "preset":
+            path, old, new = proj / "presets" / "base.yaml", "tier: raw", "tier: cooked"
+        else:
+            path, old, new = proj / "templates" / "agg.yaml", "default: 7", "default: 9"
+        path.write_text(path.read_text().replace(old, new))
+        after = discover_flowgroups(str(proj))
+        if edited == "preset":
+            assert {fg.variables["tier"] for fg in after} == {"cooked"}
+        else:
+            assert {fg.actions[0].source["sql"] for fg in after} == {"SELECT silver AS x LIMIT 9"}
+
+    def test_golden_project_same_with_and_without_cache(self, tmp_path, monkeypatch):
+        import shutil
+
+        from lakehouse_plumber_spark.__main__ import _load_tokens
+        from lakehouse_plumber_spark.parsers import discover_flowgroups
+
+        proj = tmp_path / "golden"
+        shutil.copytree(
+            os.path.join(os.path.dirname(__file__), "fixtures", "golden_project"), proj,
+            ignore=shutil.ignore_patterns(".lhp"))
+        tokens = _load_tokens(str(proj), "dev")
+        monkeypatch.setenv("LHP_SECRET_API_INGEST_TOKEN", "tok")
+
+        def dumps():
+            return [fg.model_dump() for fg in discover_flowgroups(str(proj), tokens=tokens)]
+
+        cold, warm = dumps(), dumps()
+        monkeypatch.setenv("LHP_NO_PARSE_CACHE", "1")
+        assert cold == warm == dumps()
+
     def test_template_defaults_apply_with_unquoted_jinja_scalars(self, tmp_path):
         """The common unquoted `{{ x }}` form breaks a full-file YAML
         pre-parse; declared defaults/required must still be honored via the
@@ -384,11 +520,20 @@ actions:
         )
         assert fg.pipeline == "bronze" and fg.flowgroup == "nation_ingest"
 
-        with pytest.raises(ValueError, match="missing required.*table"):
-            load_flowgroup(
-                {"use_template": "ingest", "template_parameters": {}},
-                templates_dir=str(tmp_path / "templates"),
-            )
+        memo = _discovery_memo()
+        for params in ({}, {"table": "region"}, {}):
+            if "table" in params:  # a good flowgroup between two bad ones
+                fg = load_flowgroup(
+                    {"use_template": "ingest", "template_parameters": params},
+                    templates_dir=str(tmp_path / "templates"), memo=memo,
+                )
+                assert fg.flowgroup == "region_ingest"
+                continue
+            with pytest.raises(SpecError, match="missing required.*table"):
+                load_flowgroup(
+                    {"use_template": "ingest", "template_parameters": params},
+                    templates_dir=str(tmp_path / "templates"), memo=memo,
+                )
 
     def test_template_undefined_param_is_clean_error(self, tmp_path):
         (tmp_path / "templates").mkdir()
@@ -439,11 +584,16 @@ actions:
         (tmp_path / "templates" / "bad.yaml").write_text(
             "pipeline: p\nflowgroup: f\nactions: []\n{% endfor %}\n"
         )
-        with pytest.raises(ValueError, match="template 'bad'"):
-            load_flowgroup(
-                {"use_template": "bad", "template_parameters": {}},
-                templates_dir=str(tmp_path / "templates"),
-            )
+        # every flowgroup of one discovery that names the template fails the
+        # same way: a failed compile is not memoized as a success
+        memo = _discovery_memo()
+        for _ in range(3):
+            with pytest.raises(SpecError, match="template 'bad'"):
+                load_flowgroup(
+                    {"use_template": "bad", "template_parameters": {}},
+                    templates_dir=str(tmp_path / "templates"),
+                    memo=memo,
+                )
 
 
 class TestTableReadEdges:

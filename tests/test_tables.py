@@ -4,6 +4,7 @@ this engine owns it)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_plumber_spark.tables import ParquetTableStore
@@ -718,3 +719,71 @@ def test_interrupted_overwrite_swap_heals_on_access(spark, tmp_path):
     os.rename(target, os.path.join(parent, "t__old_cafe"))
     assert store.exists("h.e.t")
     assert store.read("h.e.t").count() == 50
+
+
+def test_set_meta_crash_mid_write_keeps_previous_value(spark, tmp_path, monkeypatch):
+    """The sidecar holds the CDC bucket count and the replay guard's
+    last-epoch markers; a crash while rewriting it must leave the previous
+    JSON readable, not a torn file that makes every get_meta raise."""
+    import json
+    import os
+
+    st = _store(spark, tmp_path)
+    st.set_meta("m.s.t", "cdc_buckets", 7)
+
+    def torn_dump(obj, f):
+        f.write('{"cdc_buckets": ')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        st.set_meta("m.s.t", "last_epoch:x", 3)
+    monkeypatch.undo()
+    assert st.get_meta("m.s.t", "cdc_buckets") == 7
+    assert os.listdir(st._cdf_dir("m.s.t")) == ["_meta.json"]
+
+
+@pytest.mark.parametrize("site", ["append_flow", "temp_table"])
+def test_streaming_append_replay_does_not_duplicate(spark, runner, tmp_path, site):
+    """foreachBatch is at-least-once: wiping a flow's checkpoint while
+    keeping its incarnation marker replays the same epoch ids, and the
+    epoch guard must skip them instead of appending the rows again."""
+    import os
+    import shutil
+
+    from lakehouse_plumber_spark.parsers import load_flowgroup
+
+    land = tmp_path / "land"
+    spark.range(5).selectExpr("id", "id * 2 AS v").coalesce(1).write.parquet(str(land))
+    load = {"name": "ld", "type": "load", "readMode": "stream", "target": "v_raw",
+            "source": {"type": "cloudfiles", "path": str(land), "format": "parquet",
+                       "schema": "id BIGINT, v BIGINT"}}
+    if site == "append_flow":
+        actions = [load, {"name": "wr", "type": "write", "source": "v_raw", "readMode": "stream",
+                          "write_target": {"type": "streaming_table", "database": "m.s",
+                                           "table": "ev", "mode": "standard"}}]
+        table, ckpt_parts = "m.s.ev", ("flow", "wr")
+    else:
+        actions = [load,
+                   {"name": "tmp", "type": "transform", "transform_type": "temp_table",
+                    "source": "v_raw", "target": "v_tmp"},
+                   {"name": "wr", "type": "write", "source": "v_tmp",
+                    "write_target": {"type": "materialized_view", "database": "m.s",
+                                     "table": "ev"}}]
+        table, ckpt_parts = "_tmp.rp.v_tmp", ("tmp", "tmp")
+    spec = {"pipeline": "p", "flowgroup": "rp", "actions": actions}
+
+    runner.run(load_flowgroup(spec))
+    assert runner.store.read(table).count() == 5
+
+    ckpt = runner.store.checkpoint_dir("p", "rp", *ckpt_parts)
+    for entry in os.listdir(ckpt):
+        if entry != ".lhp_incarnation":
+            p = os.path.join(ckpt, entry)
+            shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
+
+    ctx = runner.run(load_flowgroup(spec))
+    assert runner.store.read(table).count() == 5  # not 10
+    assert runner.store.read("m.s.ev").count() == 5
+    skipped = [e["details"] for e in ctx.event_log if e["event"] == "epoch_skipped"]
+    assert skipped and {d["table"] for d in skipped} == {table}
