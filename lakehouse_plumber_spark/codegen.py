@@ -21,33 +21,37 @@ Covered surface:
   sinks (delta path/table, kafka simulate + real writer, foreachbatch
   handler, custom Python Data Source)
 
-Every streaming write in a generated script is drained by one emitted
-block (`_emit_available_now`), the counterpart of the engine's
-`BuildContext.run_available_now`: the flow's writer gets its own checkpoint
-(`_ckpt(action)`) and `trigger(availableNow=True)`, is started, and is
-waited for, so `build()` returns only once the input present at start has
-been processed. A batch input takes the plain write or one `body(df, 0)`
-call instead.
+One prelude (`_prelude`) carries the engine's own functions into a script,
+their source copied verbatim at compile time, and only the groups the
+script calls:
+- the store-free SCD functions of operators/cdc.py (event tagging, the
+  (key, seq) dedup, truncates, forward fill, the SCD1/SCD2 rebuilds), so a
+  CDC or snapshot-CDC script plans and resolves ties exactly as the engine
+  does;
+- the streaming drain of context.py: `run_available_now` (the flow's own
+  checkpoint `_ckpt(action)`, `trigger(availableNow=True)`, start, wait) and
+  `for_each_batch` (one `body(df, 0)` call for a batch frame, else a
+  foreachBatch drain, with the epoch replay guard where the engine guards:
+  the standard append flow, IMV staging, `temp_table` and quarantine
+  staging), so `build()` returns once the input present at start has been
+  processed, and a replayed epoch is applied once;
+- the Morton layout of functions/zorder.py (`morton_layout` and the key
+  functions it calls) for `cluster_by_auto` writes and their compaction.
 
 Incremental MVs compile as accumulate-then-recompute (same table contents
 by the IMV contract; incremental COST stays engine-only). CDC compiles
 the full option surface: multi-column sequence_by (struct ordering key),
 ignore_null_updates (forward fill), apply_as_deletes, column lists, and
-track_history_*. Quarantine compiles with a standalone FIX-INBOX recycle
-contract replacing the store's change feed (see _emit_quarantine), and
-expectations_file resolves at compile time when `base_dir` is passed.
-Streaming quarantine remains in-engine and raises — never silently
-wrong.
+track_history_*. Quarantine, batch and streaming, compiles with a
+standalone FIX-INBOX recycle contract replacing the store's change feed
+(see _emit_quarantine), and expectations_file resolves at compile time when
+`base_dir` is passed.
 
-Generated CDC note: there is one SCD implementation. Scripts with a CDC or
-snapshot-CDC write carry the engine's store-free functions from
-operators/cdc.py (event tagging, the (key, seq) dedup, truncates, forward
-fill, the SCD1/SCD2 rebuilds), their source copied at compile time, so they
-plan and resolve ties exactly as the engine does. What differs is storage:
-the script keeps an append-only raw-events table next to the target and
-rebuilds the visible table from all of it on every run, where the engine
-merges each batch into a bucketed table with a hidden event log. Events and
-target are different paths, so the rebuild never reads what it overwrites.
+What differs from the engine is storage. A CDC script keeps an append-only
+raw-events table next to the target and rebuilds the visible table from all
+of it on every run, where the engine merges each batch into a bucketed
+table with a hidden event log. Events and target are different paths, so
+the rebuild never reads what it overwrites.
 """
 
 from __future__ import annotations
@@ -163,64 +167,6 @@ def build(spark, out_dir):
         return os.path.join(out_dir, "_ckpt", name)
 '''
 
-_ZORDER_HELPER = '''\
-    def _zorder_layout(df, cols, n_files=None, bits=16):
-        # Morton (Z-order) interleaved layout — standalone distillation of
-        # functions/zorder.py:morton_layout, the cluster_by_auto write layout:
-        # quantize each key to bits-bit buckets over its min/max range,
-        # interleave the bits into one key, range-repartition + sort on it so
-        # every file covers a compact hyper-rectangle (min/max footers prune
-        # on EACH clustered column). String keys are xxhash64-encoded:
-        # equality skipping survives, range locality does not.
-        import math
-        from pyspark.sql.types import (DateType, NumericType, StringType,
-                                       TimestampNTZType, TimestampType)
-        # bits*n_cols must fit a signed 64-bit key: auto-fit like the
-        # engine's morton_layout (4 cols -> 15 bits, 8 -> 7), or bit
-        # positions past 62 would wrap/sign-flip and corrupt the ordering
-        bits = max(1, min(bits, 62 // max(1, len(cols))))
-        types = {f.name: f.dataType for f in df.schema.fields}
-        out = df
-        nexprs = []
-        drop = ["__zorder"]
-        for c in cols:
-            t = types.get(c)
-            if isinstance(t, StringType):
-                out = out.withColumn("__zenc_" + c, F.xxhash64(F.col(c)))
-                drop.append("__zenc_" + c)
-                nexprs.append(f"CAST(__zenc_{c} AS DOUBLE)")
-            elif isinstance(t, (TimestampType, TimestampNTZType)):
-                nexprs.append(f"CAST(unix_micros({c}) AS DOUBLE)")
-            elif isinstance(t, DateType):
-                nexprs.append(f"CAST(unix_date({c}) AS DOUBLE)")
-            elif t is None or isinstance(t, NumericType):
-                nexprs.append(f"CAST({c} AS DOUBLE)")
-            else:
-                raise ValueError(f"zorder column {c!r}: unsupported type {t}")
-        aggs = []
-        for ne in nexprs:
-            fin = f"CASE WHEN isnan({ne}) THEN NULL ELSE {ne} END"
-            aggs.append(F.expr(f"min(CASE WHEN {fin} = double('-Infinity') THEN NULL ELSE {fin} END)"))
-            aggs.append(F.expr(f"max(CASE WHEN {fin} = double('Infinity') THEN NULL ELSE {fin} END)"))
-        row = out.agg(*aggs).collect()[0]
-        top, n = (1 << bits) - 1, len(cols)
-        for i, ne in enumerate(nexprs):
-            lo = row[2 * i] if row[2 * i] is not None and math.isfinite(row[2 * i]) else 0.0
-            hi = row[2 * i + 1] if row[2 * i + 1] is not None and math.isfinite(row[2 * i + 1]) else 0.0
-            span = hi - lo
-            q = (f"coalesce(CAST(least(greatest((CAST({ne} AS DOUBLE) - {lo!r}) "
-                 f"/ {span!r}, 0.0D), 1.0D) * {top} AS BIGINT), 0L)" if span > 0 else "0L")
-            out = out.withColumn(f"__zq_{i}", F.expr(q))
-            drop.append(f"__zq_{i}")
-        terms = " | ".join(
-            f"shiftleft(shiftright(__zq_{i}, b) & 1, b * {n} + {i})" for i in range(n))
-        out = out.withColumn("__zorder", F.expr(
-            f"aggregate(sequence(0, {bits - 1}), 0L, (acc, b) -> acc | ({terms}))"))
-        parts = [n_files] if n_files else []
-        return (out.repartitionByRange(*parts, F.col("__zorder"))
-                   .sortWithinPartitions("__zorder").drop(*drop))
-'''
-
 _FOOTER = '''\
     # fail-expectation enforcement: observations are populated once the plans
     # consuming them materialized (the writes above) — assert afterwards,
@@ -255,7 +201,7 @@ _FOOTER = '''\
                         *(_cpcols + [c for c in _cccols if c not in _cpcols]))
             elif _czauto and _cccols:
                 _rows = _cdf.count()
-                _cdf = _zorder_layout(_cdf, _cccols, max(1, -(-_rows // 4000000)))
+                _cdf = morton_layout(_cdf, _cccols, max(1, -(-_rows // 4000000)))
             else:
                 _rows = _cdf.count()
                 _cdf = _cdf.repartition(max(1, -(-_rows // 4000000)))
@@ -313,19 +259,6 @@ def _emit_callable_source(fn) -> list[str]:
     return ["    " + line for line in src.rstrip().splitlines()]
 
 
-def _emit_available_now(head: str, ckpt: str) -> list[str]:
-    """Lines that drain one streaming writer as a bounded availableNow query
-    with its own checkpoint and wait for it: the generated counterpart of
-    BuildContext.run_available_now. `head` is a DataStreamWriter expression
-    with its sink set; `ckpt` is the checkpoint path expression."""
-    return [
-        f"        _q = ({head}",
-        f"              .option('checkpointLocation', {ckpt})",
-        "              .trigger(availableNow=True).start())",
-        "        _q.awaitTermination()",
-    ]
-
-
 def _register(target) -> list[str]:
     return [
         f"    views[{target!r}] = df",
@@ -368,33 +301,66 @@ def _emit_python_call(a: Action, call_shape: str) -> list[str]:
     return lines
 
 
-def _scd_prelude() -> str:
-    """Module-level block of compiled CDC scripts: the engine's store-free
-    SCD functions (operators/cdc.py STANDALONE_*), their source copied
-    verbatim. `CDCConfig` binds the functions' annotation name to a plain
-    namespace; each action builds its config from the fields they read."""
+# Engine functions a compiled script carries: (group, engine module, the
+# imports their source needs, the functions). The CDC group copies the
+# module's own STANDALONE_CONSTANTS and STANDALONE_FUNCTIONS lists.
+_PRELUDE = (
+    ("cdc", "lakehouse_plumber_spark.operators.cdc",
+     ("from types import SimpleNamespace as CDCConfig", "from pyspark.sql import DataFrame"),
+     None),
+    ("drain", "lakehouse_plumber_spark.context",
+     ("from typing import Callable, Optional", "from pyspark.sql import DataFrame",
+      "from pyspark.sql.streaming import DataStreamWriter"),
+     ("run_available_now", "for_each_batch")),
+    ("zorder", "lakehouse_plumber_spark.llm.hashing", (), ("let_spark",)),
+    ("zorder", "lakehouse_plumber_spark.functions.zorder",
+     ("from pyspark.sql import DataFrame",),
+     ("zorder_key_expr", "with_zorder_key", "morton_layout")),
+)
+
+# group -> the emitted call that needs it, anchored at a line start so SQL
+# text (always one repr'd literal inside a call) can never match
+_PRELUDE_USE = {
+    "cdc": r"_dc = _data_columns\(",
+    "drain": r"(for_each_batch|run_available_now)\(",
+    "zorder": r"\w+ = morton_layout\(",
+}
+
+
+def _prelude(body: str) -> str:
+    """Module-level block of a compiled script: the engine's own functions
+    that `body` (the emitted action lines) calls, their source copied
+    verbatim at compile time. `CDCConfig` binds the SCD functions'
+    annotation name to a plain namespace; each CDC action builds its config
+    from the fields they read. Empty when `body` calls none of them."""
+    import importlib
     import inspect
+    import re
 
-    from lakehouse_plumber_spark.operators import cdc
-
-    lines = [
-        "# SCD change application: the engine's own functions, copied verbatim",
-        "# from lakehouse_plumber_spark/operators/cdc.py at compile time.",
-        "from types import SimpleNamespace as CDCConfig",
-        "",
-        "from pyspark.sql import DataFrame",
-        "",
-    ]
-    lines += [f"{c} = {getattr(cdc, c)!r}" for c in cdc.STANDALONE_CONSTANTS]
-    for fn in cdc.STANDALONE_FUNCTIONS:
-        lines += ["", "", inspect.getsource(getattr(cdc, fn)).rstrip()]
-    return "\n".join(lines) + "\n\n"
+    needs = {g for g, use in _PRELUDE_USE.items() if re.search(rf"^\s+{use}", body, re.M)}
+    if not needs:
+        return ""
+    lines = ["# The engine's own functions, copied verbatim at compile time from:"]
+    imports: list[str] = []
+    copied: list[str] = []
+    for group, module, imps, fns in _PRELUDE:
+        if group not in needs:
+            continue
+        mod = importlib.import_module(module)
+        lines.append("# " + module.replace(".", "/") + ".py")
+        imports += [i for i in imps if i not in imports]
+        if fns is None:
+            copied += ["", *(f"{c} = {getattr(mod, c)!r}" for c in mod.STANDALONE_CONSTANTS)]
+            fns = mod.STANDALONE_FUNCTIONS
+        for fn in fns:
+            copied += ["", "", inspect.getsource(getattr(mod, fn)).rstrip()]
+    return "\n".join(lines + imports + copied) + "\n\n"
 
 
 def _emit_scd_apply(cfg) -> list[str]:
     """Lines turning `_ev` (raw events plus an `_PRIO` ordinal) into the
     visible SCD table `_out`, through the engine functions that
-    `_scd_prelude` copies — the same dedup and rebuild the engine's merge
+    `_prelude` copies — the same dedup and rebuild the engine's merge
     runs, over all events instead of one batch and the affected keys' log."""
     import inspect
     import re
@@ -454,10 +420,7 @@ def _emit_cdc_merge(a: Action) -> list[str]:
         f"        _prio_{ident}[0] += 1",
         f"        (batch_df.withColumn('__prio', F.lit(_prio_{ident}[0]))",
         f"         .write.mode('append').parquet(_ev_path_{ident}))",
-        "    if df.isStreaming:",
-        *_emit_available_now(f"df.writeStream.foreachBatch(_append_events_{ident})", f"_ckpt({a.name!r})"),
-        "    else:",
-        f"        _append_events_{ident}(df, 0)",
+        f"    for_each_batch(df, _append_events_{ident}, _ckpt({a.name!r}))",
         "    # merge body: rebuild the visible snapshot from ALL raw events —",
         "    # late/out-of-order arrivals splice in exactly (event-sourced CDC)",
         f"    _ev = spark.read.option('mergeSchema', 'true').parquet(_ev_path_{ident})",
@@ -640,8 +603,8 @@ def _emit_quarantine(a: Action) -> list[str]:
          + re-validates them, appends survivors to a recycled outbox
          (first-time sks only — exactly once per fixed row);
       3. batch: returns clean ∪ outbox; streaming (mirroring the engine,
-         operators/quarantine.py:129-150): each micro-batch goes through the
-         DLQ merge in foreachBatch with an incarnation-keyed epoch replay
+         operators/quarantine.py:run_quarantine): each micro-batch goes
+         through the DLQ merge in `for_each_batch` with the epoch replay
          guard, clean rows append to a `_dlq_staging` table, newly-fixed
          rows append there once after the drain, and the registered view is
          a STREAM read of the staging table (stream in -> stream out).
@@ -705,37 +668,12 @@ def _emit_quarantine(a: Action) -> list[str]:
         "        return _typed.drop('_dlq_sk')",
         "    if df.isStreaming:",
         f"        _stage_path_{ident} = os.path.join(out_dir, '_dlq_staging', {dlq.replace('.', '/')!r})",
-        f"        _ckpt_{ident} = _ckpt({a.name!r})",
-        f"        os.makedirs(_ckpt_{ident}, exist_ok=True)",
-        f"        _inc_marker_{ident} = os.path.join(_ckpt_{ident}, '.lhp_incarnation')",
-        f"        if not os.path.exists(_inc_marker_{ident}):",
-        "            import uuid",
-        f"            with open(_inc_marker_{ident}, 'w') as _fh:",
-        "                _fh.write(uuid.uuid4().hex)",
-        f"        with open(_inc_marker_{ident}) as _fh:",
-        f"            _inc_{ident} = _fh.read().strip()",
-        f"        _em_{ident} = os.path.join(out_dir, '_dlq_staging_meta', '{ident}_' + _inc_{ident})",
         f"        def _one_batch_{ident}(_bdf, _epoch):",
-        "            # foreachBatch is at-least-once and the staging append is",
-        "            # not idempotent: skip replayed epochs, keyed by the",
-        "            # checkpoint INCARNATION (deleting the checkpoint dir mints",
-        "            # a new id, so reprocess-from-scratch is never suppressed)",
-        f"            if os.path.exists(_em_{ident}):",
-        f"                with open(_em_{ident}) as _fh:",
-        "                    _txt = _fh.read().strip()",
-        "                # a torn marker (crash mid-write) reads as no marker",
-        "                if _txt and _epoch <= int(_txt):",
-        "                    return",
-        f"            _clean_b = _q_merge_{ident}(_bdf)",
-        f"            _clean_b.write.mode('append').parquet(_stage_path_{ident})",
-        f"            os.makedirs(os.path.dirname(_em_{ident}), exist_ok=True)",
-        "            # atomic marker write: tmp + rename, never a torn file",
-        f"            with open(_em_{ident} + '.tmp', 'w') as _fh:",
-        "                _fh.write(str(_epoch))",
-        f"            os.replace(_em_{ident} + '.tmp', _em_{ident})",
+        f"            _q_merge_{ident}(_bdf).write.mode('append').parquet(_stage_path_{ident})",
         f"        _schema_{ident} = df.schema",
         f"        _cols_{ident} = list(df.columns)",
-        *_emit_available_now(f"df.writeStream.foreachBatch(_one_batch_{ident})", f"_ckpt_{ident}"),
+        "        # the staging append is not idempotent: replayed epochs are skipped",
+        f"        for_each_batch(df, _one_batch_{ident}, _ckpt({a.name!r}), guard=True)",
         f"        _rec = _q_consume_fixes_{ident}(_schema_{ident}, _cols_{ident})",
         "        if _rec is not None:",
         f"            _rec.write.mode('append').parquet(_stage_path_{ident})",
@@ -767,9 +705,10 @@ def _emit_incremental_mv(a: Action) -> list[str]:
     is that the table CONTENTS equal a full recompute over all data seen.
     The standalone script therefore drains the (possibly streaming) source
     into an append-only staging table (checkpointed: each run adds only new
-    data) and recomputes the aggregate over it — same table, full-refresh
-    cost. Incremental COST needs the engine's bucketed partial-agg state;
-    run with PipelineRunner when that matters.
+    data; replay-guarded: a replayed epoch is not staged twice) and
+    recomputes the aggregate over it — same table, full-refresh cost.
+    Incremental COST needs the engine's bucketed partial-agg state; run
+    with PipelineRunner when that matters.
     """
     wt = a.write_target
     cfg = wt.incremental_config
@@ -783,13 +722,8 @@ def _emit_incremental_mv(a: Action) -> list[str]:
         f"    df = views[{str(a.source)!r}]",
         f"    _stage_{ident} = os.path.join(out_dir, '_imv_staging', {name.replace('.', '/')!r})",
         f"    _mv_path_{ident} = _tbl_path({name!r})",
-        "    if df.isStreaming:",
-        *_emit_available_now(
-            f"df.writeStream.foreachBatch(lambda b, _e: b.write.mode('append').parquet(_stage_{ident}))",
-            f"_ckpt({a.name!r})",
-        ),
-        "    else:",
-        f"        df.write.mode('append').parquet(_stage_{ident})",
+        f"    for_each_batch(df, lambda b, _e: b.write.mode('append').parquet(_stage_{ident}),",
+        f"                   _ckpt({a.name!r}), guard=True)",
         f"    _all = spark.read.parquet(_stage_{ident})",
         f"    _all.createOrReplaceTempView('_imv_src_{ident}')",
         f"    _mv = spark.sql(\"SELECT {agg_select} FROM _imv_src_{ident} GROUP BY {group_by}\")",
@@ -809,13 +743,8 @@ def _emit_sink(a: Action) -> list[str]:
         target = f"os.path.join(out_dir, {str(path)!r})" if path else f"_tbl_path({(wt.table or a.name)!r})"
         lines += [
             f"    _sink_path_{ident} = {target}",
-            "    if df.isStreaming:",
-            *_emit_available_now(
-                f"df.writeStream.foreachBatch(lambda b, _e: b.write.mode('append').parquet(_sink_path_{ident}))",
-                f"_ckpt({a.name!r})",
-            ),
-            "    else:",
-            f"        df.write.mode('append').parquet(_sink_path_{ident})",
+            f"    for_each_batch(df, lambda b, _e: b.write.mode('append').parquet(_sink_path_{ident}),",
+            f"                   _ckpt({a.name!r}))",
         ]
         return lines
     if sink == "kafka":
@@ -829,10 +758,8 @@ def _emit_sink(a: Action) -> list[str]:
                 f"    _out = df.select(*[c for c in ('key', 'value') if c in df.columns], F.lit({wt.topic!r}).alias('topic'))",
                 f"    _sim_{ident} = os.path.join(out_dir, {str(sim)!r})",
                 "    if _out.isStreaming:",
-                *_emit_available_now(
-                    f"_out.writeStream.format('parquet').option('path', _sim_{ident})",
-                    f"_ckpt({a.name!r})",
-                ),
+                f"        run_available_now(_out.writeStream.format('parquet').option('path', _sim_{ident}),",
+                f"                          _ckpt({a.name!r}))",
                 "    else:",
                 f"        _out.write.mode('append').parquet(_sim_{ident})",
             ]
@@ -845,7 +772,7 @@ def _emit_sink(a: Action) -> list[str]:
                 f"    for _k, _v in {opts!r}.items():",
                 "        _w = _w.option(_k, _v)",
                 "    if df.isStreaming:",
-                *_emit_available_now("_w", f"_ckpt({a.name!r})"),
+                f"        run_available_now(_w, _ckpt({a.name!r}))",
                 "    else:",
                 "        _w.save()",
             ]
@@ -863,12 +790,7 @@ def _emit_sink(a: Action) -> list[str]:
             fn_expr = f"_h_{ident}"
         else:
             raise NotImplementedError(f"foreachbatch sink {a.name!r}: no handler")
-        lines += [
-            "    if df.isStreaming:",
-            *_emit_available_now(f"df.writeStream.foreachBatch({fn_expr})", f"_ckpt({a.name!r})"),
-            "    else:",
-            f"        {fn_expr}(df, 0)",
-        ]
+        lines.append(f"    for_each_batch(df, {fn_expr}, _ckpt({a.name!r}))")
         return lines
     if sink == "custom":
         if not wt.module_path or not wt.custom_sink_class:
@@ -882,7 +804,7 @@ def _emit_sink(a: Action) -> list[str]:
             f"    for _k, _v in {opts!r}.items():",
             "        _w = _w.option(_k, _v)",
             "    if df.isStreaming:",
-            *_emit_available_now("_w", f"_ckpt({a.name!r})"),
+            f"        run_available_now(_w, _ckpt({a.name!r}))",
             "    else:",
             "        _w.mode('append').save()",
         ]
@@ -986,8 +908,13 @@ def _compile_action(a: Action) -> list[str]:
             lines.append(f"    df = views[{src_view!r}]")
         lines += [
             f"    _tmp_{ident} = os.path.join(out_dir, '_temp', {a.name!r})",
-            "    # real barrier: materialize + re-read (cuts lineage, reused across flows)",
-            f"    df.write.mode('overwrite').parquet(_tmp_{ident})",
+            "    # real barrier: materialize + re-read (cuts lineage, reused across",
+            "    # flows); a stream appends its replay-guarded micro-batches",
+            "    if df.isStreaming:",
+            f"        for_each_batch(df, lambda b, _e: b.write.mode('append').parquet(_tmp_{ident}),",
+            f"                       _ckpt({a.name!r}), guard=True)",
+            "    else:",
+            f"        df.write.mode('overwrite').parquet(_tmp_{ident})",
             f"    df = spark.read.parquet(_tmp_{ident})",
         ]
         return lines + _register(a.target)
@@ -1309,7 +1236,7 @@ def _compile_action(a: Action) -> list[str]:
             # a range shuffle would explode file counts)
             mv_ccols = list(wt.cluster_columns or [])
             if wt.cluster_by_auto and len(mv_ccols) >= 2 and not wt.partition_columns:
-                lines.append(f"    df = _zorder_layout(df, {mv_ccols!r})")
+                lines.append(f"    df = morton_layout(df, {mv_ccols!r})")
             elif mv_ccols:
                 lines.append(f"    df = df.sortWithinPartitions(*{mv_ccols!r})")
             w = "df.write.mode('overwrite')"
@@ -1336,16 +1263,13 @@ def _compile_action(a: Action) -> list[str]:
                 # stats give readers data-skipping. Partitioned appends lead
                 # with the partition columns: the partitionBy writer re-sorts
                 # tasks by them (unstably) unless rows already arrive ordered
-                *( [f"        b = _zorder_layout(b, {ccols!r})"] if zauto
+                *( [f"        b = morton_layout(b, {ccols!r})"] if zauto
                    else [f"        b = b.sortWithinPartitions(*{pcols + [c for c in ccols if c not in pcols]!r})"] if ccols else [] ),
                 f"        {ap}.parquet(_st_path_{ident})",
-                "    if df.isStreaming:",
-                "        # per-flow checkpoint: each append flow into the fan-in",
-                "        # target tracks its own source offsets (reference",
-                "        # streaming_table.py.j2:128-244 emits one append_flow each)",
-                *_emit_available_now(f"df.writeStream.foreachBatch(_append_flow_{ident})", f"_ckpt({a.name!r})"),
-                "    else:",
-                f"        _append_flow_{ident}(df, 0)",
+                "    # per-flow checkpoint: each append flow into the fan-in target",
+                "    # tracks its own source offsets (reference",
+                "    # streaming_table.py.j2:128-244 emits one append_flow each)",
+                f"    for_each_batch(df, _append_flow_{ident}, _ckpt({a.name!r}), guard=True)",
             ]
             max_files = (wt.table_properties or {}).get("lhp.autoOptimize.maxFiles")
             if max_files is not None:
@@ -1389,31 +1313,16 @@ def compile_flowgroup(fg: FlowGroup, base_dir: str | None = None) -> str:
     token = _compile_base_dir.set(base_dir)
     wtoken = _compile_written_views.set(_views_feeding_writes(fg.actions))
     try:
-        out = [_HEADER.format(pipeline=fg.pipeline, flowgroup=fg.flowgroup)]
-        if any(
-            a.write_target is not None
-            and a.write_target.type.value == "streaming_table"
-            and a.write_target.mode in ("cdc", "snapshot_cdc")
-            for a in fg.actions
-        ):
-            out.append(_scd_prelude())
-        out.append(_BUILD)
-        if any(
-            a.write_target is not None
-            and a.write_target.cluster_by_auto
-            and len(a.write_target.cluster_columns or []) >= 2
-            and not a.write_target.partition_columns
-            for a in fg.actions
-        ):
-            out.append(_ZORDER_HELPER)
+        body: list[str] = []
         for a in topo_sort(fg.actions):
-            body = _compile_action(a)
+            lines = _compile_action(a)
             if a.type == ActionType.WRITE:
-                body = _wrap_spark_conf(body, a)
-            out.extend(body)
-            out.append("")
-        out.append(_FOOTER)
-        return "\n".join(out)
+                lines = _wrap_spark_conf(lines, a)
+            body += lines + [""]
+        body_text = "\n".join(body)
+        head = _HEADER.format(pipeline=fg.pipeline, flowgroup=fg.flowgroup)
+        parts = (head, _prelude(body_text), _BUILD, body_text, _FOOTER)
+        return "\n".join(p for p in parts if p)
     finally:
         _compile_written_views.reset(wtoken)
         _compile_base_dir.reset(token)

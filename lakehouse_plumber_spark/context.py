@@ -14,17 +14,56 @@ from lakehouse_plumber_spark.models import FlowGroup
 from lakehouse_plumber_spark.tables import ParquetTableStore
 
 
-def _checkpoint_incarnation(ckpt: str) -> str:
-    """Stable uuid for one lifetime of a checkpoint directory. Deleting the
-    directory (the standard 'reprocess from scratch' move) mints a new id,
-    so epoch-dedup markers keyed by it can never suppress the replay."""
-    marker = os.path.join(ckpt, ".lhp_incarnation")
-    if not os.path.exists(marker):
-        os.makedirs(ckpt, exist_ok=True)
-        with open(marker, "w") as f:
-            f.write(uuid.uuid4().hex)
-    with open(marker) as f:
-        return f.read().strip()
+def run_available_now(writer: DataStreamWriter, ckpt: str) -> None:
+    """Drain a streaming query to the end of its input and return: the
+    triggered-pipeline execution model. `writer` is a DataStreamWriter with
+    its sink set; its offsets live in the checkpoint dir `ckpt`, so the next
+    run reads only new input."""
+    q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+    q.awaitTermination()
+
+
+def for_each_batch(
+    df: DataFrame,
+    body: Callable[[DataFrame, int], None],
+    ckpt: str,
+    guard: bool = False,
+    on_skip: Optional[Callable[[int], None]] = None,
+) -> None:
+    """Run `body(batch_df, epoch_id)` over `df`: once as `body(df, 0)` for a
+    batch frame, else per micro-batch of an availableNow drain
+    (`run_available_now`) checkpointed in `ckpt`.
+
+    foreachBatch is at-least-once: after a crash before the checkpoint
+    commit, the restarted query replays the same epoch ids. A body whose
+    writes are not idempotent sets `guard`: epochs at or below the last one
+    applied are then skipped (and passed to `on_skip`). The last applied
+    epoch is kept in a marker file inside `ckpt` itself, replaced
+    atomically, so deleting the checkpoint to reprocess from scratch deletes
+    the marker with it. The body's writes and the marker are two writes,
+    not one commit: a crash between them still applies that one epoch twice
+    on replay (a Delta store would fold the marker into the body's
+    transaction). A batch frame is never a replay and is not guarded."""
+    if not df.isStreaming:
+        body(df, 0)
+        return
+    if guard:
+        marker = os.path.join(ckpt, "_lhp_last_epoch")
+        unguarded = body
+
+        def body(batch_df: DataFrame, epoch: int) -> None:
+            if os.path.exists(marker):
+                with open(marker) as f:
+                    if epoch <= int(f.read()):
+                        if on_skip is not None:
+                            on_skip(epoch)
+                        return
+            unguarded(batch_df, epoch)
+            with open(marker + ".tmp", "w") as f:
+                f.write(str(epoch))
+            os.replace(marker + ".tmp", marker)
+
+    run_available_now(df.writeStream.foreachBatch(body), ckpt)
 
 
 @dataclass
@@ -89,17 +128,10 @@ class BuildContext:
         return self.store.checkpoint_dir(self.flowgroup.pipeline, self.flowgroup.flowgroup, *parts)
 
     def run_available_now(self, writer: DataStreamWriter, *ckpt_parts: str) -> None:
-        """Drain a streaming query to the end of its input and return: the
-        triggered-pipeline execution model. `writer` is a DataStreamWriter
-        with its sink set; its offsets live in the per-flow checkpoint
-        `self.checkpoint(*ckpt_parts)`, so the next run reads only new input.
-        Every streaming write of the engine goes through here."""
-        q = (
-            writer.option("checkpointLocation", self.checkpoint(*ckpt_parts))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        """`run_available_now` in the per-flow checkpoint
+        `self.checkpoint(*ckpt_parts)`. Every streaming write of the engine
+        goes through here or `for_each_batch`."""
+        run_available_now(writer, self.checkpoint(*ckpt_parts))
 
     def for_each_batch(
         self,
@@ -108,41 +140,17 @@ class BuildContext:
         *ckpt_parts: str,
         replay_guard: Optional[str] = None,
     ) -> None:
-        """Run `body(batch_df, epoch_id)` over `df`: once as `body(df, 0)`
-        for a batch frame, else per micro-batch of an availableNow drain
-        (`run_available_now`).
-
-        foreachBatch is at-least-once: after a crash before the checkpoint
-        commit, the restarted query replays the same epoch ids. A body whose
-        writes are not idempotent names its target in `replay_guard`: epochs
-        at or below the last one applied are then skipped and logged as
-        `epoch_skipped` under the action named by the last checkpoint part.
-        The last applied epoch is kept in that table's meta, keyed by the
-        checkpoint INCARNATION (a uuid minted inside the checkpoint dir on
-        first use), not its path: deleting the checkpoint dir to reprocess
-        restarts epoch ids at 0, and a path-keyed marker would then skip
-        every batch forever. The body's writes and the marker are two
-        writes, not one commit: a crash between them still applies that one
-        epoch twice on replay (a Delta store would fold the marker into the
-        body's transaction). A batch frame is never a replay and is not
-        guarded."""
-        if not df.isStreaming:
-            body(df, 0)
-            return
-        if replay_guard is not None:
-            ckpt = self.checkpoint(*ckpt_parts)
-            unguarded = body
-
-            def body(batch_df: DataFrame, epoch: int) -> None:
-                key = f"last_epoch:{_checkpoint_incarnation(ckpt)}"
-                last = self.store.get_meta(replay_guard, key)
-                if last is not None and epoch <= int(last):
-                    self.log(ckpt_parts[-1], "epoch_skipped", table=replay_guard, epoch=epoch)
-                    return
-                unguarded(batch_df, epoch)
-                self.store.set_meta(replay_guard, key, int(epoch))
-
-        self.run_available_now(df.writeStream.foreachBatch(body), *ckpt_parts)
+        """`for_each_batch` in the per-flow checkpoint
+        `self.checkpoint(*ckpt_parts)`. A body whose writes are not
+        idempotent names its target in `replay_guard`: replayed epochs are
+        skipped and logged as `epoch_skipped` (with `table=`) under the
+        action named by the last checkpoint part."""
+        for_each_batch(
+            df, body, self.checkpoint(*ckpt_parts), guard=replay_guard is not None,
+            on_skip=lambda epoch: self.log(
+                ckpt_parts[-1], "epoch_skipped", table=replay_guard, epoch=epoch
+            ),
+        )
 
     def strip_internal(self, df: DataFrame) -> DataFrame:
         """Drop engine-internal __-prefixed columns (e.g. __seq) on read.

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lakehouse_plumber_spark.llm.hashing import let_spark
+
 
 def zorder_key_expr(ranges: list[tuple[str, float, float]], bits: int = 16) -> str:
     """Morton key expression from per-column (expr, lo, hi) ranges.
@@ -58,8 +60,6 @@ def zorder_key_expr(ranges: list[tuple[str, float, float]], bits: int = 16) -> s
         qs.append(f"coalesce({scaled}, 0L)")
     # let-bind the quantized buckets so each is computed once per row, not
     # once per bit of the fold
-    from lakehouse_plumber_spark.llm.hashing import let_spark
-
     fields = ", ".join(f"'q{i}', {q}" for i, q in enumerate(qs))
     terms = " | ".join(
         f"shiftleft(shiftright(qq.q{i}, b) & 1, b * {n} + {i})" for i in range(n)

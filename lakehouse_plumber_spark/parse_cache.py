@@ -5,7 +5,9 @@ Reference parity: persistent on-disk parse cache
 parsing is the dominant compile-side cost for 100-pipeline projects; keying
 by the sha256 of the file BYTES makes staleness impossible by construction —
 an edited file simply misses and re-parses, and the old entry becomes
-garbage (bounded by project size; `clear()` prunes).
+garbage. A discovery that scanned the whole project calls `prune()`, which
+removes every entry that discovery neither read nor wrote, so the cache
+holds one entry per live input; `clear()` removes them all.
 
 Two kinds of text share the cache: flowgroup and blueprint files
 (`load_yaml(path)`, which reads the bytes and calls `load_text`) and the
@@ -34,6 +36,7 @@ import yaml
 class ParseCache:
     def __init__(self, project_root: str) -> None:
         self.dir = os.path.join(project_root, ".lhp", "cache", "parse")
+        self.used: set[str] = set()  # entry names this instance read or wrote
 
     def load_yaml(self, path: str) -> Any:
         """Parsed YAML for `path`, from cache when the content hash matches."""
@@ -42,8 +45,9 @@ class ParseCache:
 
     def load_text(self, data: bytes) -> Any:
         """Parsed YAML for `data`, from cache when its hash has an entry."""
-        key = hashlib.sha256(data).hexdigest()
-        entry = os.path.join(self.dir, key + ".pkl")
+        name = hashlib.sha256(data).hexdigest() + ".pkl"
+        self.used.add(name)
+        entry = os.path.join(self.dir, name)
         if os.path.exists(entry):
             try:
                 with open(entry, "rb") as f:
@@ -61,15 +65,27 @@ class ParseCache:
             pass  # read-only project dir etc: cache is best-effort
         return spec
 
+    def prune(self) -> int:
+        """Remove the entries this instance neither read nor wrote; returns
+        the number removed. An entry a concurrent discovery still wanted
+        only costs that reader a re-parse."""
+        return self._remove_except(self.used)
+
     def clear(self) -> int:
         """Remove all entries; returns the number removed."""
+        return self._remove_except(set())
+
+    def _remove_except(self, keep: set[str]) -> int:
         if not os.path.isdir(self.dir):
             return 0
         n = 0
         for name in os.listdir(self.dir):
-            if name.endswith(".pkl"):
-                os.remove(os.path.join(self.dir, name))
-                n += 1
+            if name.endswith(".pkl") and name not in keep:
+                try:
+                    os.remove(os.path.join(self.dir, name))
+                    n += 1
+                except FileNotFoundError:
+                    pass  # removed by a concurrent prune
         return n
 
 

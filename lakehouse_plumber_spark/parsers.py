@@ -317,6 +317,7 @@ def discover_flowgroups(
         looks_like_instance,
     )
 
+    whole_project = include is None
     project_cfg = load_project_config(project_root)
     if include is None and project_cfg is not None and project_cfg.include:
         # lhp.yaml include globs scope discovery, relative to pipelines/
@@ -391,6 +392,9 @@ def discover_flowgroups(
                 memo=memo,
             )
         )
+    if cache is not None and whole_project:
+        # every live input was read or written above: the rest is garbage
+        cache.prune()
     return out
 
 

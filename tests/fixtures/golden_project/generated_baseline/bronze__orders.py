@@ -82,7 +82,7 @@ def build(spark, out_dir):
                         *(_cpcols + [c for c in _cccols if c not in _cpcols]))
             elif _czauto and _cccols:
                 _rows = _cdf.count()
-                _cdf = _zorder_layout(_cdf, _cccols, max(1, -(-_rows // 4000000)))
+                _cdf = morton_layout(_cdf, _cccols, max(1, -(-_rows // 4000000)))
             else:
                 _rows = _cdf.count()
                 _cdf = _cdf.repartition(max(1, -(-_rows // 4000000)))

@@ -679,18 +679,53 @@ def _cdc_scd_spec(scd):
 
 
 def test_compiled_cdc_carries_engine_functions_verbatim():
-    """Compiled CDC scripts run the engine's own SCD functions, copied at
-    compile time — not an engine import and not a second copy of the logic."""
+    """Compiled scripts run the engine's own functions, copied at compile
+    time — not an engine import and not a second copy of the logic — and
+    only those they call: the SCD functions for a CDC write, the streaming
+    drain for a write that can stream, the Morton layout for
+    cluster_by_auto."""
     import inspect
 
+    from lakehouse_plumber_spark import context
+    from lakehouse_plumber_spark.functions import zorder
     from lakehouse_plumber_spark.operators import cdc
 
-    src = compile_flowgroup(load_flowgroup(_cdc_scd_spec(2)))
-    assert inspect.getsource(cdc._dedup_key_seq) in src
-    assert inspect.getsource(cdc._rebuild_scd2) in src
-    assert "import lakehouse_plumber_spark" not in src
-    # the helpers stay out of scripts without a CDC write
-    assert "_dedup_key_seq" not in compile_flowgroup(load_flowgroup(FG_SPEC))
+    scd = [cdc._dedup_key_seq, cdc._rebuild_scd2]
+    drain = [context.run_available_now, context.for_each_batch]
+    morton = [zorder.morton_layout]
+    stream = {
+        "pipeline": "p", "flowgroup": "st",
+        "actions": [
+            {"name": "ld", "type": "load", "target": "v", "readMode": "stream",
+             "source": {"type": "cloudfiles", "path": "/land", "format": "json"}},
+            {"name": "wr", "type": "write", "source": "v",
+             "write_target": {"type": "streaming_table", "database": "m.s", "table": "t"}},
+        ],
+    }
+    clustered = {
+        "pipeline": "p", "flowgroup": "zo",
+        "actions": [
+            {"name": "ld", "type": "load", "target": "v",
+             "source": {"type": "sql", "sql": "SELECT id AS a, id AS b FROM range(9)"}},
+            {"name": "wr", "type": "write", "source": "v",
+             "write_target": {"type": "materialized_view", "database": "m.z", "table": "t",
+                              "cluster_columns": ["a", "b"], "cluster_by_auto": True}},
+        ],
+    }
+    for spec, carried in [
+        (_cdc_scd_spec(2), scd + drain),  # the raw-event append drains too
+        (stream, drain),
+        (clustered, morton),
+        (FG_SPEC, []),
+    ]:
+        src = compile_flowgroup(load_flowgroup(spec))
+        assert "import lakehouse_plumber_spark" not in src
+        for fn in scd + drain + morton:
+            label = (spec["flowgroup"], fn.__name__)
+            if fn in carried:
+                assert inspect.getsource(fn) in src, label
+            else:
+                assert f"def {fn.__name__}(" not in src, label
 
 
 @pytest.mark.parametrize("scd", [1, 2])
@@ -803,6 +838,105 @@ def test_streaming_sink_lands_each_row_once(spark, runner, tmp_path, sink):
     land_rows(["k3", "k4"])
     run()
     assert landed() == ["k0", "k1", "k2", "k3", "k4"]
+
+
+def _replay_spec(site, land):
+    """Actions of a streaming flowgroup with a replay-guarded body at `site`;
+    returns (actions, the guarded action, {table path under out_dir: rows})."""
+    load = {"name": "ld", "type": "load", "target": "v_raw", "readMode": "stream",
+            "source": {"type": "cloudfiles", "path": str(land), "format": "parquet",
+                       "schema": "k STRING, v DOUBLE"}}
+    st = {"name": "wr", "type": "write", "source": "v_raw",
+          "write_target": {"type": "streaming_table", "database": "m.s", "table": "ev"}}
+    if site == "append_flow":
+        return [load, st], "wr", {"m/s/ev": 5}
+    if site == "imv":
+        return [load, {"name": "mv", "type": "write", "source": "v_raw",
+                       "write_target": {"type": "materialized_view", "database": "m.s",
+                                        "table": "kv", "refresh_policy": "incremental",
+                                        "incremental_config": {"group_by": ["k"],
+                                                               "aggs": {"n": "count(*)"}}}}], \
+            "mv", {"m/s/kv": 3, "_imv_staging/m/s/kv": 5}
+    if site == "temp_table":
+        return [load,
+                {"name": "tmp", "type": "transform", "transform_type": "temp_table",
+                 "source": "v_raw", "target": "v_tmp"},
+                {"name": "wr", "type": "write", "source": "v_tmp",
+                 "write_target": {"type": "materialized_view", "database": "m.s",
+                                  "table": "ev"}}], "tmp", {"_temp/tmp": 5, "m/s/ev": 5}
+    return [load,
+            {"name": "dq", "type": "transform", "transform_type": "data_quality",
+             "source": "v_raw", "target": "v_clean", "mode": "quarantine",
+             "quarantine": {"dlq_table": "m.dlq.ev"},
+             "expectations_inline": [
+                 {"name": "pos", "constraint": "v > 0", "type": "expect_or_drop"}]},
+            {**st, "source": "v_clean"}], "dq", \
+        {"_dlq_staging/m/dlq/ev": 3, "_dlq/m/dlq/ev": 2, "m/s/ev": 3}
+
+
+@pytest.mark.parametrize("site", ["append_flow", "imv", "temp_table", "quarantine"])
+def test_compiled_replay_does_not_double_apply(spark, tmp_path, site):
+    """foreachBatch is at-least-once: deleting a compiled flow's commit log
+    (a crash after the batch ran, before its commit) replays the same epoch,
+    and the compiled script's replay guard must skip it, exactly where the
+    engine guards, instead of appending or merging the rows a second time."""
+    import shutil
+
+    land = tmp_path / "land"
+    spark.createDataFrame(
+        [("a", 1.0), ("b", -2.0), ("a", 3.0), ("c", -4.0), ("a", 5.0)], "k string, v double"
+    ).coalesce(1).write.parquet(str(land))
+    actions, guarded, want = _replay_spec(site, land)
+    out = tmp_path / "gen"
+    src = compile_flowgroup(load_flowgroup(
+        {"pipeline": "p", "flowgroup": "rp", "actions": actions}))
+    ns: dict = {}
+    exec(compile(src, "<generated>", "exec"), ns)
+
+    def rows():
+        return {t: sorted(map(tuple, spark.read.parquet(str(out / t)).collect())) for t in want}
+
+    ns["build"](spark, str(out))
+    first = rows()
+    assert {t: len(r) for t, r in first.items()} == want
+    shutil.rmtree(out / "_ckpt" / guarded / "commits")
+    ns["build"](spark, str(out))
+    assert rows() == first
+
+
+def test_streaming_temp_table_compiles_and_matches_engine(spark, runner, tmp_path):
+    """A streaming source into a temp_table drains like the engine's: each
+    micro-batch is appended, the barrier reads back a batch frame, and the
+    MV over it holds the same rows. A second run with one new file adds only
+    that file's rows."""
+    land = tmp_path / "land"
+
+    def land_rows(ids):
+        spark.createDataFrame([(i, i * 10) for i in ids], "id long, v long") \
+            .coalesce(1).write.mode("append").parquet(str(land))
+
+    def spec():
+        return load_flowgroup({
+            "pipeline": "p", "flowgroup": "tt",
+            "actions": [
+                {"name": "ld", "type": "load", "target": "v_raw", "readMode": "stream",
+                 "source": {"type": "cloudfiles", "path": str(land), "format": "parquet",
+                            "schema": "id BIGINT, v BIGINT"}},
+                {"name": "tmp", "type": "transform", "transform_type": "temp_table",
+                 "source": "v_raw", "target": "v_tmp"},
+                {"name": "wr", "type": "write", "source": "v_tmp",
+                 "write_target": {"type": "materialized_view", "database": "m.t",
+                                  "table": "mv", "sql": "SELECT id, v FROM v_tmp"}},
+            ],
+        })
+
+    ns: dict = {}
+    exec(compile(compile_flowgroup(spec()), "<generated>", "exec"), ns)
+    for ids in ([1, 2, 3], [4, 5]):
+        land_rows(ids)
+        engine = sorted(tuple(r) for r in runner.run(spec()).resolve_view("m.t.mv").collect())
+        gen = sorted(tuple(r) for r in ns["build"](spark, str(tmp_path / "gen"))["m.t.mv"].collect())
+        assert engine == gen == [(i, i * 10) for i in range(1, ids[-1] + 1)]
 
 
 def _null_sink_class():

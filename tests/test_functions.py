@@ -279,13 +279,19 @@ def test_cluster_by_auto_yaml_routes_morton_layout(spark, tmp_path):
 
 
 def test_cluster_by_auto_generated_code_matches_engine_layout(spark, tmp_path):
-    """The compiled standalone script carries the _zorder_layout distillation
-    and produces the same Morton file locality as the engine."""
+    """The compiled standalone script carries the engine's own Morton layout
+    functions, copied verbatim, and produces the same file locality as the
+    engine."""
+    import inspect
+
     from lakehouse_plumber_spark.codegen import compile_flowgroup
+    from lakehouse_plumber_spark.functions import zorder
+    from lakehouse_plumber_spark.llm.hashing import let_spark
     from lakehouse_plumber_spark.parsers import load_flowgroup
 
     src = compile_flowgroup(load_flowgroup(_GRID_FG))
-    assert "_zorder_layout" in src
+    for fn in (zorder.morton_layout, zorder.with_zorder_key, zorder.zorder_key_expr, let_spark):
+        assert inspect.getsource(fn) in src, fn.__name__
     assert "import lakehouse_plumber_spark" not in src
     ns: dict = {}
     exec(compile(src, "<generated>", "exec"), ns)

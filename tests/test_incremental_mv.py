@@ -143,9 +143,9 @@ def test_checkpoint_incarnation_resets_epoch_dedup(spark, tmp_path, runner):
     ids=["incremental", "recompute"],
 )
 def test_imv_replay_does_not_double_apply(spark, runner, tmp_path, incremental_config, guarded):
-    """foreachBatch is at-least-once: wiping the stream checkpoint while
-    keeping its incarnation marker replays the same epoch ids, and the epoch
-    guard must skip them. Neither the partial-aggregate merge nor the
+    """foreachBatch is at-least-once: deleting the checkpoint's commit log
+    (a crash after the batch ran, before its commit) replays the same epoch
+    ids, and the epoch guard must skip them. Neither the partial-aggregate merge nor the
     recompute path's base append is idempotent, so a replay that got
     through would double every count."""
     import shutil
@@ -175,10 +175,7 @@ def test_imv_replay_does_not_double_apply(spark, runner, tmp_path, incremental_c
     assert counts == {"a": 2, "b": 1}
 
     ckpt = runner.store.checkpoint_dir("gold", "imv_rp", "imv", "mv")
-    for entry in os.listdir(ckpt):
-        if entry != ".lhp_incarnation":
-            p = os.path.join(ckpt, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
+    shutil.rmtree(os.path.join(ckpt, "commits"))
 
     ctx = runner.run(load_flowgroup(spec))
     assert {r.k: r.n for r in runner.store.read("m.g.kv").collect()} == counts

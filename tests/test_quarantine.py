@@ -311,8 +311,7 @@ def test_streaming_quarantine_roundtrip(spark, runner, tmp_path):
 
 def test_streaming_quarantine_replay_does_not_duplicate_staging(spark, runner, tmp_path):
     """foreachBatch is at-least-once: simulate a post-failure replay by
-    wiping the stream checkpoint while keeping its incarnation marker — the
-    same micro-batch (same epoch ids) replays, and the epoch guard must skip
+    deleting the stream checkpoint's commit log — the same micro-batch (same epoch ids) replays, and the epoch guard must skip
     it instead of appending the clean rows to staging a second time
     (ADVICE r3; same guard as the incremental-MV path)."""
     import os
@@ -346,14 +345,10 @@ def test_streaming_quarantine_replay_does_not_duplicate_staging(spark, runner, t
     staging = runner.store.read("m.dlqrp.s__clean")
     assert staging.count() == 20
 
-    # replay: reset stream progress but keep the incarnation marker, so the
-    # re-run delivers the SAME epochs again (exactly what a crash-before-
-    # checkpoint-commit does)
+    # replay: delete the commit log, so the re-run delivers the SAME epochs
+    # again (exactly what a crash-before-checkpoint-commit does)
     ckpt = runner.store.checkpoint_dir("p", "qrp", "quarantine", "dq")
-    for entry in os.listdir(ckpt):
-        if entry != ".lhp_incarnation":
-            p = os.path.join(ckpt, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
+    shutil.rmtree(os.path.join(ckpt, "commits"))
 
     runner.run(fg())
     assert runner.store.read("m.dlqrp.s__clean").count() == 20  # not 40

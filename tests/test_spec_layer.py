@@ -351,7 +351,8 @@ class TestParseCache:
         fgs = discover_flowgroups(str(proj))
         assert fgs[0].actions[1].write_target.table == "t2"
         cache_dir = proj / ".lhp" / "cache" / "parse"
-        assert len([f for f in os.listdir(cache_dir) if f.endswith(".pkl")]) == 2
+        # the edited file's old entry is pruned by the whole-project discovery
+        assert len([f for f in os.listdir(cache_dir) if f.endswith(".pkl")]) == 1
 
     def test_corrupt_entry_falls_back_to_parse(self, tmp_path):
         import os
@@ -449,6 +450,40 @@ class TestParseCache:
             [fg.model_dump() for fg in fgs]
         assert [texts.count(t) for t in shared] == [1, 1, 1]
         assert len(texts) == 4 and len(compiles) == 1
+
+    def test_edits_leave_one_entry_per_live_input(self, tmp_path):
+        """Ten edit steps, each followed by a whole-project discovery, leave
+        exactly one entry per live input (each flowgroup file and each
+        rendered template); a discovery narrowed by `include` prunes
+        nothing."""
+        import os
+
+        from lakehouse_plumber_spark.parsers import discover_flowgroups
+
+        n = 6
+        proj = self._shared_proj(tmp_path, n)
+        cache_dir = proj / ".lhp" / "cache" / "parse"
+
+        def entries():
+            return len([f for f in os.listdir(cache_dir) if f.endswith(".pkl")])
+
+        def edit(step):
+            fg = proj / "pipelines" / f"fg{step % n:03d}.yaml"
+            fg.write_text(f"use_template: agg\ntemplate_parameters: {{out: t{step % n}, "
+                          f"lim: {100 + step}}}\npresets: [silver]\n")
+
+        discover_flowgroups(str(proj))
+        assert entries() == 2 * n
+        for step in range(10):
+            edit(step)
+            fgs = discover_flowgroups(str(proj))
+            assert fgs[step % n].actions[0].source["sql"].endswith(f"LIMIT {100 + step}")
+            assert entries() == 2 * n
+        edit(10)
+        discover_flowgroups(str(proj), include=["pipelines/fg004.yaml"])
+        assert entries() == 2 * n + 2
+        discover_flowgroups(str(proj))
+        assert entries() == 2 * n
 
     @pytest.mark.parametrize("edited", ["preset", "template"])
     def test_shared_input_edit_seen_by_next_discovery(self, tmp_path, edited):

@@ -722,9 +722,9 @@ def test_interrupted_overwrite_swap_heals_on_access(spark, tmp_path):
 
 
 def test_set_meta_crash_mid_write_keeps_previous_value(spark, tmp_path, monkeypatch):
-    """The sidecar holds the CDC bucket count and the replay guard's
-    last-epoch markers; a crash while rewriting it must leave the previous
-    JSON readable, not a torn file that makes every get_meta raise."""
+    """The sidecar holds table state such as the CDC bucket count and UC
+    tags; a crash while rewriting it must leave the previous JSON readable,
+    not a torn file that makes every get_meta raise."""
     import json
     import os
 
@@ -745,9 +745,10 @@ def test_set_meta_crash_mid_write_keeps_previous_value(spark, tmp_path, monkeypa
 
 @pytest.mark.parametrize("site", ["append_flow", "temp_table"])
 def test_streaming_append_replay_does_not_duplicate(spark, runner, tmp_path, site):
-    """foreachBatch is at-least-once: wiping a flow's checkpoint while
-    keeping its incarnation marker replays the same epoch ids, and the
-    epoch guard must skip them instead of appending the rows again."""
+    """foreachBatch is at-least-once: deleting a flow's checkpoint commit
+    log (a crash after the batch ran, before its commit) replays the same
+    epoch ids, and the epoch guard must skip them instead of appending the
+    rows again."""
     import os
     import shutil
 
@@ -777,10 +778,7 @@ def test_streaming_append_replay_does_not_duplicate(spark, runner, tmp_path, sit
     assert runner.store.read(table).count() == 5
 
     ckpt = runner.store.checkpoint_dir("p", "rp", *ckpt_parts)
-    for entry in os.listdir(ckpt):
-        if entry != ".lhp_incarnation":
-            p = os.path.join(ckpt, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
+    shutil.rmtree(os.path.join(ckpt, "commits"))
 
     ctx = runner.run(load_flowgroup(spec))
     assert runner.store.read(table).count() == 5  # not 10
