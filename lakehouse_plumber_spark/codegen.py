@@ -12,8 +12,9 @@ materializes the same tables the engine's PipelineRunner would.
 Covered surface:
 - loads: sql, delta, cloudfiles (batch + stream), python (module import or
   inlined in-process callable source)
-- transforms: sql, schema, python, temp_table
-- writes: materialized_view, streaming_table standard (batch + availableNow
+- transforms: sql, schema, python, temp_table, data_quality (dqe and
+  quarantine, batch + stream)
+- writes: materialized_view (incremental too), streaming_table standard (batch + availableNow
   streaming with per-flow checkpoints, fan-in append), streaming_table CDC
   SCD1/SCD2 (foreachBatch append to a raw-events table + the engine's SCD
   functions rebuilding the table from it), snapshot_cdc (source_function
@@ -21,43 +22,40 @@ Covered surface:
   sinks (delta path/table, kafka simulate + real writer, foreachbatch
   handler, custom Python Data Source)
 
-One prelude (`_prelude`) carries the engine's own functions into a script,
-their source copied verbatim at compile time, and only the groups the
-script calls:
-- the store-free SCD functions of operators/cdc.py (event tagging, the
-  (key, seq) dedup, truncates, forward fill, the SCD1/SCD2 rebuilds), so a
-  CDC or snapshot-CDC script plans and resolves ties exactly as the engine
-  does;
-- the streaming drain of context.py: `run_available_now` (the flow's own
-  checkpoint `_ckpt(action)`, `trigger(availableNow=True)`, start, wait) and
-  `for_each_batch` (one `body(df, 0)` call for a batch frame, else a
-  foreachBatch drain, with the epoch replay guard where the engine guards:
-  the standard append flow, IMV staging, `temp_table` and quarantine
-  staging), so `build()` returns once the input present at start has been
-  processed, and a replayed epoch is applied once;
-- the Morton layout of functions/zorder.py (`morton_layout` and the key
-  functions it calls) for `cluster_by_auto` writes and their compaction.
+One prelude (`_prelude`) copies the engine's own functions into a script,
+verbatim at compile time and once per process, for the groups the script
+calls; each engine module declares its group (STANDALONE_*):
+- operators/cdc.py: the store-free SCD functions (dedup, truncates, forward
+  fill, SCD1/SCD2 rebuilds), so CDC scripts plan and break ties as the
+  engine does;
+- context.py: the drain `run_available_now` and `for_each_batch` with its
+  epoch replay guard, guarded where the engine guards (standard append,
+  IMV staging, `temp_table`, quarantine staging);
+- functions/zorder.py: `morton_layout` for `cluster_by_auto`;
+- expectations.py: `Expectation` literals resolved at compile time go
+  through `apply_expectations`; a script that registers a fail check ends
+  with `check_failures` (`ExpectationFailedError`);
+- operators/quarantine.py: `quarantine_split` and `_parse_and_revalidate`;
+- operators/incremental.py: `batch_partials`, `finalize_partials` and
+  `recompute_aggs`.
+A cloudfiles load reads with what `cloudfiles_reader` decides at compile
+time (options, declared schema plus rescue column, PERMISSIVE rescue).
 
-Incremental MVs compile as accumulate-then-recompute (same table contents
-by the IMV contract; incremental COST stays engine-only). CDC compiles
-the full option surface: multi-column sequence_by (struct ordering key),
-ignore_null_updates (forward fill), apply_as_deletes, column lists, and
-track_history_*. Quarantine, batch and streaming, compiles with a
-standalone FIX-INBOX recycle contract replacing the store's change feed
-(see _emit_quarantine), and expectations_file resolves at compile time when
-`base_dir` is passed.
-
-What differs from the engine is storage. A CDC script keeps an append-only
-raw-events table next to the target and rebuilds the visible table from all
-of it on every run, where the engine merges each batch into a bucketed
-table with a hidden event log. Events and target are different paths, so
-the rebuild never reads what it overwrites.
+What differs from the engine is storage, not the operator bodies. An
+incremental MV stages its input rows and finalizes the partials of all of
+them per run (the engine's table, types included, at full-refresh cost). A
+quarantine keeps its DLQ under `<out_dir>/_dlq` and recycles fixes through
+a FIX INBOX (see _emit_quarantine) instead of the store's change feed. A
+CDC script rebuilds the visible table from an append-only raw-events table
+on every run, where the engine merges each batch into a bucketed table.
 """
 
 from __future__ import annotations
 
 import contextvars
+import functools
 import os
+import re
 import textwrap
 
 from lakehouse_plumber_spark.dag import topo_sort
@@ -139,7 +137,7 @@ No engine import: this file is exactly what executes.
 import importlib.util
 import os
 
-from pyspark.sql import Observation, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 
@@ -156,7 +154,6 @@ def build(spark, out_dir):
     """Run the pipeline; writes tables under out_dir, returns {name: DataFrame}."""
     views = {}
     written = {}
-    _dq_checks = []
     _pending_compact = {}
     _uc_tags = {}
 
@@ -167,16 +164,14 @@ def build(spark, out_dir):
         return os.path.join(out_dir, "_ckpt", name)
 '''
 
-_FOOTER = '''\
-    # fail-expectation enforcement: observations are populated once the plans
-    # consuming them materialized (the writes above) — assert afterwards,
-    # mirroring the engine's pending_checks pass (runner.py)
+# fail-expectation check, once the writes above filled the observations
+# (the engine runner's pending_checks pass); only in scripts that register one
+_FAIL_CHECK = '''\
     for _name, _obs, _fails in _dq_checks:
-        _got = _obs.get
-        _bad = {n: int(_got.get("violations_" + n, 0) or 0)
-                for n in _fails if int(_got.get("violations_" + n, 0) or 0) > 0}
-        if _bad:
-            raise RuntimeError(f"fail-expectations violated in {_name}: {_bad}")
+        check_failures(_obs, _fails)
+'''
+
+_FOOTER = '''\
     # auto-compaction (lhp.autoOptimize.maxFiles), deferred to after every
     # action like the engine (operators/write.py:run_pending_compactions):
     # compacting mid-build would delete the files behind DataFrames already
@@ -232,10 +227,6 @@ _FOOTER = '''\
                 _tf, indent=2, sort_keys=True)
     return written
 '''
-
-
-def _emit_sql(q: str) -> str:
-    return repr(q)
 
 
 def _py_ident(name: str) -> str:
@@ -301,60 +292,67 @@ def _emit_python_call(a: Action, call_shape: str) -> list[str]:
     return lines
 
 
-# Engine functions a compiled script carries: (group, engine module, the
-# imports their source needs, the functions). The CDC group copies the
-# module's own STANDALONE_CONSTANTS and STANDALONE_FUNCTIONS lists.
+# (group, engine module, groups it also needs, the emitted call needing it);
+# a call is matched at a line start, so SQL text in a literal never matches
 _PRELUDE = (
-    ("cdc", "lakehouse_plumber_spark.operators.cdc",
-     ("from types import SimpleNamespace as CDCConfig", "from pyspark.sql import DataFrame"),
-     None),
-    ("drain", "lakehouse_plumber_spark.context",
-     ("from typing import Callable, Optional", "from pyspark.sql import DataFrame",
-      "from pyspark.sql.streaming import DataStreamWriter"),
-     ("run_available_now", "for_each_batch")),
-    ("zorder", "lakehouse_plumber_spark.llm.hashing", (), ("let_spark",)),
-    ("zorder", "lakehouse_plumber_spark.functions.zorder",
-     ("from pyspark.sql import DataFrame",),
-     ("zorder_key_expr", "with_zorder_key", "morton_layout")),
+    ("cdc", "lakehouse_plumber_spark.operators.cdc", (), r"_dc = _data_columns\("),
+    ("drain", "lakehouse_plumber_spark.context", (), r"(for_each_batch|run_available_now)\("),
+    ("zorder", "lakehouse_plumber_spark.functions.zorder", (), r"\w+ = morton_layout\("),
+    ("expectations", "lakehouse_plumber_spark.expectations", (),
+     r"df, \w+, \w+ = apply_expectations\("),
+    ("quarantine", "lakehouse_plumber_spark.operators.quarantine", ("expectations",),
+     r"\w+, \w+ = quarantine_split\("),
+    ("incremental", "lakehouse_plumber_spark.operators.incremental", (),
+     r"\w+ = (finalize_partials|recompute_aggs)\("),
 )
 
-# group -> the emitted call that needs it, anchored at a line start so SQL
-# text (always one repr'd literal inside a call) can never match
-_PRELUDE_USE = {
-    "cdc": r"_dc = _data_columns\(",
-    "drain": r"(for_each_batch|run_available_now)\(",
-    "zorder": r"\w+ = morton_layout\(",
-}
+
+@functools.lru_cache(maxsize=None)
+def _group_source(module: str) -> tuple[list[str], tuple[str, ...], str]:
+    """(source files, imports, source text) of one module's prelude group."""
+    import importlib
+    import inspect
+
+    mod = importlib.import_module(module)
+    fns = [getattr(mod, f) for f in mod.STANDALONE_FUNCTIONS]
+    files = ["# " + m.replace(".", "/") + ".py" for m in dict.fromkeys(f.__module__ for f in fns)]
+    copied = [f"{c} = {getattr(mod, c)!r}" for c in getattr(mod, "STANDALONE_CONSTANTS", ())]
+    copied += [inspect.getsource(f).rstrip() for f in fns]
+    return files, mod.STANDALONE_IMPORTS, "\n\n\n".join(copied)
 
 
 def _prelude(body: str) -> str:
-    """Module-level block of a compiled script: the engine's own functions
-    that `body` (the emitted action lines) calls, their source copied
-    verbatim at compile time. `CDCConfig` binds the SCD functions'
-    annotation name to a plain namespace; each CDC action builds its config
-    from the fields they read. Empty when `body` calls none of them."""
-    import importlib
-    import inspect
-    import re
-
-    needs = {g for g, use in _PRELUDE_USE.items() if re.search(rf"^\s+{use}", body, re.M)}
+    """The engine functions `body` (the emitted action lines) calls, as the
+    module-level block of a script; empty when it calls none."""
+    needs = {g for g, _, _, use in _PRELUDE if re.search(rf"^\s+{use}", body, re.M)}
+    for group, _, requires, _ in reversed(_PRELUDE):
+        if group in needs:
+            needs.update(requires)
     if not needs:
         return ""
     lines = ["# The engine's own functions, copied verbatim at compile time from:"]
     imports: list[str] = []
     copied: list[str] = []
-    for group, module, imps, fns in _PRELUDE:
-        if group not in needs:
-            continue
-        mod = importlib.import_module(module)
-        lines.append("# " + module.replace(".", "/") + ".py")
-        imports += [i for i in imps if i not in imports]
-        if fns is None:
-            copied += ["", *(f"{c} = {getattr(mod, c)!r}" for c in mod.STANDALONE_CONSTANTS)]
-            fns = mod.STANDALONE_FUNCTIONS
-        for fn in fns:
-            copied += ["", "", inspect.getsource(getattr(mod, fn)).rstrip()]
+    for group, module, _, _ in _PRELUDE:
+        if group in needs:
+            files, imps, text = _group_source(module)
+            lines += files
+            imports += [i for i in imps if i not in imports]
+            copied += ["", "", text]
     return "\n".join(lines + imports + copied) + "\n\n"
+
+
+@functools.lru_cache(maxsize=None)
+def _scd_config_fields() -> tuple[str, ...]:
+    """The `cfg.` fields the SCD functions read."""
+    import inspect
+
+    from lakehouse_plumber_spark.operators import cdc
+
+    return tuple(sorted({
+        m for fn in cdc.STANDALONE_FUNCTIONS
+        for m in re.findall(r"\bcfg\.(\w+)", inspect.getsource(getattr(cdc, fn)))
+    }))
 
 
 def _emit_scd_apply(cfg) -> list[str]:
@@ -362,17 +360,8 @@ def _emit_scd_apply(cfg) -> list[str]:
     visible SCD table `_out`, through the engine functions that
     `_prelude` copies — the same dedup and rebuild the engine's merge
     runs, over all events instead of one batch and the affected keys' log."""
-    import inspect
-    import re
-
-    from lakehouse_plumber_spark.operators import cdc
-
-    read = sorted({
-        m for fn in cdc.STANDALONE_FUNCTIONS
-        for m in re.findall(r"\bcfg\.(\w+)", inspect.getsource(getattr(cdc, fn)))
-    })
     lines = ["    _cdc = CDCConfig("]
-    lines += [f"        {f}={getattr(cfg, f)!r}," for f in read]
+    lines += [f"        {f}={getattr(cfg, f)!r}," for f in _scd_config_fields()]
     lines += [
         "    )",
         "    _dc = _data_columns(_ev.columns, _cdc)",
@@ -566,87 +555,58 @@ def _emit_snapshot_cdc(a: Action) -> list[str]:
     return lines
 
 
-def _resolve_expectations(a: Action, base_dir):
-    """Inline expectations, or expectations_file loaded AT COMPILE TIME
-    against `base_dir` (the generated file must be self-contained — it
-    cannot resolve spec-relative paths at runtime)."""
+def _emit_expectations(a: Action, ident: str) -> tuple[list, list[str]]:
+    """The action's expectations — inline, or an expectations_file loaded at
+    compile time against `base_dir`, since the script cannot resolve
+    spec-relative paths — and the lines building them as literals."""
     from lakehouse_plumber_spark.expectations import load_expectations_file, parse_expectations
 
+    base = _compile_base_dir.get()
     if a.expectations_inline is not None:
-        return parse_expectations(a.expectations_inline)
-    if a.expectations_file and base_dir is not None:
-        import os
-
-        path = a.expectations_file
-        if not os.path.isabs(path):
-            path = os.path.join(base_dir, path)
-        return load_expectations_file(path)
-    raise NotImplementedError(
-        f"data_quality {a.name!r}: needs inline expectations, or pass "
-        f"base_dir to compile_flowgroup so expectations_file resolves at "
-        f"compile time"
-    )
+        exps = parse_expectations(a.expectations_inline)
+    elif a.expectations_file and base is not None:
+        exps = load_expectations_file(os.path.join(base, a.expectations_file))
+    else:
+        raise NotImplementedError(
+            f"data_quality {a.name!r}: needs inline expectations, or pass base_dir to "
+            "compile_flowgroup so expectations_file resolves at compile time"
+        )
+    return exps, [f"    _exps_{ident} = ["] + [
+        f"        Expectation(name={e.name!r}, constraint={e.constraint!r}, action={e.action!r}),"
+        for e in exps
+    ] + ["    ]"]
 
 
 def _emit_quarantine(a: Action) -> list[str]:
-    """data_quality quarantine compiled to standalone source (reference
-    data_quality_quarantine.py.j2:30-215, both the batch and the streaming
-    template paths).
-
-    The engine's recycle channel is the store's change feed (operators flag
-    DLQ rows fixed); a standalone script has no store, so the generated
-    contract is a FIX INBOX: drop parquet files with (_dlq_sk, _row_data)
-    under `<out_dir>/_dlq_fixes/<table>/`. Each run:
-      1. splits clean/bad, appends NEW bad rows to the DLQ table
-         (insert-only anti-join on the content hash `_dlq_sk`);
-      2. consumes fix files not listed in the `_consumed` marker, re-types
-         + re-validates them, appends survivors to a recycled outbox
-         (first-time sks only — exactly once per fixed row);
-      3. batch: returns clean ∪ outbox; streaming (mirroring the engine,
-         operators/quarantine.py:run_quarantine): each micro-batch goes
-         through the DLQ merge in `for_each_batch` with the epoch replay
-         guard, clean rows append to a `_dlq_staging` table, newly-fixed
-         rows append there once after the drain, and the registered view is
-         a STREAM read of the staging table (stream in -> stream out).
-    """
-    exps = _resolve_expectations(a, _compile_base_dir.get())
+    """data_quality quarantine (reference data_quality_quarantine.py.j2,
+    batch and streaming) through the engine's `quarantine_split` and
+    `_parse_and_revalidate`. With no store change feed, fixes come in
+    through a FIX INBOX: parquet files of (_dlq_sk, _row_data) dropped under
+    `<out_dir>/_dlq_fixes/<table>/`. Each run appends new DLQ rows
+    (insert-only on `_dlq_sk`), consumes unseen fix files into an outbox of
+    first-time, re-validated fixes, and returns clean ∪ outbox; a stream
+    merges per micro-batch (replay-guarded) into a staging table that
+    downstream streams from, as the engine's run_quarantine does."""
     qcfg = a.quarantine
     if qcfg is None:
         raise NotImplementedError(f"quarantine {a.name!r} missing quarantine config")
-    dlq = qcfg.dlq_table
-    source_table = qcfg.source_table or str(a.source)
+    dlq = qcfg.dlq_table.replace(".", "/")
     ident = _py_ident(a.name)
-    keep = " AND ".join(f"coalesce(({e.constraint}), false)" for e in exps)
-    bad = " OR ".join(f"NOT coalesce(({e.constraint}), false)" for e in exps)
-    failed_rules = ("array_compact(array(" + ", ".join(
-        f"CASE WHEN NOT coalesce(({e.constraint}), false) THEN "
-        f"named_struct('name', '{e.name}', 'constraint', {e.constraint!r}) END"
-        for e in exps
-    ) + "))")
-    lines = [
-        f"    df = views[{str(a.source)!r}]",
-        f"    _dlq_path_{ident} = os.path.join(out_dir, '_dlq', {dlq.replace('.', '/')!r})",
-        f"    _fix_path_{ident} = os.path.join(out_dir, '_dlq_fixes', {dlq.replace('.', '/')!r})",
-        f"    _outbox_path_{ident} = os.path.join(out_dir, '_dlq_outbox', {dlq.replace('.', '/')!r})",
+    lines = [f"    df = views[{str(a.source)!r}]"] + _emit_expectations(a, ident)[1] + [
+        f"    _dlq_path_{ident} = os.path.join(out_dir, '_dlq', {dlq!r})",
+        f"    _fix_path_{ident} = os.path.join(out_dir, '_dlq_fixes', {dlq!r})",
+        f"    _outbox_path_{ident} = os.path.join(out_dir, '_dlq_outbox', {dlq!r})",
         f"    _consumed_{ident} = os.path.join(_fix_path_{ident}, '_consumed')",
-        f"    def _q_merge_{ident}(_bdf):",
-        "        # one (micro-)batch through the DLQ merge; returns clean rows",
-        f"        _clean_b = _bdf.filter(F.expr({keep!r}))",
-        f"        _bad_b = (_bdf.filter(F.expr({bad!r}))",
-        f"                  .withColumn('_dlq_failed_rules', F.to_json(F.expr({failed_rules!r})))",
-        f"                  .withColumn('_dlq_source', F.lit({source_table!r}))",
-        "                  .withColumn('_row_data', F.to_json(F.struct(*[F.col(c) for c in _bdf.columns])))",
-        f"                  .withColumn('_dlq_sk', F.xxhash64(F.lit({source_table!r}), F.col('_row_data')))",
-        "                  .select('_dlq_sk', '_dlq_source', '_dlq_failed_rules', '_row_data'))",
+        f"    def _q_merge_{ident}(_bdf):  # one (micro-)batch; returns its clean rows",
+        f"        _clean_b, _bad_b = quarantine_split(_bdf, _exps_{ident}, "
+        f"{qcfg.source_table or str(a.source)!r})",
         "        # insert-only merge on the content hash: re-runs re-quarantine nothing",
         f"        if os.path.isdir(_dlq_path_{ident}):",
         f"            _seen = spark.read.parquet(_dlq_path_{ident}).select('_dlq_sk')",
         "            _bad_b = _bad_b.join(_seen, on='_dlq_sk', how='left_anti')",
         f"        _bad_b.write.mode('append').parquet(_dlq_path_{ident})",
         "        return _clean_b",
-        f"    def _q_consume_fixes_{ident}(_schema, _cols):",
-        "        # consume NEW fix files exactly once; returns first-time-fixed,",
-        "        # re-validated rows (also appended to the outbox), or None",
+        f"    def _q_consume_fixes_{ident}(_schema):  # new fix files, each consumed once",
         f"        os.makedirs(_fix_path_{ident}, exist_ok=True)",
         f"        _done = set(open(_consumed_{ident}).read().split()) if os.path.exists(_consumed_{ident}) else set()",
         f"        _new_files = sorted(f for f in os.listdir(_fix_path_{ident})",
@@ -655,38 +615,30 @@ def _emit_quarantine(a: Action) -> list[str]:
         "            return None",
         f"        _fixes = spark.read.parquet(*[os.path.join(_fix_path_{ident}, f) for f in _new_files])",
         "        _fixes = _fixes.dropDuplicates(['_dlq_sk'])",
-        f"        if os.path.isdir(_outbox_path_{ident}):",
-        "            # first-time fixes only: exactly once per recycled row",
+        f"        if os.path.isdir(_outbox_path_{ident}):  # first-time fixes only",
         f"            _prior = spark.read.parquet(_outbox_path_{ident}).select('_dlq_sk')",
         "            _fixes = _fixes.join(_prior, on='_dlq_sk', how='left_anti')",
-        "        _typed = _fixes.select('_dlq_sk', F.from_json('_row_data', _schema).alias('__row'))",
-        "        _typed = _typed.select('_dlq_sk', *[F.col('__row.' + c).alias(c) for c in _cols])",
-        f"        _typed = _typed.filter(F.expr({keep!r}))  # re-validate before release",
+        f"        _typed = _parse_and_revalidate(_fixes, _schema, _exps_{ident}, keep=('_dlq_sk',))",
         f"        _typed.write.mode('append').parquet(_outbox_path_{ident})",
         f"        with open(_consumed_{ident}, 'a') as _fh:",
         "            _fh.write('\\n'.join(_new_files) + '\\n')",
         "        return _typed.drop('_dlq_sk')",
         "    if df.isStreaming:",
-        f"        _stage_path_{ident} = os.path.join(out_dir, '_dlq_staging', {dlq.replace('.', '/')!r})",
+        f"        _stage_path_{ident} = os.path.join(out_dir, '_dlq_staging', {dlq!r})",
         f"        def _one_batch_{ident}(_bdf, _epoch):",
         f"            _q_merge_{ident}(_bdf).write.mode('append').parquet(_stage_path_{ident})",
         f"        _schema_{ident} = df.schema",
-        f"        _cols_{ident} = list(df.columns)",
-        "        # the staging append is not idempotent: replayed epochs are skipped",
         f"        for_each_batch(df, _one_batch_{ident}, _ckpt({a.name!r}), guard=True)",
-        f"        _rec = _q_consume_fixes_{ident}(_schema_{ident}, _cols_{ident})",
+        f"        _rec = _q_consume_fixes_{ident}(_schema_{ident})",
         "        if _rec is not None:",
         f"            _rec.write.mode('append').parquet(_stage_path_{ident})",
-        f"        if not os.path.isdir(_stage_path_{ident}):",
-        "            # every row quarantined so far: stage an empty table so the",
-        "            # downstream stream still binds",
+        f"        if not os.path.isdir(_stage_path_{ident}):  # so the stream below binds",
         f"            spark.createDataFrame([], _schema_{ident}).write.mode('overwrite').parquet(_stage_path_{ident})",
-        "        # stream in -> stream out: downstream reads the staging table",
-        "        # incrementally with its own checkpoint (engine semantics)",
+        "        # stream in -> stream out, as in the engine",
         f"        df = spark.readStream.schema(_schema_{ident}).parquet(_stage_path_{ident})",
         "    else:",
         f"        _clean = _q_merge_{ident}(df)",
-        f"        _q_consume_fixes_{ident}(df.schema, list(df.columns))",
+        f"        _q_consume_fixes_{ident}(df.schema)",
         f"        if os.path.isdir(_outbox_path_{ident}):",
         f"            _recycled = spark.read.parquet(_outbox_path_{ident}).drop('_dlq_sk')",
         "            df = _clean.unionByName(_recycled)",
@@ -697,37 +649,37 @@ def _emit_quarantine(a: Action) -> list[str]:
 
 
 def _emit_incremental_mv(a: Action) -> list[str]:
-    """Incremental MV compiled as accumulate-then-recompute.
+    """Incremental MV: the input drains into a staging table (checkpointed,
+    replay-guarded) and the MV is `finalize_partials` of `batch_partials`
+    over all of it (`recompute_aggs` for non-mergeable aggregates)."""
+    from lakehouse_plumber_spark.operators.incremental import non_mergeable_aggs, parse_aggs
 
-    The engine maintains this MV from mergeable partial aggregates
-    (operators/incremental.py); its contract — tested by
-    tests/test_incremental_mv.py:test_multi_batch_equals_full_recompute —
-    is that the table CONTENTS equal a full recompute over all data seen.
-    The standalone script therefore drains the (possibly streaming) source
-    into an append-only staging table (checkpointed: each run adds only new
-    data; replay-guarded: a replayed epoch is not staged twice) and
-    recomputes the aggregate over it — same table, full-refresh cost.
-    Incremental COST needs the engine's bucketed partial-agg state; run
-    with PipelineRunner when that matters.
-    """
     wt = a.write_target
     cfg = wt.incremental_config
     if cfg is None:
         raise NotImplementedError(f"incremental MV {a.name!r} missing incremental_config")
     name = wt.full_name
     ident = _py_ident(a.name)
-    agg_select = ", ".join(list(cfg.group_by) + [f"{expr} AS {alias}" for alias, expr in cfg.aggs.items()])
-    group_by = ", ".join(cfg.group_by)
-    return [
+    gb = list(cfg.group_by)
+    lines = [
         f"    df = views[{str(a.source)!r}]",
         f"    _stage_{ident} = os.path.join(out_dir, '_imv_staging', {name.replace('.', '/')!r})",
         f"    _mv_path_{ident} = _tbl_path({name!r})",
         f"    for_each_batch(df, lambda b, _e: b.write.mode('append').parquet(_stage_{ident}),",
         f"                   _ckpt({a.name!r}), guard=True)",
         f"    _all = spark.read.parquet(_stage_{ident})",
-        f"    _all.createOrReplaceTempView('_imv_src_{ident}')",
-        f"    _mv = spark.sql(\"SELECT {agg_select} FROM _imv_src_{ident} GROUP BY {group_by}\")",
-        f"    _mv.write.mode('overwrite').parquet(_mv_path_{ident})",
+    ]
+    if non_mergeable_aggs(cfg.aggs):
+        lines.append(f"    _mv = recompute_aggs(_all, {gb!r}, {dict(cfg.aggs)!r})")
+    else:
+        parsed = parse_aggs(cfg.aggs)
+        lines.append(f"    _mv = finalize_partials(batch_partials(_all, {gb!r}, {parsed!r}), "
+                     f"{gb!r}, {parsed!r})")
+    w = "_mv.write.mode('overwrite')"
+    if wt.partition_columns:
+        w += f".partitionBy(*{list(wt.partition_columns)!r})"
+    return lines + [
+        f"    {w}.parquet(_mv_path_{ident})",
         f"    written[{name!r}] = spark.read.parquet(_mv_path_{ident})",
     ]
 
@@ -847,7 +799,7 @@ def _compile_action(a: Action) -> list[str]:
     if a.type == ActionType.LOAD and kind in ("sql", "delta"):
         if kind == "sql":
             q = a.source.get("sql") if isinstance(a.source, dict) else None
-            lines.append(f"    df = spark.sql({_emit_sql(q)})")
+            lines.append(f"    df = spark.sql({q!r})")
         else:
             src = a.source if isinstance(a.source, dict) else {}
             table = src.get("table")
@@ -859,41 +811,45 @@ def _compile_action(a: Action) -> list[str]:
         return lines + _register(a.target)
 
     if a.type == ActionType.LOAD and kind == "cloudfiles":
-        src = a.source if isinstance(a.source, dict) else {}
-        fmt = src.get("format", "json")
-        path = src.get("path")
-        from lakehouse_plumber_spark.operators.load import _CLOUDFILES_RENAME
+        from pyspark.errors import PySparkRuntimeError
 
-        opts: dict = {}
-        for k, v in (src.get("options") or {}).items():
-            mapped = _CLOUDFILES_RENAME.get(k, k if not k.startswith("cloudFiles.") else None)
-            if mapped and mapped != "__rescue_col__":
-                opts[mapped] = str(v)
-        for k, v in (src.get("format_options") or {}).items():
-            opts[k] = str(v)
-        if fmt == "csv":
-            opts.setdefault("header", "true")
-        ident = _py_ident(a.name)
+        from lakehouse_plumber_spark.operators.load import cloudfiles_reader
+
+        src = a.source if isinstance(a.source, dict) else {}
+        base = _compile_base_dir.get()
         stream = (a.readMode or "stream") == "stream"
+        try:
+            fmt, path, opts, schema = cloudfiles_reader(
+                src, src.get("path"), stream, lambda p: p if base is None else os.path.join(base, p)
+            )
+        except PySparkRuntimeError as e:  # a schema type only a Spark session parses
+            raise NotImplementedError(f"cloudfiles load {a.name!r}: declare its schema as "
+                                      f"DDL text to compile without Spark ({e})") from e
+        ident = _py_ident(a.name)
         lines.append(f"    _opts_{ident} = {opts!r}")
-        if stream:
+        if isinstance(schema, str):
+            lines.append(f"    _schema_{ident} = {schema!r}")
+        elif schema is not None:
+            lines += [
+                "    from pyspark.sql.types import StructType",
+                f"    _schema_{ident} = StructType.fromJson({schema.jsonValue()!r})",
+            ]
+        elif stream:
             lines += [
                 "    # file streams need a schema: infer once from a batch read",
                 f"    _schema_{ident} = spark.read.format({fmt!r}).options(**_opts_{ident}).load({path!r}).schema",
-                f"    df = (spark.readStream.format({fmt!r}).schema(_schema_{ident})",
-                f"          .options(**_opts_{ident}).load({path!r}))",
             ]
-        else:
-            lines.append(
-                f"    df = spark.read.format({fmt!r}).options(**_opts_{ident}).load({path!r})"
-            )
+        reader = f"spark.{'readStream' if stream else 'read'}.format({fmt!r})"
+        if schema is not None or stream:
+            reader += f".schema(_schema_{ident})"
+        lines.append(f"    df = {reader}.options(**_opts_{ident}).load({path!r})")
         return lines + _register(a.target)
 
     if a.type == ActionType.LOAD and kind == "python":
         return lines + _emit_python_call(a, "load") + _register(a.target)
 
     if a.type == ActionType.TRANSFORM and (a.transform_type is None or a.transform_type.value == "sql"):
-        lines.append(f"    df = spark.sql({_emit_sql(a.sql)})")
+        lines.append(f"    df = spark.sql({a.sql!r})")
         return lines + _register(a.target)
 
     if a.type == ActionType.TRANSFORM and a.transform_type.value == "python":
@@ -903,7 +859,7 @@ def _compile_action(a: Action) -> list[str]:
         ident = _py_ident(a.name)
         src_view = str(a.source)
         if a.sql:
-            lines.append(f"    df = spark.sql({_emit_sql(a.sql)})")
+            lines.append(f"    df = spark.sql({a.sql!r})")
         else:
             lines.append(f"    df = views[{src_view!r}]")
         lines += [
@@ -947,7 +903,7 @@ def _compile_action(a: Action) -> list[str]:
             plan=cfg.plan,
         )
         lines += [
-            f"    df = spark.sql({_emit_sql(sql)})",
+            f"    df = spark.sql({sql!r})",
             f"    df = df.orderBy(F.desc('score'), F.asc('doc_id')).limit({cfg.k})",
             "    df = df.withColumn('rank', F.row_number().over(",
             "        Window.orderBy(F.desc('score'), F.asc('doc_id'))).cast('int'))",
@@ -980,7 +936,7 @@ def _compile_action(a: Action) -> list[str]:
             f"md5(regexp_replace(lower(trim({cfg.text_col})), '\\\\s+', ' ')) AS __fp "
             f"FROM {str(a.source).replace('.', '__')}) GROUP BY __fp"
         )
-        lines.append(f"    df = spark.sql({_emit_sql(sql)})")
+        lines.append(f"    df = spark.sql({sql!r})")
         return lines + _register(a.target)
 
     if a.type == ActionType.TRANSFORM and a.transform_type.value == "sample":
@@ -1033,7 +989,7 @@ def _compile_action(a: Action) -> list[str]:
                 f"ELSE {int(cfg.default_rate * 1_000_000)} END"
             )
             sql = f"SELECT * FROM {view} WHERE ({bucket}) < {thr}"
-        lines.append(f"    df = spark.sql({_emit_sql(sql)})")
+        lines.append(f"    df = spark.sql({sql!r})")
         return lines + _register(a.target)
 
     if a.type == ActionType.TRANSFORM and a.transform_type.value == "knn":
@@ -1126,45 +1082,25 @@ def _compile_action(a: Action) -> list[str]:
                 f"contains(lower({cfg.text_col}), 'lorem ipsum') AS has_lorem "
                 f"FROM {view})"
             )
-        lines.append(f"    df = spark.sql({_emit_sql(sql)})")
+        lines.append(f"    df = spark.sql({sql!r})")
         return lines + _register(a.target)
 
     if a.type == ActionType.TRANSFORM and a.transform_type.value == "data_quality":
         if (a.mode or "dqe") == "quarantine":
             return lines + _emit_quarantine(a)
-        exps = _resolve_expectations(a, _compile_base_dir.get())
         ident = _py_ident(a.name)
-        drop_pred = " AND ".join(
-            f"coalesce(({e.constraint}), false)" for e in exps if e.action == "drop"
-        )
-        fail_names = [e.name for e in exps if e.action == "fail"]
-        lines += [
-            f"    df = views[{str(a.source)!r}]",
-            f"    _obs_{ident} = Observation('dq_{ident}')",
-            f"    _metrics_{ident} = [F.count(F.lit(1)).alias('rows_total')]",
+        exps, exp_lines = _emit_expectations(a, ident)
+        lines += [f"    df = views[{str(a.source)!r}]"] + exp_lines + [
+            f"    df, _obs_{ident}, _fails_{ident} = apply_expectations("
+            f"df, _exps_{ident}, {'dq_' + a.name!r})",
         ]
-        for e in exps:
-            lines.append(
-                f"    _metrics_{ident}.append(F.sum(F.when(~F.coalesce(F.expr({e.constraint!r}), "
-                f"F.lit(False)), 1).otherwise(0)).alias('violations_{e.name}'))"
-            )
         written_views = _compile_written_views.get()
-        orphaned = written_views is not None and str(a.target) not in written_views
-        if orphaned:
-            # no downstream write materializes this view, so the Observation
-            # would never populate and the footer's _obs.get would hang —
-            # mirror the engine's orphaned-view warning by not registering it
-            lines.append(
-                "    # NOTE: view not consumed by any write; fail-check not registered"
-            )
-        else:
-            lines += [
-                "    if not df.isStreaming:",
-                f"        df = df.observe(_obs_{ident}, *_metrics_{ident})",
-                f"        _dq_checks.append(({a.name!r}, _obs_{ident}, {fail_names!r}))",
-            ]
-        if drop_pred:
-            lines.append(f"    df = df.filter(F.expr({drop_pred!r}))")
+        if written_views is not None and str(a.target) not in written_views:
+            # no write materializes this view: its Observation would never
+            # fill and the footer's check would hang
+            lines.append("    # NOTE: view not consumed by any write; fail-check not registered")
+        elif any(e.action == "fail" for e in exps):
+            lines.append(f"    _dq_checks.append(({a.name!r}, _obs_{ident}, _fails_{ident}))")
         return lines + _register(a.target)
 
     if a.type == ActionType.TRANSFORM and a.transform_type.value == "schema":
@@ -1223,7 +1159,7 @@ def _compile_action(a: Action) -> list[str]:
             name = wt.full_name
             path_expr = f"_tbl_path({name!r})"
             if q:
-                lines.append(f"    df = spark.sql({_emit_sql(q)})")
+                lines.append(f"    df = spark.sql({q!r})")
             else:
                 lines.append(f"    df = views[{str(a.source)!r}]")
             if wt.row_filter:
@@ -1235,14 +1171,21 @@ def _compile_action(a: Action) -> list[str]:
             # same rule as the engine and tables.compact — partitionBy after
             # a range shuffle would explode file counts)
             mv_ccols = list(wt.cluster_columns or [])
-            if wt.cluster_by_auto and len(mv_ccols) >= 2 and not wt.partition_columns:
-                lines.append(f"    df = morton_layout(df, {mv_ccols!r})")
-            elif mv_ccols:
-                lines.append(f"    df = df.sortWithinPartitions(*{mv_ccols!r})")
             w = "df.write.mode('overwrite')"
             if wt.partition_columns:
                 w += f".partitionBy(*{wt.partition_columns!r})"
-            lines.append(f"    {w}.parquet({path_expr})")
+            if wt.cluster_by_auto and len(mv_ccols) >= 2 and not wt.partition_columns:
+                # persisted, so the query runs once (engine parity)
+                lines += [
+                    "    _src = df.persist()",
+                    f"    df = morton_layout(_src, {mv_ccols!r})",
+                    f"    {w}.parquet({path_expr})",
+                    "    _src.unpersist()",
+                ]
+            else:
+                if mv_ccols:
+                    lines.append(f"    df = df.sortWithinPartitions(*{mv_ccols!r})")
+                lines.append(f"    {w}.parquet({path_expr})")
             lines.append(f"    written[{name!r}] = spark.read.parquet({path_expr})")
             return lines
         if wt.type.value == "streaming_table" and wt.mode == "standard":
@@ -1321,7 +1264,10 @@ def compile_flowgroup(fg: FlowGroup, base_dir: str | None = None) -> str:
             body += lines + [""]
         body_text = "\n".join(body)
         head = _HEADER.format(pipeline=fg.pipeline, flowgroup=fg.flowgroup)
-        parts = (head, _prelude(body_text), _BUILD, body_text, _FOOTER)
+        checks = re.search(r"^\s+_dq_checks\.append\(", body_text, re.M) is not None
+        if checks:
+            body_text = "    _dq_checks = []\n" + body_text
+        parts = (head, _prelude(body_text), _BUILD, body_text, checks and _FAIL_CHECK, _FOOTER)
         return "\n".join(p for p in parts if p)
     finally:
         _compile_written_views.reset(wtoken)

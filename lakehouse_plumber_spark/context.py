@@ -13,6 +13,12 @@ from pyspark.sql.streaming import DataStreamWriter
 from lakehouse_plumber_spark.models import FlowGroup
 from lakehouse_plumber_spark.tables import ParquetTableStore
 
+# The drain a compiled script carries, copied verbatim by codegen.
+STANDALONE_IMPORTS = ("from typing import Callable", "from typing import Optional",
+                      "from pyspark.sql import DataFrame",
+                      "from pyspark.sql.streaming import DataStreamWriter")
+STANDALONE_FUNCTIONS = ("run_available_now", "for_each_batch")
+
 
 def run_available_now(writer: DataStreamWriter, ckpt: str) -> None:
     """Drain a streaming query to the end of its input and return: the

@@ -113,6 +113,13 @@ def _parse_expectations_text(data: bytes, is_json: bool) -> tuple[Expectation, .
     return tuple(parse_expectations(json.loads(data) if is_json else yaml.safe_load(data)))
 
 
+# What a compiled data_quality script carries, copied verbatim by codegen.
+STANDALONE_IMPORTS = ("from dataclasses import dataclass", "from typing import Optional",
+                      "from pyspark.sql import DataFrame", "from pyspark.sql import Observation")
+STANDALONE_FUNCTIONS = ("Expectation", "ExpectationFailedError", "combined_predicate",
+                        "apply_expectations", "check_failures")
+
+
 def combined_predicate(exps: list[Expectation]) -> Optional[str]:
     """AND of all constraints (the clean-path predicate)."""
     if not exps:
@@ -136,21 +143,22 @@ def apply_expectations(
     """Apply warn/drop semantics; return (df, observation, fail_expectations).
 
     The observation carries `violations_<name>` counters for every expectation
-    plus `rows_total`; callers read `observation.get` after an action runs.
-    Fail expectations are returned for the caller to assert on (batch: after
-    materialization; streaming: per micro-batch) — the count is also observed.
+    plus `rows_total`; callers read `observation.get` after an action runs
+    and assert the returned fail expectations on it. Spark's Observation
+    refuses a streaming frame, so a stream gets no observation (None).
     """
     if not exps:
         return df, None, []
-    obs = Observation(observation_name)
-    metrics = [F.count(F.lit(1)).alias("rows_total")]
-    for e in exps:
-        metrics.append(
-            F.sum(
-                F.when(~F.coalesce(F.expr(e.constraint), F.lit(False)), 1).otherwise(0)
-            ).alias(f"violations_{e.name}")
-        )
-    df = df.observe(obs, *metrics)
+    obs = None if df.isStreaming else Observation(observation_name)
+    if obs is not None:
+        metrics = [F.count(F.lit(1)).alias("rows_total")]
+        for e in exps:
+            metrics.append(
+                F.sum(
+                    F.when(~F.coalesce(F.expr(e.constraint), F.lit(False)), 1).otherwise(0)
+                ).alias(f"violations_{e.name}")
+            )
+        df = df.observe(obs, *metrics)
     drop_exps = [e for e in exps if e.action == "drop"]
     fail_exps = [e for e in exps if e.action == "fail"]
     if drop_exps:

@@ -30,6 +30,10 @@ from pyspark.sql import functions as F
 
 from lakehouse_plumber_spark.llm.hashing import let_spark
 
+# What a compiled `cluster_by_auto` script carries, copied verbatim by codegen.
+STANDALONE_IMPORTS = ("from pyspark.sql import DataFrame",)
+STANDALONE_FUNCTIONS = ("let_spark", "zorder_key_expr", "with_zorder_key", "morton_layout")
+
 
 def zorder_key_expr(ranges: list[tuple[str, float, float]], bits: int = 16) -> str:
     """Morton key expression from per-column (expr, lo, hi) ranges.

@@ -64,7 +64,9 @@ ROWS_PER_BUCKET = 2_000_000
 # The store-free bodies compiled CDC and snapshot-CDC scripts carry:
 # codegen copies these constants and the functions' source verbatim, so the
 # functions may use only each other, these constants, F, Window, DataFrame
-# and attributes of `cfg`.
+# and attributes of `cfg` (a plain namespace in a script).
+STANDALONE_IMPORTS = ("from types import SimpleNamespace as CDCConfig",
+                      "from pyspark.sql import DataFrame")
 STANDALONE_CONSTANTS = (
     "START_COL", "END_COL", "_DEL", "_TRUNC", "_PRIO", "TOMBSTONE", "EVENT_DEL", "BUCKET_COL",
 )

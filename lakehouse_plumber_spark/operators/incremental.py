@@ -45,6 +45,11 @@ def _match_mergeable(spec: str):
 BUCKET_COL = "__gb"
 AGG_GROUPS_PER_BUCKET = 1_000_000
 
+# What a compiled incremental-MV script carries, copied verbatim by codegen.
+STANDALONE_IMPORTS = ("from typing import Sequence", "from pyspark.sql import DataFrame")
+STANDALONE_FUNCTIONS = ("_stabilize_partials", "batch_partials", "finalize_partials",
+                        "recompute_aggs")
+
 
 def _creation_buckets(first_batch_groups: int) -> int:
     from lakehouse_plumber_spark.tables import adaptive_bucket_count
@@ -166,17 +171,8 @@ def incremental_update(
         store.set_meta(state_table, "agg_buckets", n_buckets)
 
 
-def finalize_incremental(
-    store: ParquetTableStore,
-    target: str,
-    state_table: str,
-    group_by: Sequence[str],
-    aggs: dict[str, str],
-    partition_columns: Optional[list[str]] = None,
-) -> None:
-    """Visible MV = finalized projection of the state (avg = sum/count)."""
-    parsed = parse_aggs(aggs)
-    state = store.read(state_table)
+def finalize_partials(state: DataFrame, group_by: Sequence[str], parsed) -> DataFrame:
+    """Visible MV = finalized projection of partials (avg = sum/count)."""
     cols = [F.col(c) for c in group_by]
     for alias, fn, _ in parsed:
         if fn == "sum":
@@ -191,4 +187,22 @@ def finalize_incremental(
             cols.append(F.col(f"__p_{alias}_min").alias(alias))
         elif fn == "max":
             cols.append(F.col(f"__p_{alias}_max").alias(alias))
-    store.overwrite(target, state.select(*cols), partition_columns=partition_columns)
+    return state.select(*cols)
+
+
+def finalize_incremental(
+    store: ParquetTableStore,
+    target: str,
+    state_table: str,
+    group_by: Sequence[str],
+    aggs: dict[str, str],
+    partition_columns: Optional[list[str]] = None,
+) -> None:
+    """Overwrite the visible MV with `finalize_partials` of the state."""
+    rows = finalize_partials(store.read(state_table), group_by, parse_aggs(aggs))
+    store.overwrite(target, rows, partition_columns=partition_columns)
+
+
+def recompute_aggs(rows: DataFrame, group_by: Sequence[str], aggs: dict[str, str]) -> DataFrame:
+    """The MV in full over all rows: the non-mergeable fallback."""
+    return rows.groupBy(*group_by).agg(*[F.expr(spec).alias(alias) for alias, spec in aggs.items()])

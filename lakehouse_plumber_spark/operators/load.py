@@ -7,12 +7,14 @@ Source config lives in ``action.source`` (a dict for loads).
 from __future__ import annotations
 
 import importlib.util
+import os
 import re
 import sys
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from lakehouse_plumber_spark.context import BuildContext
 from lakehouse_plumber_spark.models import Action
@@ -109,68 +111,73 @@ def _meta(ctx: BuildContext, action: Action, df: DataFrame, file_source: bool) -
     )
 
 
+def cloudfiles_reader(
+    src: dict[str, Any], path: str, stream: bool, resolve_path: Callable[[str], str]
+) -> tuple[str, str, dict[str, str], Any]:
+    """`(format, path, reader options, schema)` of a cloudfiles load at
+    `path`; the engine calls it at run time, codegen at compile time. A DDL
+    schema stays text (no Spark session needed); json/csv rescue corrupt
+    records into the rescue column, added to a declared schema."""
+    fmt = src.get("format", "json")
+    opts: dict[str, str] = {}
+    rescue_col = "_rescued_data"
+    for k, v in (src.get("options") or {}).items():
+        mapped = _CLOUDFILES_RENAME.get(k, k if not k.startswith("cloudFiles.") else None)
+        if mapped == "__rescue_col__":
+            rescue_col = str(v)
+        elif mapped:
+            opts[mapped] = str(v)
+    for k, v in (src.get("format_options") or {}).items():
+        opts[k] = str(v)
+
+    schema = src.get("schema")
+    if not schema and src.get("schema_file"):
+        schema = resolve_path(src["schema_file"])
+    ddl = isinstance(schema, str) and not schema.endswith((".yaml", ".yml", ".ddl", ".sql"))
+    if schema and not ddl:
+        schema = coerce_schema(schema)
+    if fmt in ("json", "csv"):
+        # rescue emulation: corrupt/extra data lands in the rescue column
+        opts.setdefault("mode", "PERMISSIVE")
+        opts.setdefault("columnNameOfCorruptRecord", rescue_col)
+        if ddl and not re.search(rf"(^|,)\s*`?{re.escape(rescue_col)}`?[\s:]", schema, re.I):
+            schema = f"{schema}, `{rescue_col}` STRING"
+        elif schema and not ddl and rescue_col not in schema.fieldNames():
+            schema = T.StructType([*schema.fields, T.StructField(rescue_col, T.StringType())])
+    if fmt == "csv":
+        opts.setdefault("header", "true")
+    if stream and os.path.isfile(path):
+        opts.setdefault("pathGlobFilter", os.path.basename(path))
+        path = os.path.dirname(path)
+    return fmt, path, opts, schema or None
+
+
 def load_cloudfiles(ctx: BuildContext, action: Action) -> DataFrame:
     """Incremental file ingestion — OSS Auto-Loader equivalent.
 
     Reference: src/lhp/generators/load/cloudfiles.py:60-198 /
     templates/load/cloudfiles.py.j2:22-51. On OSS the file source gives
     incremental listing + exactly-once via the stream checkpoint; rescue data
-    is emulated with PERMISSIVE mode + columnNameOfCorruptRecord for json/csv.
+    is emulated with PERMISSIVE mode + columnNameOfCorruptRecord for json/csv
+    (`cloudfiles_reader`).
 
     Scale: readers parallelize over files; ``maxFilesPerTrigger`` bounds
     micro-batch size; explicit schema avoids a full listing+inference pass.
     """
     src: dict[str, Any] = dict(action.source)  # type: ignore[arg-type]
-    fmt = src.get("format", "json")
-    path = ctx.resolve_path(src["path"])
-    reader_opts: dict[str, str] = {}
-    rescue_col = "_rescued_data"
     ignored = validate_cloudfiles_options(src.get("options") or {}, action.name)
     if ignored:
         ctx.log(action.name, "cloudfiles_options_ignored", options=ignored)
-    for k, v in (src.get("options") or {}).items():
-        mapped = _CLOUDFILES_RENAME.get(k, k if not k.startswith("cloudFiles.") else None)
-        if mapped == "__rescue_col__":
-            rescue_col = str(v)
-        elif mapped:
-            reader_opts[mapped] = str(v)
-    for k, v in (src.get("format_options") or {}).items():
-        reader_opts[k] = str(v)
-
-    schema = None
-    if src.get("schema"):
-        schema = coerce_schema(src["schema"])
-    elif src.get("schema_file"):
-        schema = coerce_schema(ctx.resolve_path(src["schema_file"]))
-
     stream = (action.readMode or "stream") == "stream"
-    if fmt in ("json", "csv"):
-        # rescue emulation: corrupt/extra data lands in the rescue column
-        reader_opts.setdefault("mode", "PERMISSIVE")
-        reader_opts.setdefault("columnNameOfCorruptRecord", rescue_col)
-        if schema is not None and rescue_col not in schema.fieldNames():
-            from pyspark.sql import types as T
-
-            schema = T.StructType(list(schema.fields) + [T.StructField(rescue_col, T.StringType())])
-    if fmt == "csv":
-        reader_opts.setdefault("header", "true")
-
-    import os as _os
-
-    if stream and _os.path.isfile(path):
-        # file-stream source requires a directory; narrow with a glob filter
-        reader_opts.setdefault("pathGlobFilter", _os.path.basename(path))
-        path = _os.path.dirname(path)
-    if stream:
-        reader = ctx.spark.readStream.format(fmt)
-        if schema is None:
-            # file streams require a schema: infer once from a batch read
-            schema = ctx.spark.read.format(fmt).options(**reader_opts).load(path).schema
+    fmt, path, reader_opts, schema = cloudfiles_reader(
+        src, ctx.resolve_path(src["path"]), stream, ctx.resolve_path
+    )
+    if stream and schema is None:
+        # file streams require a schema: infer once from a batch read
+        schema = ctx.spark.read.format(fmt).options(**reader_opts).load(path).schema
+    reader = (ctx.spark.readStream if stream else ctx.spark.read).format(fmt)
+    if schema is not None:
         reader = reader.schema(schema)
-    else:
-        reader = ctx.spark.read.format(fmt)
-        if schema is not None:
-            reader = reader.schema(schema)
     df = reader.options(**reader_opts).load(path)
     return _meta(ctx, action, df, file_source=True)
 

@@ -40,6 +40,12 @@ DLQ_BUCKET_COL = "_dlq_bucket"
 DLQ_ROWS_PER_BUCKET = 2_000_000
 RESCUE_COL = "_rescued_data"
 
+# What a compiled quarantine script carries next to the expectations group.
+STANDALONE_IMPORTS = ("from pyspark.sql import DataFrame",)
+STANDALONE_CONSTANTS = ("RESCUE_COL",)
+STANDALONE_FUNCTIONS = ("inverse_predicate", "_failed_rules_col", "patch_rescued",
+                        "quarantine_split", "_parse_and_revalidate")
+
 
 def _dlq_creation_buckets(first_batch_rows: int) -> int:
     from lakehouse_plumber_spark.tables import adaptive_bucket_count
@@ -141,21 +147,19 @@ def run_quarantine(
 
     clean = _quarantine_merge_batch(ctx, action, df, exps)
     _consume_fixed_into_outbox(ctx, df.schema, exps, dlq_table, first_time_only=False)
-    recycled = _read_recycled_outbox(ctx, df.schema, exps, dlq_table)
-    return clean if recycled is None else clean.unionByName(recycled)
+    outbox = f"{dlq_table}__outbox"
+    if not ctx.store.exists(outbox):
+        return clean
+    return clean.unionByName(_parse_and_revalidate(ctx.store.read(outbox), df.schema, exps))
 
 
-def _quarantine_merge_batch(
-    ctx: BuildContext, action: Action, df: DataFrame, exps: list[Expectation]
-) -> DataFrame:
-    """One batch through the DLQ merge; returns the clean rows."""
-    qcfg = action.quarantine
-    dlq_table = qcfg.dlq_table
-    source_table = qcfg.source_table or str(action.source)
+def quarantine_split(
+    df: DataFrame, exps: list[Expectation], source_table: str
+) -> tuple[DataFrame, DataFrame]:
+    """`(clean, dlq_rows)` of one batch: the rows passing every rule, and
+    the DLQ rows (step 2 above) of the others."""
     data_cols = df.columns
-
     clean = df.filter(F.expr(combined_predicate(exps)))
-
     bad = df.filter(F.expr(inverse_predicate(exps)))
     # fold rescued data into the stored payload AT QUARANTINE TIME (reference
     # data_quality_quarantine.py.j2:65-95 patches in the DLQ sink): an
@@ -174,9 +178,19 @@ def _quarantine_merge_batch(
         .withColumn("_dlq_ts", F.current_timestamp())
         .withColumn("_row_data", F.to_json(F.struct(*[F.col(c) for c in data_cols])))
     )
-    dlq_row = bad.select(
+    return clean, bad.select(
         "_dlq_sk", "_dlq_source", "_dlq_status", "_dlq_ts", "_row_data",
         F.to_json("_dlq_failed_rules").alias("_dlq_failed_rules"),
+    )
+
+
+def _quarantine_merge_batch(
+    ctx: BuildContext, action: Action, df: DataFrame, exps: list[Expectation]
+) -> DataFrame:
+    """One batch through the DLQ merge; returns the clean rows."""
+    dlq_table = action.quarantine.dlq_table
+    clean, dlq_row = quarantine_split(
+        df, exps, action.quarantine.source_table or str(action.source)
     )
 
     # idempotent insert-only merge on _dlq_sk (whenNotMatchedInsertAll),
@@ -305,22 +319,17 @@ def _consume_fixed_into_outbox(
     return out_df
 
 
-def _parse_and_revalidate(rows: DataFrame, schema, exps: list[Expectation]) -> DataFrame:
+def _parse_and_revalidate(
+    rows: DataFrame, schema, exps: list[Expectation], keep: tuple = ()
+) -> DataFrame:
     """_row_data JSON -> typed rows in ONE parse per row (reference uses
     per-field try_variant_get; from_json is the Spark-idiomatic equivalent
     and parses the document once), re-validated against the expectations.
-    No rescued patch here: the stored payload was patched at quarantine
-    time, so an operator's fix to _row_data is final."""
-    parsed = rows.select(F.from_json("_row_data", schema).alias("__row")).select(
-        *[F.col(f"__row.{f.name}").alias(f.name) for f in schema.fields]
+    `keep` columns of `rows` lead the typed ones. No rescued patch here:
+    the stored payload was patched at quarantine time, so an operator's fix
+    to _row_data is final."""
+    parsed = rows.select(*keep, F.from_json("_row_data", schema).alias("__row")).select(
+        *keep, *[F.col(f"__row.{f.name}").alias(f.name) for f in schema.fields]
     )
     return parsed.filter(F.expr(combined_predicate(exps)))
 
-
-def _read_recycled_outbox(
-    ctx: BuildContext, schema, exps: list[Expectation], dlq_table: str
-):
-    outbox = f"{dlq_table}__outbox"
-    if not ctx.store.exists(outbox):
-        return None
-    return _parse_and_revalidate(ctx.store.read(outbox), schema, exps)

@@ -558,7 +558,7 @@ def transform_data_quality(ctx: BuildContext, action: Action) -> DataFrame:
         return run_quarantine(ctx, action, df, exps)
 
     out, obs, fail_exps = apply_expectations(df, exps, observation_name=f"dq_{action.name}")
-    if obs is not None and not df.isStreaming:
+    if obs is not None:
         ctx.pending_checks.append((action.name, obs, fail_exps))
     ctx.log(action.name, "expectations_attached", rules=[e.name for e in exps], mode=mode)
     return out

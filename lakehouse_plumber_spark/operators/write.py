@@ -14,6 +14,12 @@ from pyspark.sql import functions as F
 from lakehouse_plumber_spark.context import BuildContext
 from lakehouse_plumber_spark.models import Action, WriteTarget
 from lakehouse_plumber_spark.operators.cdc import apply_changes, apply_snapshot
+from lakehouse_plumber_spark.operators.incremental import (
+    finalize_incremental,
+    incremental_update,
+    non_mergeable_aggs,
+    recompute_aggs,
+)
 from lakehouse_plumber_spark.operators.load import _import_module
 from lakehouse_plumber_spark.schema_parser import coerce_schema
 
@@ -393,9 +399,7 @@ def _write_mv_full_recompute(
         ctx.for_each_batch(
             df, lambda b, _e: ctx.store.append(base, b), "imv", action.name, replay_guard=base
         )
-        full = ctx.store.read(base).groupBy(*cfg.group_by).agg(
-            *[F.expr(spec).alias(alias) for alias, spec in cfg.aggs.items()]
-        )
+        full = recompute_aggs(ctx.store.read(base), cfg.group_by, cfg.aggs)
         with _clustered_for_write(full, wt) as (laid, owf):
             ctx.store.overwrite(
                 target, laid,
@@ -424,11 +428,6 @@ def write_materialized_view(ctx: BuildContext, action: Action) -> DataFrame:
     target = _table_name(ctx, wt)
 
     if wt.refresh_policy == "incremental":
-        from lakehouse_plumber_spark.operators.incremental import (
-            finalize_incremental,
-            incremental_update,
-        )
-
         cfg = wt.incremental_config
         if cfg is None:
             raise ValueError("refresh_policy: incremental requires incremental_config")
@@ -438,16 +437,10 @@ def write_materialized_view(ctx: BuildContext, action: Action) -> DataFrame:
                 "incremental materialized view needs a streaming source "
                 "(checkpointed incremental discovery is what bounds refresh work)"
             )
-        from lakehouse_plumber_spark.operators.incremental import non_mergeable_aggs
-
         bad = non_mergeable_aggs(cfg.aggs)
         if bad:
             # only reachable with on_non_mergeable='recompute' (the config
-            # validator rejects these otherwise): correctness fallback —
-            # append the streamed rows to a base table, recompute the MV in
-            # full per refresh. Work ∝ table, not batch; the imv_full_
-            # recompute event names the aggregates that forced it so the
-            # cost is attributable (and fixable by switching to a sketch).
+            # validator rejects these otherwise)
             return _write_mv_full_recompute(ctx, action, wt, target, cfg, df, bad)
         state = f"{target}__state"
         with _with_spark_conf(ctx.spark, wt.spark_conf):

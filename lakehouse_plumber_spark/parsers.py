@@ -34,13 +34,16 @@ from lakehouse_plumber_spark.substitution import substitute
 
 def deep_merge(base: dict, override: dict) -> dict:
     """Preset deep-merge (reference flowgroup_resolver.py:255-312): dicts merge
-    recursively, scalars/lists in the override win."""
-    out = copy.deepcopy(base)
-    for k, v in override.items():
-        if k in out and isinstance(out[k], dict) and isinstance(v, dict):
-            out[k] = deep_merge(out[k], v)
+    recursively, scalars/lists in the override win. The result shares no
+    mutable object with either input, and each value is copied once."""
+    out = {}
+    for k in {**base, **override}:
+        if k not in override:
+            out[k] = copy.deepcopy(base[k])
+        elif isinstance(base.get(k), dict) and isinstance(override[k], dict):
+            out[k] = deep_merge(base[k], override[k])
         else:
-            out[k] = copy.deepcopy(v)
+            out[k] = copy.deepcopy(override[k])
     return out
 
 
@@ -216,10 +219,11 @@ def load_flowgroup(
 ) -> FlowGroup:
     """Resolve a raw YAML dict into a validated FlowGroup model. `memo`
     (`_discovery_memo`) shares parsed presets and templates across the
-    flowgroups of one discovery; without it the call resolves its own."""
+    flowgroups of one discovery; without it the call resolves its own.
+    `spec` is not mutated: the merges copy, and `substitute` rebuilds every
+    dict and list."""
     if memo is None:
         memo = _discovery_memo()
-    spec = copy.deepcopy(spec)
     spec = _expand_template(
         spec, templates_dir, spec.get("template_parameters", {}) or {}, memo
     )

@@ -9,7 +9,7 @@ No engine import: this file is exactly what executes.
 import importlib.util
 import os
 
-from pyspark.sql import Observation, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 
@@ -24,7 +24,6 @@ def build(spark, out_dir):
     """Run the pipeline; writes tables under out_dir, returns {name: DataFrame}."""
     views = {}
     written = {}
-    _dq_checks = []
     _pending_compact = {}
     _uc_tags = {}
 
@@ -49,15 +48,6 @@ def build(spark, out_dir):
     df.write.mode('overwrite').parquet(_tbl_path('main.bronze.alice_orders_tagged'))
     written['main.bronze.alice_orders_tagged'] = spark.read.parquet(_tbl_path('main.bronze.alice_orders_tagged'))
 
-    # fail-expectation enforcement: observations are populated once the plans
-    # consuming them materialized (the writes above) — assert afterwards,
-    # mirroring the engine's pending_checks pass (runner.py)
-    for _name, _obs, _fails in _dq_checks:
-        _got = _obs.get
-        _bad = {n: int(_got.get("violations_" + n, 0) or 0)
-                for n in _fails if int(_got.get("violations_" + n, 0) or 0) > 0}
-        if _bad:
-            raise RuntimeError(f"fail-expectations violated in {_name}: {_bad}")
     # auto-compaction (lhp.autoOptimize.maxFiles), deferred to after every
     # action like the engine (operators/write.py:run_pending_compactions):
     # compacting mid-build would delete the files behind DataFrames already

@@ -678,21 +678,64 @@ def _cdc_scd_spec(scd):
     }
 
 
+def _dq_spec(mode, name="pos", action="drop", sql="SELECT id, id - 2 AS v FROM range(6)"):
+    """A batch data_quality flowgroup, dqe or quarantine, over `sql`."""
+    dq = {"name": "dq", "type": "transform", "transform_type": "data_quality",
+          "source": "v_src", "target": "v_ok",
+          "expectations_inline": [{"name": name, "constraint": "v > 0", "action": action}]}
+    if mode == "quarantine":
+        dq.update(mode="quarantine", quarantine={"dlq_table": "m.dlq.q"})
+    return {
+        "pipeline": "p", "flowgroup": f"dq_{mode}",
+        "actions": [
+            {"name": "ld", "type": "load", "target": "v_src", "source": {"type": "sql", "sql": sql}},
+            dq,
+            {"name": "wr", "type": "write", "source": "v_ok",
+             "write_target": {"type": "materialized_view", "database": "m.dq", "table": mode}},
+        ],
+    }
+
+
+def _imv_spec(aggs):
+    return {
+        "pipeline": "p", "flowgroup": "imvc",
+        "actions": [
+            {"name": "ld", "type": "load", "target": "v", "readMode": "stream",
+             "source": {"type": "cloudfiles", "path": "/land", "format": "parquet",
+                        "schema": "k STRING, amt DOUBLE"}},
+            {"name": "wr", "type": "write", "source": "v",
+             "write_target": {"type": "materialized_view", "database": "m.i", "table": "t",
+                              "refresh_policy": "incremental", "incremental_config": {
+                                  "group_by": ["k"], "aggs": aggs,
+                                  "on_non_mergeable": "recompute"}}},
+        ],
+    }
+
+
 def test_compiled_cdc_carries_engine_functions_verbatim():
     """Compiled scripts run the engine's own functions, copied at compile
     time — not an engine import and not a second copy of the logic — and
     only those they call: the SCD functions for a CDC write, the streaming
     drain for a write that can stream, the Morton layout for
-    cluster_by_auto."""
+    cluster_by_auto, the expectations for a data_quality action (the
+    quarantine functions too for quarantine mode), and the partial
+    aggregates or the full recompute for an incremental MV."""
     import inspect
 
-    from lakehouse_plumber_spark import context
+    from lakehouse_plumber_spark import context, expectations
     from lakehouse_plumber_spark.functions import zorder
-    from lakehouse_plumber_spark.operators import cdc
+    from lakehouse_plumber_spark.operators import cdc, incremental, quarantine
 
     scd = [cdc._dedup_key_seq, cdc._rebuild_scd2]
     drain = [context.run_available_now, context.for_each_batch]
     morton = [zorder.morton_layout]
+    dqe = [expectations.Expectation, expectations.ExpectationFailedError,
+           expectations.apply_expectations, expectations.check_failures]
+    quar = [quarantine.quarantine_split, quarantine.patch_rescued,
+            quarantine._parse_and_revalidate]
+    imv = [incremental.batch_partials, incremental.finalize_partials,
+           incremental.recompute_aggs]
+    every = scd + drain + morton + dqe + quar + imv
     stream = {
         "pipeline": "p", "flowgroup": "st",
         "actions": [
@@ -716,16 +759,23 @@ def test_compiled_cdc_carries_engine_functions_verbatim():
         (_cdc_scd_spec(2), scd + drain),  # the raw-event append drains too
         (stream, drain),
         (clustered, morton),
+        (_dq_spec("dqe"), dqe),
+        (_dq_spec("quarantine"), dqe + quar + drain),
+        (_imv_spec({"n": "count(*)", "s": "sum(amt)"}), imv + drain),
+        (_imv_spec({"n": "count(DISTINCT amt)"}), imv + drain),
         (FG_SPEC, []),
     ]:
         src = compile_flowgroup(load_flowgroup(spec))
         assert "import lakehouse_plumber_spark" not in src
-        for fn in scd + drain + morton:
+        for fn in every:
             label = (spec["flowgroup"], fn.__name__)
             if fn in carried:
                 assert inspect.getsource(fn) in src, label
             else:
-                assert f"def {fn.__name__}(" not in src, label
+                assert f"def {fn.__name__}(" not in src and f"class {fn.__name__}" not in src, label
+        assert "_dq_checks" not in src, spec["flowgroup"]  # no fail expectation here
+    src = compile_flowgroup(load_flowgroup(_dq_spec("dqe", action="fail")))
+    assert "_dq_checks = []" in src and "check_failures(_obs, _fails)" in src
 
 
 @pytest.mark.parametrize("scd", [1, 2])
@@ -1706,3 +1756,200 @@ def test_text_spec_validation():
         TextConfig(method="c4_rules", min_kept_lines=0)
     with _pytest.raises(ValueError, match="stride <= chunk_tokens"):
         TextConfig(method="chunk", chunk_tokens=64, stride=65)
+
+
+def _build_compiled(spark, spec, out):
+    """Compile `spec`, check the script parses, run its build(); returns
+    (the script's namespace, build()'s written tables)."""
+    import ast
+
+    src = compile_flowgroup(load_flowgroup(spec))
+    ast.parse(src)
+    ns: dict = {}
+    exec(compile(src, "<generated>", "exec"), ns)
+    return ns, ns["build"](spark, str(out))
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+@pytest.mark.parametrize("mode", ["dqe", "quarantine"])
+def test_quoted_expectation_name_compiles_and_builds(spark, runner, tmp_path, mode):
+    """An expectation name is data: a name with a quote compiles to a script
+    that parses and builds the engine's rows."""
+    spec = _dq_spec(mode, name="it's positive")
+    engine = _rows(runner.run(load_flowgroup(spec)).resolve_view(f"m.dq.{mode}"))
+    _, written = _build_compiled(spark, spec, tmp_path / "gen")
+    assert _rows(written[f"m.dq.{mode}"]) == engine == [(3, 1), (4, 2), (5, 3)]
+    if mode == "quarantine":
+        dlq = spark.read.parquet(str(tmp_path / "gen" / "_dlq" / "m" / "dlq" / "q"))
+        assert {r[0] for r in dlq.select("_dlq_failed_rules").collect()} == {
+            '[{"name":"it\'s positive","constraint":"v > 0"}]'}
+
+
+def test_compiled_fail_expectation_raises_engine_error(spark, runner, tmp_path):
+    """A violated fail expectation raises the engine's ExpectationFailedError
+    (a RuntimeError) with the same counts in the engine and the script."""
+    from lakehouse_plumber_spark.expectations import ExpectationFailedError
+
+    spec = _dq_spec("dqe", name="v_pos", action="fail")
+    with pytest.raises(ExpectationFailedError) as engine:
+        runner.run(load_flowgroup(spec))
+    src = compile_flowgroup(load_flowgroup(spec))
+    ns: dict = {}
+    exec(compile(src, "<generated>", "exec"), ns)
+    assert issubclass(ns["ExpectationFailedError"], RuntimeError)
+    with pytest.raises(ns["ExpectationFailedError"]) as gen:
+        ns["build"](spark, str(tmp_path / "gen"))
+    assert gen.value.failures == engine.value.failures == {"v_pos": 3}
+
+
+def test_compiled_incremental_mv_decimal_aggregates_match_engine(spark, runner, tmp_path):
+    """Decimal sum/avg over a stream: the compiled MV has the engine's
+    types (partials pinned to precision 38), its rows and its partitions."""
+    import os
+
+    land = tmp_path / "land"
+    for i in range(2):
+        spark.sql(f"SELECT CAST(id % 3 AS STRING) AS k, (id + {i}) / 7 AS amt FROM range(20)") \
+            .coalesce(1).write.mode("append").parquet(str(land))
+    spec = _imv_spec({"s": "sum(CAST(amt AS DECIMAL(18,6)))",
+                      "a": "avg(CAST(amt AS DECIMAL(18,6)))", "n": "count(*)"})
+    spec["actions"][0]["source"].update(
+        path=str(land), options={"cloudFiles.maxFilesPerTrigger": "1"})
+    spec["actions"][1]["write_target"]["partition_columns"] = ["k"]
+    engine = runner.run(load_flowgroup(spec)).resolve_view("m.i.t")
+    _, written = _build_compiled(spark, spec, tmp_path / "gen")
+    parts = {d for d in os.listdir(tmp_path / "gen" / "m" / "i" / "t") if "=" in d}
+    assert parts == {"k=0", "k=1", "k=2"}
+    assert written["m.i.t"].dtypes == engine.dtypes
+    assert dict(engine.dtypes)["s"] == "decimal(38,6)"
+    assert _rows(written["m.i.t"]) == _rows(engine) and len(_rows(engine)) == 3
+
+
+def _rescue_land(tmp_path):
+    land = tmp_path / "land"
+    land.mkdir()
+    (land / "a.json").write_text(
+        '{"id": 1, "v": 5}\n{"id": 2, "v": "x"}\n{"id": 3, "v": -1}\n{"id": 4, "v": "7"}\n')
+    return land
+
+
+_YAML_SCHEMA = {"columns": [{"name": "id", "type": "int"}, {"name": "v", "type": "int"}]}
+
+
+@pytest.mark.parametrize("read_mode,schema", [
+    ("batch", "id INT, v INT"), ("stream", "id INT, v INT"), ("stream", _YAML_SCHEMA)])
+def test_compiled_cloudfiles_reads_with_declared_schema(spark, runner, tmp_path, read_mode, schema):
+    """A compiled cloudfiles load reads with the declared schema (DDL text
+    or a schema dict) and the rescue column, as the engine does; a stream
+    over one file reads its directory filtered to it."""
+    land = _rescue_land(tmp_path)
+    (land / "other.json").write_text('{"id": 9, "v": 9}\n')
+    write = ({"type": "streaming_table", "database": "m.cf", "table": "t"} if read_mode == "stream"
+             else {"type": "materialized_view", "database": "m.cf", "table": "t"})
+    spec = {
+        "pipeline": "p", "flowgroup": "cf",
+        "actions": [
+            {"name": "ld", "type": "load", "target": "v", "readMode": read_mode,
+             "source": {"type": "cloudfiles", "format": "json", "schema": schema,
+                        "path": str(land / "a.json" if read_mode == "stream" else land)}},
+            {"name": "wr", "type": "write", "source": "v", "write_target": write},
+        ],
+    }
+    engine = runner.run(load_flowgroup(spec)).resolve_view("m.cf.t")
+    _, written = _build_compiled(spark, spec, tmp_path / "gen")
+    assert written["m.cf.t"].dtypes == engine.dtypes == [
+        ("id", "int"), ("v", "int"), ("_rescued_data", "string")]
+    assert _rows(written["m.cf.t"]) == _rows(engine)
+    assert len(_rows(engine)) == (4 if read_mode == "stream" else 5)
+
+
+def test_compiled_quarantine_of_rescued_rows_matches_engine(spark, runner, tmp_path):
+    """Rows with rescued data go through the engine's split in both paths:
+    the DLQ rows carry the same keys, patched payloads, failed rules and
+    columns, and the clean rows match."""
+    land = _rescue_land(tmp_path)
+    spec = {
+        "pipeline": "p", "flowgroup": "qr",
+        "actions": [
+            {"name": "ld", "type": "load", "target": "v_raw",
+             "source": {"type": "cloudfiles", "path": str(land), "format": "json",
+                        "schema": "id INT, v INT"}},
+            {"name": "dq", "type": "transform", "transform_type": "data_quality",
+             "source": "v_raw", "target": "v_clean", "mode": "quarantine",
+             "quarantine": {"dlq_table": "m.dlq.r"},
+             "expectations_inline": [
+                 {"name": "pos", "constraint": "v > 0", "type": "expect_or_drop"}]},
+            {"name": "wr", "type": "write", "source": "v_clean",
+             "write_target": {"type": "streaming_table", "database": "m.qr", "table": "t"}},
+        ],
+    }
+    clean = runner.run(load_flowgroup(spec)).resolve_view("m.qr.t")
+    engine_dlq = runner.store.read("m.dlq.r").drop("_dlq_bucket")
+    _, written = _build_compiled(spark, spec, tmp_path / "gen")
+    dlq = spark.read.parquet(str(tmp_path / "gen" / "_dlq" / "m" / "dlq" / "r"))
+    assert sorted(dlq.columns) == sorted(engine_dlq.columns)
+    cols = ["_dlq_sk", "_row_data", "_dlq_failed_rules"]
+    assert _rows(dlq.select(cols)) == _rows(engine_dlq.select(cols))
+    # id 4's rescued "7" is patched into the payload, id 2's "x" stays parked
+    assert '{"id":4,"v":7}' in {r[1] for r in _rows(dlq.select(cols))}
+    assert _rows(written["m.qr.t"]) == _rows(clean) == [(1, 5, None)]
+
+
+@pytest.mark.parametrize("path", ["engine", "compiled"])
+def test_cluster_by_auto_mv_evaluates_its_source_once(spark, runner, tmp_path, path):
+    """The Morton layout's stats and sample passes and the write read one
+    persisted copy of the MV's query, so its source runs once."""
+    ticks = spark.sparkContext.accumulator(0)
+
+    def lhp_tick(x):
+        ticks.add(1)
+        return x
+
+    spark.udf.register("lhp_tick", lhp_tick, "bigint")
+    spec = {
+        "pipeline": "p", "flowgroup": "zo1",
+        "actions": [
+            {"name": "ld", "type": "load", "target": "v",
+             "source": {"type": "sql",
+                        "sql": "SELECT lhp_tick(id) % 97 AS a, id % 89 AS b FROM range(1000)"}},
+            {"name": "wr", "type": "write", "source": "v",
+             "write_target": {"type": "materialized_view", "database": "m.z", "table": "t",
+                              "cluster_columns": ["a", "b"], "cluster_by_auto": True}},
+        ],
+    }
+    if path == "engine":
+        assert runner.run(load_flowgroup(spec)).resolve_view("m.z.t").count() == 1000
+    else:
+        assert _build_compiled(spark, spec, tmp_path / "gen")[1]["m.z.t"].count() == 1000
+    assert ticks.value == 1000
+
+
+@pytest.mark.parametrize("path", ["engine", "compiled"])
+def test_streaming_dqe_drops_rows(spark, runner, tmp_path, path):
+    """Spark's Observation refuses a streaming frame, so a data_quality
+    action over a stream drops rows without observing them, in the engine
+    and in compiled scripts."""
+    land = _rescue_land(tmp_path)
+    spec = {
+        "pipeline": "p", "flowgroup": "sdq",
+        "actions": [
+            {"name": "ld", "type": "load", "target": "v_raw",
+             "source": {"type": "cloudfiles", "path": str(land), "format": "json",
+                        "schema": "id INT, v INT"}},
+            {"name": "dq", "type": "transform", "transform_type": "data_quality",
+             "source": "v_raw", "target": "v_ok",
+             "expectations_inline": [
+                 {"name": "pos", "constraint": "v > 0", "type": "expect_or_drop"},
+                 {"name": "has_id", "constraint": "id IS NOT NULL", "type": "expect_or_fail"}]},
+            {"name": "wr", "type": "write", "source": "v_ok",
+             "write_target": {"type": "streaming_table", "database": "m.sd", "table": "t"}},
+        ],
+    }
+    if path == "engine":
+        got = runner.run(load_flowgroup(spec)).resolve_view("m.sd.t")
+    else:
+        got = _build_compiled(spark, spec, tmp_path / "gen")[1]["m.sd.t"]
+    assert _rows(got) == [(1, 5, None)]

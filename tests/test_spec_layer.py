@@ -6,6 +6,7 @@ aliases, and action-graph validation — the reference's compiler-test surface
 
 from __future__ import annotations
 
+import copy
 import os
 
 import pytest
@@ -16,6 +17,7 @@ from lakehouse_plumber_spark.expectations import parse_expectations
 from lakehouse_plumber_spark.models import SpecError
 from lakehouse_plumber_spark.parsers import (
     _discovery_memo,
+    _load_presets,
     deep_merge,
     load_flowgroup,
     load_flowgroup_file,
@@ -56,6 +58,37 @@ class TestPresetsTemplates:
         over = {"a": {"y": 3}, "lst": [9], "s": "win"}
         m = deep_merge(base, over)
         assert m == {"a": {"x": 1, "y": 3}, "lst": [9], "s": "win"}
+
+    def test_merged_spec_shares_nothing_with_memoized_inputs(self, tmp_path):
+        """Presets, templates and their parses are memoized per discovery;
+        a merged spec must own every dict and list it holds, or a later
+        change to one flowgroup's spec would reach the next one's."""
+        (tmp_path / "presets").mkdir()
+        (tmp_path / "presets" / "base.yaml").write_text(yaml.safe_dump(
+            {"defaults": {"variables": {"tier": "bronze", "tags": ["a", "b"]},
+                          "operational_metadata": ["_ingest_ts"]}}))
+        memo = _discovery_memo()
+        preset = _load_presets(["base"], str(tmp_path / "presets"), memo)
+        spec = {"pipeline": "p", "flowgroup": "f", "variables": {"tier": "gold"},
+                "actions": BASE_ACTIONS}
+        merged = deep_merge(preset, spec)
+        assert merged["variables"] == {"tier": "gold", "tags": ["a", "b"]}
+
+        def mutables(o):
+            if isinstance(o, (dict, list)):
+                yield id(o)
+                for v in (o.values() if isinstance(o, dict) else o):
+                    yield from mutables(v)
+
+        shared = set(mutables(merged)) & (
+            set(mutables(memo["presets"])) | set(mutables(preset)) | set(mutables(spec)))
+        assert not shared
+        # resolving a spec leaves it, and the memoized preset, as they were
+        before = copy.deepcopy((spec, memo["presets"]))
+        for _ in range(2):
+            fg = load_flowgroup({**spec, "presets": ["base"]},
+                                presets_dir=str(tmp_path / "presets"), memo=memo)
+        assert (spec, memo["presets"]) == before and fg.variables["tags"] == ["a", "b"]
 
     def test_preset_chain_with_extends(self, tmp_path):
         (tmp_path / "presets").mkdir()
