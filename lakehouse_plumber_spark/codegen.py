@@ -37,9 +37,9 @@ calls; each engine module declares its group (STANDALONE_*):
   with `check_failures` (`ExpectationFailedError`);
 - operators/quarantine.py: `quarantine_split` and `_parse_and_revalidate`;
 - operators/incremental.py: `batch_partials`, `finalize_partials` and
-  `recompute_aggs`.
-A cloudfiles load reads with what `cloudfiles_reader` decides at compile
-time (options, declared schema plus rescue column, PERMISSIVE rescue).
+  `recompute_aggs`;
+- operators/load.py: `rescued_schema` and `file_stream_path`, run by the
+  script; its reader options are `cloudfiles_options`, resolved at compile time.
 
 What differs from the engine is storage, not the operator bodies. An
 incremental MV stages its input rows and finalizes the partials of all of
@@ -292,18 +292,18 @@ def _emit_python_call(a: Action, call_shape: str) -> list[str]:
     return lines
 
 
-# (group, engine module, groups it also needs, the emitted call needing it);
-# a call is matched at a line start, so SQL text in a literal never matches
+# (group, engine module, the emitted call needing it); a call is matched at
+# a line start, so SQL text in a literal never matches
 _PRELUDE = (
-    ("cdc", "lakehouse_plumber_spark.operators.cdc", (), r"_dc = _data_columns\("),
-    ("drain", "lakehouse_plumber_spark.context", (), r"(for_each_batch|run_available_now)\("),
-    ("zorder", "lakehouse_plumber_spark.functions.zorder", (), r"\w+ = morton_layout\("),
-    ("expectations", "lakehouse_plumber_spark.expectations", (),
-     r"df, \w+, \w+ = apply_expectations\("),
-    ("quarantine", "lakehouse_plumber_spark.operators.quarantine", ("expectations",),
-     r"\w+, \w+ = quarantine_split\("),
-    ("incremental", "lakehouse_plumber_spark.operators.incremental", (),
+    ("cdc", "lakehouse_plumber_spark.operators.cdc", r"_dc = _data_columns\("),
+    ("drain", "lakehouse_plumber_spark.context", r"(for_each_batch|run_available_now)\("),
+    ("zorder", "lakehouse_plumber_spark.functions.zorder", r"\w+ = morton_layout\("),
+    ("expectations", "lakehouse_plumber_spark.expectations", r"_exps_\w+ = \["),
+    ("quarantine", "lakehouse_plumber_spark.operators.quarantine", r"\w+, \w+ = quarantine_split\("),
+    ("incremental", "lakehouse_plumber_spark.operators.incremental",
      r"\w+ = (finalize_partials|recompute_aggs)\("),
+    ("cloudfiles", "lakehouse_plumber_spark.operators.load",
+     r"\w+(, \w+)? = (rescued_schema|file_stream_path)\("),
 )
 
 
@@ -324,19 +324,16 @@ def _group_source(module: str) -> tuple[list[str], tuple[str, ...], str]:
 def _prelude(body: str) -> str:
     """The engine functions `body` (the emitted action lines) calls, as the
     module-level block of a script; empty when it calls none."""
-    needs = {g for g, _, _, use in _PRELUDE if re.search(rf"^\s+{use}", body, re.M)}
-    for group, _, requires, _ in reversed(_PRELUDE):
-        if group in needs:
-            needs.update(requires)
+    needs = {g for g, _, use in _PRELUDE if re.search(rf"^\s+{use}", body, re.M)}
     if not needs:
         return ""
     lines = ["# The engine's own functions, copied verbatim at compile time from:"]
     imports: list[str] = []
     copied: list[str] = []
-    for group, module, _, _ in _PRELUDE:
+    for group, module, _ in _PRELUDE:
         if group in needs:
             files, imps, text = _group_source(module)
-            lines += files
+            lines += [f for f in files if f not in lines]
             imports += [i for i in imps if i not in imports]
             copied += ["", "", text]
     return "\n".join(lines + imports + copied) + "\n\n"
@@ -813,36 +810,37 @@ def _compile_action(a: Action) -> list[str]:
     if a.type == ActionType.LOAD and kind == "cloudfiles":
         from pyspark.errors import PySparkRuntimeError
 
-        from lakehouse_plumber_spark.operators.load import cloudfiles_reader
+        from lakehouse_plumber_spark.operators.load import cloudfiles_options
+        from lakehouse_plumber_spark.schema_parser import coerce_schema
 
         src = a.source if isinstance(a.source, dict) else {}
-        base = _compile_base_dir.get()
+        fmt, opts, rescue = cloudfiles_options(src)
+        ident, path = _py_ident(a.name), repr(src.get("path"))
         stream = (a.readMode or "stream") == "stream"
-        try:
-            fmt, path, opts, schema = cloudfiles_reader(
-                src, src.get("path"), stream, lambda p: p if base is None else os.path.join(base, p)
-            )
-        except PySparkRuntimeError as e:  # a schema type only a Spark session parses
-            raise NotImplementedError(f"cloudfiles load {a.name!r}: declare its schema as "
-                                      f"DDL text to compile without Spark ({e})") from e
-        ident = _py_ident(a.name)
         lines.append(f"    _opts_{ident} = {opts!r}")
-        if isinstance(schema, str):
-            lines.append(f"    _schema_{ident} = {schema!r}")
-        elif schema is not None:
-            lines += [
-                "    from pyspark.sql.types import StructType",
-                f"    _schema_{ident} = StructType.fromJson({schema.jsonValue()!r})",
-            ]
-        elif stream:
-            lines += [
-                "    # file streams need a schema: infer once from a batch read",
-                f"    _schema_{ident} = spark.read.format({fmt!r}).options(**_opts_{ident}).load({path!r}).schema",
-            ]
+        if stream:
+            lines.append(f"    _path_{ident}, _opts_{ident} = file_stream_path({path}, _opts_{ident})")
+            path = f"_path_{ident}"
+        declared, base = src.get("schema"), _compile_base_dir.get()
+        if not declared and src.get("schema_file"):
+            declared = src["schema_file"] if base is None else os.path.join(base, src["schema_file"])
+        if isinstance(declared, str) and not declared.endswith((".yaml", ".yml", ".ddl", ".sql")):
+            parsed = f"T._parse_datatype_string({declared!r})"  # coerce_schema's DDL parser
+        elif declared:
+            try:
+                parsed = f"T.StructType.fromJson({coerce_schema(declared).jsonValue()!r})"
+            except PySparkRuntimeError as e:  # a schema type only a Spark session parses
+                raise NotImplementedError(f"cloudfiles load {a.name!r}: declare its schema as "
+                                          f"DDL text to compile without Spark ({e})") from e
+        if declared:
+            lines.append(f"    _schema_{ident} = rescued_schema({parsed}, {rescue!r})")
+        elif stream:  # file streams need a schema: infer once from a batch read
+            lines.append(f"    _schema_{ident} = spark.read.format({fmt!r}).options(**_opts_{ident})"
+                         f".load({path}).schema")
         reader = f"spark.{'readStream' if stream else 'read'}.format({fmt!r})"
-        if schema is not None or stream:
+        if declared or stream:
             reader += f".schema(_schema_{ident})"
-        lines.append(f"    df = {reader}.options(**_opts_{ident}).load({path!r})")
+        lines.append(f"    df = {reader}.options(**_opts_{ident}).load({path})")
         return lines + _register(a.target)
 
     if a.type == ActionType.LOAD and kind == "python":

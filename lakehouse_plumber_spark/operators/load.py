@@ -10,7 +10,7 @@ import importlib.util
 import os
 import re
 import sys
-from typing import Any, Callable
+from typing import Any, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -111,13 +111,9 @@ def _meta(ctx: BuildContext, action: Action, df: DataFrame, file_source: bool) -
     )
 
 
-def cloudfiles_reader(
-    src: dict[str, Any], path: str, stream: bool, resolve_path: Callable[[str], str]
-) -> tuple[str, str, dict[str, str], Any]:
-    """`(format, path, reader options, schema)` of a cloudfiles load at
-    `path`; the engine calls it at run time, codegen at compile time. A DDL
-    schema stays text (no Spark session needed); json/csv rescue corrupt
-    records into the rescue column, added to a declared schema."""
+def cloudfiles_options(src: dict[str, Any]) -> tuple[str, dict[str, str], Optional[str]]:
+    """`(format, reader options, rescue column)`: json/csv rescue corrupt
+    records PERMISSIVE-ly; other formats have no rescue column (None)."""
     fmt = src.get("format", "json")
     opts: dict[str, str] = {}
     rescue_col = "_rescued_data"
@@ -129,27 +125,32 @@ def cloudfiles_reader(
             opts[mapped] = str(v)
     for k, v in (src.get("format_options") or {}).items():
         opts[k] = str(v)
-
-    schema = src.get("schema")
-    if not schema and src.get("schema_file"):
-        schema = resolve_path(src["schema_file"])
-    ddl = isinstance(schema, str) and not schema.endswith((".yaml", ".yml", ".ddl", ".sql"))
-    if schema and not ddl:
-        schema = coerce_schema(schema)
-    if fmt in ("json", "csv"):
-        # rescue emulation: corrupt/extra data lands in the rescue column
-        opts.setdefault("mode", "PERMISSIVE")
-        opts.setdefault("columnNameOfCorruptRecord", rescue_col)
-        if ddl and not re.search(rf"(^|,)\s*`?{re.escape(rescue_col)}`?[\s:]", schema, re.I):
-            schema = f"{schema}, `{rescue_col}` STRING"
-        elif schema and not ddl and rescue_col not in schema.fieldNames():
-            schema = T.StructType([*schema.fields, T.StructField(rescue_col, T.StringType())])
+    if fmt not in ("json", "csv"):
+        return fmt, opts, None
+    opts.setdefault("mode", "PERMISSIVE")
+    opts.setdefault("columnNameOfCorruptRecord", rescue_col)
     if fmt == "csv":
         opts.setdefault("header", "true")
-    if stream and os.path.isfile(path):
-        opts.setdefault("pathGlobFilter", os.path.basename(path))
-        path = os.path.dirname(path)
-    return fmt, path, opts, schema or None
+    return fmt, opts, rescue_col
+
+
+# What a compiled cloudfiles load carries, copied verbatim by codegen.
+STANDALONE_IMPORTS = ("from typing import Optional", "from pyspark.sql import types as T")
+STANDALONE_FUNCTIONS = ("rescued_schema", "file_stream_path")
+
+
+def rescued_schema(schema: T.StructType, rescue_col: Optional[str]) -> T.StructType:
+    """A declared schema plus the string rescue column, unless it declares one."""
+    if rescue_col is None or rescue_col in schema.fieldNames():
+        return schema
+    return T.StructType([*schema.fields, T.StructField(rescue_col, T.StringType())])
+
+
+def file_stream_path(path: str, opts: dict[str, str]) -> tuple[str, dict[str, str]]:
+    """A file stream reads a directory: a single file reads its own, glob-filtered."""
+    if not os.path.isfile(path):
+        return path, opts
+    return os.path.dirname(path), {"pathGlobFilter": os.path.basename(path), **opts}
 
 
 def load_cloudfiles(ctx: BuildContext, action: Action) -> DataFrame:
@@ -158,8 +159,7 @@ def load_cloudfiles(ctx: BuildContext, action: Action) -> DataFrame:
     Reference: src/lhp/generators/load/cloudfiles.py:60-198 /
     templates/load/cloudfiles.py.j2:22-51. On OSS the file source gives
     incremental listing + exactly-once via the stream checkpoint; rescue data
-    is emulated with PERMISSIVE mode + columnNameOfCorruptRecord for json/csv
-    (`cloudfiles_reader`).
+    is emulated with PERMISSIVE mode + columnNameOfCorruptRecord for json/csv.
 
     Scale: readers parallelize over files; ``maxFilesPerTrigger`` bounds
     micro-batch size; explicit schema avoids a full listing+inference pass.
@@ -168,13 +168,16 @@ def load_cloudfiles(ctx: BuildContext, action: Action) -> DataFrame:
     ignored = validate_cloudfiles_options(src.get("options") or {}, action.name)
     if ignored:
         ctx.log(action.name, "cloudfiles_options_ignored", options=ignored)
+    fmt, reader_opts, rescue_col = cloudfiles_options(src)
+    path = ctx.resolve_path(src["path"])
+    declared = src.get("schema") or (src.get("schema_file") and ctx.resolve_path(src["schema_file"]))
+    schema = rescued_schema(coerce_schema(declared), rescue_col) if declared else None
     stream = (action.readMode or "stream") == "stream"
-    fmt, path, reader_opts, schema = cloudfiles_reader(
-        src, ctx.resolve_path(src["path"]), stream, ctx.resolve_path
-    )
-    if stream and schema is None:
-        # file streams require a schema: infer once from a batch read
-        schema = ctx.spark.read.format(fmt).options(**reader_opts).load(path).schema
+    if stream:
+        path, reader_opts = file_stream_path(path, reader_opts)
+        if schema is None:
+            # file streams require a schema: infer once from a batch read
+            schema = ctx.spark.read.format(fmt).options(**reader_opts).load(path).schema
     reader = (ctx.spark.readStream if stream else ctx.spark.read).format(fmt)
     if schema is not None:
         reader = reader.schema(schema)

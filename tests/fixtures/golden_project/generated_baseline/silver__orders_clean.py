@@ -62,10 +62,16 @@ def apply_expectations(
     The observation carries `violations_<name>` counters for every expectation
     plus `rows_total`; callers read `observation.get` after an action runs
     and assert the returned fail expectations on it. Spark's Observation
-    refuses a streaming frame, so a stream gets no observation (None).
+    refuses a streaming frame, so a stream gets no observation (None), and
+    a stream with a fail expectation is refused: nothing would enforce it.
     """
     if not exps:
         return df, None, []
+    drop_exps = [e for e in exps if e.action == "drop"]
+    fail_exps = [e for e in exps if e.action == "fail"]
+    if df.isStreaming and fail_exps:
+        raise ValueError(f"fail expectations {[e.name for e in fail_exps]} are not enforced on a "
+                         "stream: make them expect_or_drop, or read the source in batch mode")
     obs = None if df.isStreaming else Observation(observation_name)
     if obs is not None:
         metrics = [F.count(F.lit(1)).alias("rows_total")]
@@ -76,8 +82,6 @@ def apply_expectations(
                 ).alias(f"violations_{e.name}")
             )
         df = df.observe(obs, *metrics)
-    drop_exps = [e for e in exps if e.action == "drop"]
-    fail_exps = [e for e in exps if e.action == "fail"]
     if drop_exps:
         df = df.filter(F.expr(combined_predicate(drop_exps)))
     return df, obs, fail_exps

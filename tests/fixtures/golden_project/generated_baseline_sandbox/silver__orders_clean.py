@@ -9,7 +9,7 @@ No engine import: this file is exactly what executes.
 import importlib.util
 import os
 
-from pyspark.sql import Observation, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 
@@ -20,11 +20,92 @@ def _load_module(path, name):
     return mod
 
 
+# The engine's own functions, copied verbatim at compile time from:
+# lakehouse_plumber_spark/expectations.py
+from dataclasses import dataclass
+from typing import Optional
+from pyspark.sql import DataFrame
+from pyspark.sql import Observation
+
+
+@dataclass(frozen=True)
+class Expectation:
+    name: str
+    constraint: str
+    action: str = "warn"  # warn | drop | fail
+
+    def __post_init__(self):
+        if self.action not in ("warn", "drop", "fail"):
+            raise ValueError(f"expectation action must be warn|drop|fail, got {self.action!r}")
+
+
+class ExpectationFailedError(RuntimeError):
+    def __init__(self, failures: dict[str, int]):
+        self.failures = failures
+        super().__init__(f"fail-expectations violated: {failures}")
+
+
+def combined_predicate(exps: list[Expectation]) -> Optional[str]:
+    """AND of all constraints (the clean-path predicate)."""
+    if not exps:
+        return None
+    return " AND ".join(f"({e.constraint})" for e in exps)
+
+
+def apply_expectations(
+    df: DataFrame,
+    exps: list[Expectation],
+    observation_name: str = "dq",
+) -> tuple[DataFrame, Optional[Observation], list[Expectation]]:
+    """Apply warn/drop semantics; return (df, observation, fail_expectations).
+
+    The observation carries `violations_<name>` counters for every expectation
+    plus `rows_total`; callers read `observation.get` after an action runs
+    and assert the returned fail expectations on it. Spark's Observation
+    refuses a streaming frame, so a stream gets no observation (None), and
+    a stream with a fail expectation is refused: nothing would enforce it.
+    """
+    if not exps:
+        return df, None, []
+    drop_exps = [e for e in exps if e.action == "drop"]
+    fail_exps = [e for e in exps if e.action == "fail"]
+    if df.isStreaming and fail_exps:
+        raise ValueError(f"fail expectations {[e.name for e in fail_exps]} are not enforced on a "
+                         "stream: make them expect_or_drop, or read the source in batch mode")
+    obs = None if df.isStreaming else Observation(observation_name)
+    if obs is not None:
+        metrics = [F.count(F.lit(1)).alias("rows_total")]
+        for e in exps:
+            metrics.append(
+                F.sum(
+                    F.when(~F.coalesce(F.expr(e.constraint), F.lit(False)), 1).otherwise(0)
+                ).alias(f"violations_{e.name}")
+            )
+        df = df.observe(obs, *metrics)
+    if drop_exps:
+        df = df.filter(F.expr(combined_predicate(drop_exps)))
+    return df, obs, fail_exps
+
+
+def check_failures(observation: Optional[Observation], fail_exps: list[Expectation]) -> dict[str, int]:
+    """After an action ran, raise if any fail-expectation had violations."""
+    if observation is None:
+        return {}
+    got = observation.get
+    failures = {
+        e.name: int(got.get(f"violations_{e.name}", 0) or 0)
+        for e in fail_exps
+        if int(got.get(f"violations_{e.name}", 0) or 0) > 0
+    }
+    if failures:
+        raise ExpectationFailedError(failures)
+    return {k: int(v) for k, v in got.items()}
+
+
 def build(spark, out_dir):
     """Run the pipeline; writes tables under out_dir, returns {name: DataFrame}."""
     views = {}
     written = {}
-    _dq_checks = []
     _pending_compact = {}
     _uc_tags = {}
 
@@ -41,13 +122,10 @@ def build(spark, out_dir):
 
     # action: dq (data_quality)
     df = views['v_src']
-    _obs_dq = Observation('dq_dq')
-    _metrics_dq = [F.count(F.lit(1)).alias('rows_total')]
-    _metrics_dq.append(F.sum(F.when(~F.coalesce(F.expr('o_totalprice > 0'), F.lit(False)), 1).otherwise(0)).alias('violations_positive_total'))
-    if not df.isStreaming:
-        df = df.observe(_obs_dq, *_metrics_dq)
-        _dq_checks.append(('dq', _obs_dq, []))
-    df = df.filter(F.expr('coalesce((o_totalprice > 0), false)'))
+    _exps_dq = [
+        Expectation(name='positive_total', constraint='o_totalprice > 0', action='drop'),
+    ]
+    df, _obs_dq, _fails_dq = apply_expectations(df, _exps_dq, 'dq_dq')
     views['v_clean'] = df
     df.createOrReplaceTempView('v_clean')
 
@@ -56,15 +134,6 @@ def build(spark, out_dir):
     df.write.mode('overwrite').parquet(_tbl_path('main.silver.alice_orders_clean'))
     written['main.silver.alice_orders_clean'] = spark.read.parquet(_tbl_path('main.silver.alice_orders_clean'))
 
-    # fail-expectation enforcement: observations are populated once the plans
-    # consuming them materialized (the writes above) — assert afterwards,
-    # mirroring the engine's pending_checks pass (runner.py)
-    for _name, _obs, _fails in _dq_checks:
-        _got = _obs.get
-        _bad = {n: int(_got.get("violations_" + n, 0) or 0)
-                for n in _fails if int(_got.get("violations_" + n, 0) or 0) > 0}
-        if _bad:
-            raise RuntimeError(f"fail-expectations violated in {_name}: {_bad}")
     # auto-compaction (lhp.autoOptimize.maxFiles), deferred to after every
     # action like the engine (operators/write.py:run_pending_compactions):
     # compacting mid-build would delete the files behind DataFrames already

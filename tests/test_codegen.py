@@ -718,13 +718,15 @@ def test_compiled_cdc_carries_engine_functions_verbatim():
     only those they call: the SCD functions for a CDC write, the streaming
     drain for a write that can stream, the Morton layout for
     cluster_by_auto, the expectations for a data_quality action (the
-    quarantine functions too for quarantine mode), and the partial
-    aggregates or the full recompute for an incremental MV."""
+    quarantine functions too for quarantine mode), the partial
+    aggregates or the full recompute for an incremental MV, and the schema
+    rescue and single-file stream path for a cloudfiles load that uses
+    them."""
     import inspect
 
     from lakehouse_plumber_spark import context, expectations
     from lakehouse_plumber_spark.functions import zorder
-    from lakehouse_plumber_spark.operators import cdc, incremental, quarantine
+    from lakehouse_plumber_spark.operators import cdc, incremental, load, quarantine
 
     scd = [cdc._dedup_key_seq, cdc._rebuild_scd2]
     drain = [context.run_available_now, context.for_each_batch]
@@ -735,7 +737,8 @@ def test_compiled_cdc_carries_engine_functions_verbatim():
             quarantine._parse_and_revalidate]
     imv = [incremental.batch_partials, incremental.finalize_partials,
            incremental.recompute_aggs]
-    every = scd + drain + morton + dqe + quar + imv
+    files = [load.rescued_schema, load.file_stream_path]
+    every = scd + drain + morton + dqe + quar + imv + files
     stream = {
         "pipeline": "p", "flowgroup": "st",
         "actions": [
@@ -757,12 +760,12 @@ def test_compiled_cdc_carries_engine_functions_verbatim():
     }
     for spec, carried in [
         (_cdc_scd_spec(2), scd + drain),  # the raw-event append drains too
-        (stream, drain),
+        (stream, drain + files),
         (clustered, morton),
         (_dq_spec("dqe"), dqe),
         (_dq_spec("quarantine"), dqe + quar + drain),
-        (_imv_spec({"n": "count(*)", "s": "sum(amt)"}), imv + drain),
-        (_imv_spec({"n": "count(DISTINCT amt)"}), imv + drain),
+        (_imv_spec({"n": "count(*)", "s": "sum(amt)"}), imv + drain + files),
+        (_imv_spec({"n": "count(DISTINCT amt)"}), imv + drain + files),
         (FG_SPEC, []),
     ]:
         src = compile_flowgroup(load_flowgroup(spec))
@@ -1840,13 +1843,15 @@ _YAML_SCHEMA = {"columns": [{"name": "id", "type": "int"}, {"name": "v", "type":
 
 
 @pytest.mark.parametrize("read_mode,schema", [
-    ("batch", "id INT, v INT"), ("stream", "id INT, v INT"), ("stream", _YAML_SCHEMA)])
+    ("batch", "id INT, v INT"), ("stream", "id INT, v INT"), ("stream", _YAML_SCHEMA),
+    ("stream", "id INT, v INT, _rescued_data STRING")])
 def test_compiled_cloudfiles_reads_with_declared_schema(spark, runner, tmp_path, read_mode, schema):
     """A compiled cloudfiles load reads with the declared schema (DDL text
     or a schema dict) and the rescue column, as the engine does; a stream
-    over one file reads its directory filtered to it."""
-    land = _rescue_land(tmp_path)
-    (land / "other.json").write_text('{"id": 9, "v": 9}\n')
+    over one file reads its directory filtered to it. The script is
+    compiled before its input lands, so whether the path is a single file
+    is decided when the script runs."""
+    land = tmp_path / "land"
     write = ({"type": "streaming_table", "database": "m.cf", "table": "t"} if read_mode == "stream"
              else {"type": "materialized_view", "database": "m.cf", "table": "t"})
     spec = {
@@ -1858,8 +1863,13 @@ def test_compiled_cloudfiles_reads_with_declared_schema(spark, runner, tmp_path,
             {"name": "wr", "type": "write", "source": "v", "write_target": write},
         ],
     }
+    src = compile_flowgroup(load_flowgroup(spec))
+    _rescue_land(tmp_path)
+    (land / "other.json").write_text('{"id": 9, "v": 9}\n')
     engine = runner.run(load_flowgroup(spec)).resolve_view("m.cf.t")
-    _, written = _build_compiled(spark, spec, tmp_path / "gen")
+    ns: dict = {}
+    exec(compile(src, "<generated>", "exec"), ns)
+    written = ns["build"](spark, str(tmp_path / "gen"))
     assert written["m.cf.t"].dtypes == engine.dtypes == [
         ("id", "int"), ("v", "int"), ("_rescued_data", "string")]
     assert _rows(written["m.cf.t"]) == _rows(engine)
@@ -1927,29 +1937,55 @@ def test_cluster_by_auto_mv_evaluates_its_source_once(spark, runner, tmp_path, p
     assert ticks.value == 1000
 
 
-@pytest.mark.parametrize("path", ["engine", "compiled"])
-def test_streaming_dqe_drops_rows(spark, runner, tmp_path, path):
-    """Spark's Observation refuses a streaming frame, so a data_quality
-    action over a stream drops rows without observing them, in the engine
-    and in compiled scripts."""
-    land = _rescue_land(tmp_path)
-    spec = {
+def _stream_dq_spec(land, expectations):
+    return {
         "pipeline": "p", "flowgroup": "sdq",
         "actions": [
             {"name": "ld", "type": "load", "target": "v_raw",
              "source": {"type": "cloudfiles", "path": str(land), "format": "json",
                         "schema": "id INT, v INT"}},
             {"name": "dq", "type": "transform", "transform_type": "data_quality",
-             "source": "v_raw", "target": "v_ok",
-             "expectations_inline": [
-                 {"name": "pos", "constraint": "v > 0", "type": "expect_or_drop"},
-                 {"name": "has_id", "constraint": "id IS NOT NULL", "type": "expect_or_fail"}]},
+             "source": "v_raw", "target": "v_ok", "expectations_inline": expectations},
             {"name": "wr", "type": "write", "source": "v_ok",
              "write_target": {"type": "streaming_table", "database": "m.sd", "table": "t"}},
         ],
     }
+
+
+@pytest.mark.parametrize("path", ["engine", "compiled"])
+def test_streaming_dqe_drops_rows(spark, runner, tmp_path, path):
+    """Spark's Observation refuses a streaming frame, so a data_quality
+    action over a stream drops rows without observing them, in the engine
+    and in compiled scripts."""
+    spec = _stream_dq_spec(_rescue_land(tmp_path), [
+        {"name": "pos", "constraint": "v > 0", "type": "expect_or_drop"},
+        {"name": "small", "constraint": "v < 6", "type": "expect"}])
     if path == "engine":
         got = runner.run(load_flowgroup(spec)).resolve_view("m.sd.t")
     else:
         got = _build_compiled(spark, spec, tmp_path / "gen")[1]["m.sd.t"]
     assert _rows(got) == [(1, 5, None)]
+
+
+@pytest.mark.parametrize("path", ["engine", "compiled"])
+def test_streaming_fail_expectation_is_refused(spark, runner, tmp_path, path):
+    """Nothing counts a fail expectation's violations on a stream, so a
+    streaming data_quality action with one is refused before any write
+    runs, in the engine and in compiled scripts, instead of writing the
+    rows the rule should have stopped."""
+    import os
+
+    land = _rescue_land(tmp_path)
+    (land / "b.json").write_text('{"v": 7}\n')  # no id: violates has_id
+    spec = _stream_dq_spec(land, [
+        {"name": "pos", "constraint": "v > 0", "type": "expect_or_drop"},
+        {"name": "has_id", "constraint": "id IS NOT NULL", "type": "expect_or_fail"}])
+    with pytest.raises(ValueError, match=r"fail expectations \['has_id'\] are not enforced on a stream"):
+        if path == "engine":
+            runner.run(load_flowgroup(spec))
+        else:
+            _build_compiled(spark, spec, tmp_path / "gen")
+    if path == "engine":
+        assert not runner.store.exists("m.sd.t")
+    else:
+        assert not os.path.exists(tmp_path / "gen" / "m" / "sd" / "t")
