@@ -23,8 +23,9 @@ Covered surface:
   handler, custom Python Data Source)
 
 One prelude (`_prelude`) copies the engine's own functions into a script,
-verbatim at compile time and once per process, for the groups the script
-calls; each engine module declares its group (STANDALONE_*):
+verbatim at compile time; each engine module declares its group
+(STANDALONE_*), and of each group a script carries only the functions it
+calls and the functions those call:
 - operators/cdc.py: the store-free SCD functions (dedup, truncates, forward
   fill, SCD1/SCD2 rebuilds), so CDC scripts plan and break ties as the
   engine does;
@@ -39,7 +40,13 @@ calls; each engine module declares its group (STANDALONE_*):
 - operators/incremental.py: `batch_partials`, `finalize_partials` and
   `recompute_aggs`;
 - operators/load.py: `rescued_schema` and `file_stream_path`, run by the
-  script; its reader options are `cloudfiles_options`, resolved at compile time.
+  script; its reader options are `cloudfiles_options`, resolved at compile time;
+- tables.py: the store's parquet writes. Every table in `written` is
+  overwritten by `swap_overwrite` (atomic shadow swap, zero-row fallback),
+  appended by `append_path` and auto-compacted by `compact_path`, with
+  the cluster layout `write.py:_clustered_for_write` picks, decided at
+  compile time. Compiled-only storage (raw CDC events, snapshots, DLQ,
+  IMV staging, `temp_table`, sinks) keeps plain writes.
 
 What differs from the engine is storage, not the operator bodies. An
 incremental MV stages its input rows and finalizes the partials of all of
@@ -57,6 +64,7 @@ import functools
 import os
 import re
 import textwrap
+import types
 
 from lakehouse_plumber_spark.dag import topo_sort
 from lakehouse_plumber_spark.models import Action, ActionType, FlowGroup
@@ -154,8 +162,6 @@ def build(spark, out_dir):
     """Run the pipeline; writes tables under out_dir, returns {name: DataFrame}."""
     views = {}
     written = {}
-    _pending_compact = {}
-    _uc_tags = {}
 
     def _tbl_path(name):
         return os.path.join(out_dir, name.replace(".", "/"))
@@ -165,68 +171,42 @@ def build(spark, out_dir):
 '''
 
 # fail-expectation check, once the writes above filled the observations
-# (the engine runner's pending_checks pass); only in scripts that register one
+# (the engine runner's pending_checks pass)
 _FAIL_CHECK = '''\
     for _name, _obs, _fails in _dq_checks:
         check_failures(_obs, _fails)
 '''
 
-_FOOTER = '''\
-    # auto-compaction (lhp.autoOptimize.maxFiles), deferred to after every
-    # action like the engine (operators/write.py:run_pending_compactions):
-    # compacting mid-build would delete the files behind DataFrames already
-    # captured in views/written. Same atomic shadow-swap as tables.py:compact,
-    # rewrite sized like the engine's, cluster ordering re-applied.
-    if _pending_compact:
-        import glob as _glob, os as _os, shutil as _shutil, uuid as _uuid
-        from pyspark.sql import functions as _F
-        for _cname, (_cpath, _cmax, _cpcols, _cccols, _czauto) in _pending_compact.items():
-            if len(_glob.glob(_cpath + "/**/*.parquet", recursive=True)) <= _cmax:
-                continue
-            _cdf = spark.read.parquet(_cpath)
-            if _cpcols:
-                # partition dirs own their key; morton degrades to
-                # within-partition lexicographic here (engine parity,
-                # tables.py:compact). Lead the sort with the partition
-                # columns so the partitionBy writer's own (unstable) sort
-                # is skipped and the cluster order reaches the files
-                _cdf = _cdf.repartition(*[_F.col(c) for c in _cpcols])
-                if _cccols:
-                    _cdf = _cdf.sortWithinPartitions(
-                        *(_cpcols + [c for c in _cccols if c not in _cpcols]))
-            elif _czauto and _cccols:
-                _rows = _cdf.count()
-                _cdf = morton_layout(_cdf, _cccols, max(1, -(-_rows // 4000000)))
-            else:
-                _rows = _cdf.count()
-                _cdf = _cdf.repartition(max(1, -(-_rows // 4000000)))
-                if _cccols:
-                    _cdf = _cdf.sortWithinPartitions(*_cccols)
-            _shadow = _cpath + "__swap_" + _uuid.uuid4().hex[:8]
-            _w = _cdf.write.mode("overwrite")
-            if _cpcols:
-                _w = _w.partitionBy(*_cpcols)
-            _w.parquet(_shadow)
-            _old = _cpath + "__old_" + _uuid.uuid4().hex[:8]
-            _os.rename(_cpath, _old)
-            _os.rename(_shadow, _cpath)
-            _shutil.rmtree(_old, ignore_errors=True)
-            # refresh only this path — clearCache() would drop every cached
-            # relation in the session (engine parity: tables.py:overwrite)
-            spark.catalog.refreshByPath(_cpath)
+# auto-compaction (lhp.autoOptimize.maxFiles), after every action as in the
+# engine's run_pending_compactions: compacting mid-build would delete the
+# files behind DataFrames already captured in views/written
+_COMPACT = '''\
+    for _cname, (_, _cmax, _cccols, _cmorton) in _pending_compact.items():
+        _cpath = _tbl_path(_cname)
+        if data_file_count(_cpath) > _cmax:
+            compact_path(_cpath, order_within_files=_cccols or None, morton=_cmorton)
             written[_cname] = spark.read.parquet(_cpath)
+'''
+
+_UC_TAGS = '''\
     # UC tags, resolved at compile time: persisted as one artifact per build
     # (the generated-code analogue of the reference's tagging hook; a
     # UC-backed deployment turns these into ALTER TABLE ... SET TAGS)
-    if _uc_tags:
-        import json as _json
-        with open(os.path.join(out_dir, "_uc_tags.json"), "w") as _tf:
-            _json.dump(
-                {k: {"table_tags": v[0], "column_tags": v[1]}
-                 for k, v in _uc_tags.items()},
-                _tf, indent=2, sort_keys=True)
-    return written
+    import json as _json
+    with open(os.path.join(out_dir, "_uc_tags.json"), "w") as _tf:
+        _json.dump(
+            {k: {"table_tags": v[0], "column_tags": v[1]}
+             for k, v in _uc_tags.items()},
+            _tf, indent=2, sort_keys=True)
 '''
+
+# (registry, its empty value, its end-of-build pass): only a script whose
+# actions register into one starts build() with it and ends with the pass
+_REGISTRIES = (
+    ("_dq_checks", "[]", _FAIL_CHECK),
+    ("_pending_compact", "{}", _COMPACT),
+    ("_uc_tags", "{}", _UC_TAGS),
+)
 
 
 def _py_ident(name: str) -> str:
@@ -292,51 +272,78 @@ def _emit_python_call(a: Action, call_shape: str) -> list[str]:
     return lines
 
 
-# (group, engine module, the emitted call needing it); a call is matched at
-# a line start, so SQL text in a literal never matches
+# the engine modules whose STANDALONE_* functions a script may carry, in
+# the order they are copied (a function's annotations name earlier groups)
 _PRELUDE = (
-    ("cdc", "lakehouse_plumber_spark.operators.cdc", r"_dc = _data_columns\("),
-    ("drain", "lakehouse_plumber_spark.context", r"(for_each_batch|run_available_now)\("),
-    ("zorder", "lakehouse_plumber_spark.functions.zorder", r"\w+ = morton_layout\("),
-    ("expectations", "lakehouse_plumber_spark.expectations", r"_exps_\w+ = \["),
-    ("quarantine", "lakehouse_plumber_spark.operators.quarantine", r"\w+, \w+ = quarantine_split\("),
-    ("incremental", "lakehouse_plumber_spark.operators.incremental",
-     r"\w+ = (finalize_partials|recompute_aggs)\("),
-    ("cloudfiles", "lakehouse_plumber_spark.operators.load",
-     r"\w+(, \w+)? = (rescued_schema|file_stream_path)\("),
+    "lakehouse_plumber_spark.operators.cdc",
+    "lakehouse_plumber_spark.context",
+    "lakehouse_plumber_spark.functions.zorder",
+    "lakehouse_plumber_spark.expectations",
+    "lakehouse_plumber_spark.operators.quarantine",
+    "lakehouse_plumber_spark.operators.incremental",
+    "lakehouse_plumber_spark.operators.load",
+    "lakehouse_plumber_spark.tables",
 )
 
 
+def _names(src: str) -> set[str]:
+    """The global and attribute names the code of `src` loads; SQL text in
+    a string literal loads none."""
+    todo, names = [compile(src, "<script>", "exec")], set()
+    while todo:
+        code = todo.pop()
+        names.update(code.co_names)
+        todo += [c for c in code.co_consts if isinstance(c, types.CodeType)]
+    return names
+
+
 @functools.lru_cache(maxsize=None)
-def _group_source(module: str) -> tuple[list[str], tuple[str, ...], str]:
-    """(source files, imports, source text) of one module's prelude group."""
+def _prelude_index() -> dict:
+    """name -> engine module of every function and constant a script may
+    carry, in copy order."""
     import importlib
+
+    index = {}
+    for module in _PRELUDE:
+        mod = importlib.import_module(module)
+        names = (*getattr(mod, "STANDALONE_CONSTANTS", ()), *mod.STANDALONE_FUNCTIONS)
+        index.update(dict.fromkeys(names, mod))
+    return index
+
+
+@functools.lru_cache(maxsize=None)
+def _prelude_item(name: str) -> tuple[str, str, frozenset]:
+    """(source module, source text, names it loads) of one copied name."""
     import inspect
 
-    mod = importlib.import_module(module)
-    fns = [getattr(mod, f) for f in mod.STANDALONE_FUNCTIONS]
-    files = ["# " + m.replace(".", "/") + ".py" for m in dict.fromkeys(f.__module__ for f in fns)]
-    copied = [f"{c} = {getattr(mod, c)!r}" for c in getattr(mod, "STANDALONE_CONSTANTS", ())]
-    copied += [inspect.getsource(f).rstrip() for f in fns]
-    return files, mod.STANDALONE_IMPORTS, "\n\n\n".join(copied)
+    mod = _prelude_index()[name]
+    obj = getattr(mod, name)
+    if name in getattr(mod, "STANDALONE_CONSTANTS", ()):
+        return mod.__name__, f"{name} = {obj!r}", frozenset()
+    text = inspect.getsource(obj).rstrip()
+    return obj.__module__, text, frozenset(_names(text))
 
 
-def _prelude(body: str) -> str:
-    """The engine functions `body` (the emitted action lines) calls, as the
-    module-level block of a script; empty when it calls none."""
-    needs = {g for g, _, use in _PRELUDE if re.search(rf"^\s+{use}", body, re.M)}
-    if not needs:
+@functools.lru_cache(maxsize=1024)  # a recompile meets the same scripts again
+def _prelude(script: str) -> str:
+    """The module-level block of the engine functions `script` calls and
+    the functions those call; empty when it calls none."""
+    index = _prelude_index()
+    need: set[str] = set()
+    todo = [n for n in _names(script) if n in index]
+    while todo:
+        n = todo.pop()
+        if n not in need:
+            need.add(n)
+            todo += [m for m in _prelude_item(n)[2] if m in index]
+    if not need:
         return ""
+    chosen = [n for n in index if n in need]
+    head = _HEADER.splitlines()
     lines = ["# The engine's own functions, copied verbatim at compile time from:"]
-    imports: list[str] = []
-    copied: list[str] = []
-    for group, module, _ in _PRELUDE:
-        if group in needs:
-            files, imps, text = _group_source(module)
-            lines += [f for f in files if f not in lines]
-            imports += [i for i in imps if i not in imports]
-            copied += ["", "", text]
-    return "\n".join(lines + imports + copied) + "\n\n"
+    lines += dict.fromkeys("# " + _prelude_item(n)[0].replace(".", "/") + ".py" for n in chosen)
+    lines += dict.fromkeys(i for n in chosen for i in index[n].STANDALONE_IMPORTS if i not in head)
+    return "\n".join(lines) + "".join("\n\n\n" + _prelude_item(n)[1] for n in chosen) + "\n\n"
 
 
 @functools.lru_cache(maxsize=None)
@@ -373,6 +380,25 @@ def _emit_scd_apply(cfg) -> list[str]:
         "    _out = (_rebuild_scd1(_forward_fill_nulls(_ev, _cdc, _dc), _cdc, _dc)",
         "            .filter(~F.col(TOMBSTONE)).drop('__seq', TOMBSTONE))",
     ]
+
+
+def _clustered_write(wt, call: str, path: str, df: str, pad: str = "    ") -> list[str]:
+    """Lines writing `df` to `path` through `call` (`swap_overwrite` or
+    `append_path`) in the cluster layout write.py:_clustered_for_write
+    picks, decided at compile time: a partitioned target sorts within files
+    on its cluster columns, after the co-location shuffle; cluster_by_auto
+    with >= 2 columns lays the persisted frame out in Morton order, so its
+    source runs once; other cluster columns sort within write tasks."""
+    pcols, ccols = list(wt.partition_columns or []), list(wt.cluster_columns or [])
+    if pcols:
+        return [f"{pad}{call}({path}, {df}, {pcols!r}{f', {ccols!r}' if ccols else ''})"]
+    if wt.cluster_by_auto and len(ccols) >= 2:
+        return [f"{pad}_src = {df}.persist()",
+                f"{pad}{call}({path}, morton_layout(_src, {ccols!r}))",
+                f"{pad}_src.unpersist()"]
+    if ccols:
+        df += f".sortWithinPartitions(*{ccols!r})"
+    return [f"{pad}{call}({path}, {df})"]
 
 
 def _emit_cdc_merge(a: Action) -> list[str]:
@@ -416,12 +442,11 @@ def _emit_cdc_merge(a: Action) -> list[str]:
         "    _ev = (_ev.withColumn(_PRIO, F.coalesce(F.col('__prio'), F.lit(-1))).drop('__prio')",
         "           if '__prio' in _ev.columns else _ev.withColumn(_PRIO, F.lit(-1)))",
     ]
-    lines += _emit_scd_apply(cfg)
-    lines += [
-        f"    _out.write.mode('overwrite').parquet(_snap_path_{ident})",
+    pcols = f", {list(wt.partition_columns)!r}" if wt.partition_columns else ""
+    return lines + _emit_scd_apply(cfg) + [
+        f"    swap_overwrite(_snap_path_{ident}, _out{pcols})",
         f"    written[{name!r}] = spark.read.parquet(_snap_path_{ident})",
     ]
-    return lines
 
 
 def _emit_snapshot_cdc(a: Action) -> list[str]:
@@ -540,16 +565,10 @@ def _emit_snapshot_cdc(a: Action) -> list[str]:
     ]
     from lakehouse_plumber_spark.operators.cdc import snapshot_cdc_config
 
-    lines += _emit_scd_apply(snapshot_cdc_config(cfg))
-    lines += [
-        "    if _out.isEmpty():",
-        "        # a zero-row multi-task write emits no files; one task keeps",
-        "        # the schema-bearing footer so the read-back works",
-        "        _out = _out.coalesce(1)",
-        f"    _out.write.mode('overwrite').parquet(_snap_path_{ident})",
+    return lines + _emit_scd_apply(snapshot_cdc_config(cfg)) + [
+        f"    swap_overwrite(_snap_path_{ident}, _out)",
         f"    written[{name!r}] = spark.read.parquet(_snap_path_{ident})",
     ]
-    return lines
 
 
 def _emit_expectations(a: Action, ident: str) -> tuple[list, list[str]]:
@@ -668,17 +687,14 @@ def _emit_incremental_mv(a: Action) -> list[str]:
     ]
     if non_mergeable_aggs(cfg.aggs):
         lines.append(f"    _mv = recompute_aggs(_all, {gb!r}, {dict(cfg.aggs)!r})")
+        lines += _clustered_write(wt, "swap_overwrite", f"_mv_path_{ident}", "_mv")
     else:
         parsed = parse_aggs(cfg.aggs)
-        lines.append(f"    _mv = finalize_partials(batch_partials(_all, {gb!r}, {parsed!r}), "
-                     f"{gb!r}, {parsed!r})")
-    w = "_mv.write.mode('overwrite')"
-    if wt.partition_columns:
-        w += f".partitionBy(*{list(wt.partition_columns)!r})"
-    return lines + [
-        f"    {w}.parquet(_mv_path_{ident})",
-        f"    written[{name!r}] = spark.read.parquet(_mv_path_{ident})",
-    ]
+        pcols = f", {list(wt.partition_columns)!r}" if wt.partition_columns else ""
+        lines += [f"    _mv = finalize_partials(batch_partials(_all, {gb!r}, {parsed!r}), "
+                  f"{gb!r}, {parsed!r})",
+                  f"    swap_overwrite(_mv_path_{ident}, _mv{pcols})"]
+    return lines + [f"    written[{name!r}] = spark.read.parquet(_mv_path_{ident})"]
 
 
 def _emit_sink(a: Action) -> list[str]:
@@ -1162,51 +1178,17 @@ def _compile_action(a: Action) -> list[str]:
                 lines.append(f"    df = views[{str(a.source)!r}]")
             if wt.row_filter:
                 lines.append(f"    df = df.where({wt.row_filter!r})")
-            # cluster layout, engine parity (write.py:_clustered_for_write):
-            # cluster_by_auto + >=2 keys -> Morton interleave; else sort
-            # within write tasks on the keys (leading-column skipping)
-            # (partitioned targets degrade morton to a task-local sort, the
-            # same rule as the engine and tables.compact — partitionBy after
-            # a range shuffle would explode file counts)
-            mv_ccols = list(wt.cluster_columns or [])
-            w = "df.write.mode('overwrite')"
-            if wt.partition_columns:
-                w += f".partitionBy(*{wt.partition_columns!r})"
-            if wt.cluster_by_auto and len(mv_ccols) >= 2 and not wt.partition_columns:
-                # persisted, so the query runs once (engine parity)
-                lines += [
-                    "    _src = df.persist()",
-                    f"    df = morton_layout(_src, {mv_ccols!r})",
-                    f"    {w}.parquet({path_expr})",
-                    "    _src.unpersist()",
-                ]
-            else:
-                if mv_ccols:
-                    lines.append(f"    df = df.sortWithinPartitions(*{mv_ccols!r})")
-                lines.append(f"    {w}.parquet({path_expr})")
+            lines += _clustered_write(wt, "swap_overwrite", path_expr, "df")
             lines.append(f"    written[{name!r}] = spark.read.parquet({path_expr})")
             return lines
         if wt.type.value == "streaming_table" and wt.mode == "standard":
             name = wt.full_name
             ident = _py_ident(a.name)
-            pcols = list(wt.partition_columns or [])
-            ccols = list(wt.cluster_columns or [])
-            zauto = bool(wt.cluster_by_auto and len(ccols) >= 2 and not pcols)
-            ap = f"b.write.mode('append').partitionBy(*{pcols!r})" if pcols \
-                else "b.write.mode('append')"
             lines += [
                 f"    df = views[{str(a.source)!r}]",
                 f"    _st_path_{ident} = _tbl_path({name!r})",
                 f"    def _append_flow_{ident}(b, _e):",
-                # cluster layout, engine parity (write.py:_clustered_for_write):
-                # cluster_by_auto + >=2 keys -> Morton interleave per batch;
-                # else sort within write tasks so parquet min/max footer
-                # stats give readers data-skipping. Partitioned appends lead
-                # with the partition columns: the partitionBy writer re-sorts
-                # tasks by them (unstably) unless rows already arrive ordered
-                *( [f"        b = morton_layout(b, {ccols!r})"] if zauto
-                   else [f"        b = b.sortWithinPartitions(*{pcols + [c for c in ccols if c not in pcols]!r})"] if ccols else [] ),
-                f"        {ap}.parquet(_st_path_{ident})",
+                *_clustered_write(wt, "append_path", f"_st_path_{ident}", "b", pad="        "),
                 "    # per-flow checkpoint: each append flow into the fan-in target",
                 "    # tracks its own source offsets (reference",
                 "    # streaming_table.py.j2:128-244 emits one append_flow each)",
@@ -1214,21 +1196,15 @@ def _compile_action(a: Action) -> list[str]:
             ]
             max_files = (wt.table_properties or {}).get("lhp.autoOptimize.maxFiles")
             if max_files is not None:
-                # registered only — the compaction itself runs in the footer,
-                # after every action (see _FOOTER): mid-build compaction would
-                # delete the files behind already-captured DataFrames.
-                # Sibling fan-in registrations for one target merge with the
-                # SAME rule the engine applies (write.py:_merge_compaction):
-                # strictest max_files wins, a declared cluster ordering
-                # survives — not last-writer-wins (ADVICE r4)
+                # registered only, in the engine's tuple; the footer compacts
+                # after every action (see _COMPACT), and sibling fan-in
+                # registrations for one target merge by the engine's rule
+                ccols = list(wt.cluster_columns or [])
+                morton = bool(wt.cluster_by_auto and len(ccols) >= 2)
                 lines += [
-                    f"    _pc_old = _pending_compact.get({name!r})",
-                    f"    _pc_new = (_st_path_{ident}, {int(max_files)}, "
-                    f"{pcols!r}, {ccols!r}, {zauto!r})",
-                    f"    _pending_compact[{name!r}] = _pc_new if _pc_old is None else "
-                    "(_pc_old[0], min(_pc_old[1], _pc_new[1]), "
-                    "_pc_old[2], _pc_old[3] or _pc_new[3], "
-                    "_pc_old[4] if _pc_old[3] else _pc_new[4])",
+                    f"    _pc = ({a.name!r}, {int(max_files)}, {ccols!r}, {morton!r})",
+                    f"    _pending_compact[{name!r}] = merge_compaction("
+                    f"_pending_compact.get({name!r}, _pc), _pc)",
                 ]
             lines.append(f"    written[{name!r}] = spark.read.parquet(_st_path_{ident})")
             return lines
@@ -1261,12 +1237,11 @@ def compile_flowgroup(fg: FlowGroup, base_dir: str | None = None) -> str:
                 lines = _wrap_spark_conf(lines, a)
             body += lines + [""]
         body_text = "\n".join(body)
+        used = [r for r in _REGISTRIES if re.search(rf"^\s+{r[0]}\W", body_text, re.M)]
+        body_text = "".join(f"    {n} = {empty}\n" for n, empty, _ in used) + body_text
+        build = "\n".join([_BUILD, body_text, *[p for _, _, p in used], "    return written\n"])
         head = _HEADER.format(pipeline=fg.pipeline, flowgroup=fg.flowgroup)
-        checks = re.search(r"^\s+_dq_checks\.append\(", body_text, re.M) is not None
-        if checks:
-            body_text = "    _dq_checks = []\n" + body_text
-        parts = (head, _prelude(body_text), _BUILD, body_text, checks and _FAIL_CHECK, _FOOTER)
-        return "\n".join(p for p in parts if p)
+        return "\n".join(p for p in (head, _prelude(build), build) if p)
     finally:
         _compile_written_views.reset(wtoken)
         _compile_base_dir.reset(token)

@@ -16,5 +16,3 @@ Design rules applied throughout:
   (identical in Spark and DuckDB), so every probabilistic structure here is
   exactly reproducible by the DuckDB oracle in __spark_entry__.py.
 """
-
-from lakehouse_plumber_spark.llm import dedup, sampling, similarity, text, multimodal  # noqa: F401

@@ -22,6 +22,7 @@ from lakehouse_plumber_spark.operators.incremental import (
 )
 from lakehouse_plumber_spark.operators.load import _import_module
 from lakehouse_plumber_spark.schema_parser import coerce_schema
+from lakehouse_plumber_spark.tables import merge_compaction
 
 
 @contextmanager
@@ -291,21 +292,8 @@ def _maybe_auto_compact(ctx: BuildContext, action: Action, wt: WriteTarget, targ
         # sibling flows into the same target WITHIN one flowgroup merge by
         # the same rule run_pending_compactions applies across contexts:
         # strictest bound wins, a declared cluster ordering always survives
-        entry = _merge_compaction(cur, entry)
+        entry = merge_compaction(cur, entry)
     ctx.pending_compactions[target] = entry
-
-
-def _merge_compaction(a: tuple, b: tuple) -> tuple:
-    """Merge two (action_name, max_files, cluster_cols, morton) registrations
-    for one target: the strictest (smallest) max_files decides the bound,
-    cluster ordering survives from whichever side declared one (the morton
-    flag travels with its ordering), and the action name follows the ordering
-    (the logged event must name the flow whose layout is applied) — falling
-    back to the stricter side when neither orders."""
-    ordered = a if a[2] else b
-    strict = a if a[1] <= b[1] else b
-    name = (a if a[2] else b if b[2] else strict)[0]
-    return (name, strict[1], ordered[2], ordered[3] if ordered[2] else False)
 
 
 def run_pending_compactions(ctxs: list, forward_log=None) -> None:
@@ -330,12 +318,8 @@ def run_pending_compactions(ctxs: list, forward_log=None) -> None:
             if cur is None:
                 agg[target] = (action_name, max_files, ccols, morton, ctx)
             else:
-                # merge sibling registrations across contexts with the same
-                # rule as within one (_merge_compaction): strictest bound
-                # wins, a declared cluster ordering must survive no matter
-                # which sibling declared it, and the logged action name
-                # follows the ordering actually applied
-                merged = _merge_compaction(cur[:4], (action_name, max_files, ccols, morton))
+                # siblings across contexts merge as within one
+                merged = merge_compaction(cur[:4], (action_name, max_files, ccols, morton))
                 agg[target] = (*merged, ctx if max_files < cur[1] else cur[4])
     compacted: list[str] = []
     for target, (action_name, max_files, ccols, morton, ctx) in agg.items():

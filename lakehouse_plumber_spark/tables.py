@@ -26,6 +26,9 @@ from dataclasses import dataclass, field
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from lakehouse_plumber_spark.functions.zorder import morton_layout
 
 try:  # pragma: no cover - exercised only when delta-spark is installed
     from delta.tables import DeltaTable  # noqa: F401
@@ -33,6 +36,16 @@ try:  # pragma: no cover - exercised only when delta-spark is installed
     HAVE_DELTA = True
 except Exception:  # pragma: no cover
     HAVE_DELTA = False
+
+
+# What a compiled script carries to write its tables, copied verbatim by
+# codegen: the parquet bodies of the store's append, overwrite and compact.
+STANDALONE_IMPORTS = ("import os", "import shutil", "import uuid", "from typing import Optional",
+                      "from pyspark.sql import DataFrame", "from pyspark.sql import SparkSession",
+                      "from pyspark.sql import functions as F")
+STANDALONE_FUNCTIONS = ("_write_sort_cols", "_is_table", "data_file_count",
+                        "partition_columns_on_disk", "swap_overwrite", "append_path",
+                        "compact_path", "merge_compaction")
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -51,6 +64,181 @@ def _write_sort_cols(
     cluster order survives."""
     pre = list(partition_columns or [])
     return pre + [c for c in order_within_files if c not in pre]
+
+
+def _is_table(path: str) -> bool:
+    """A table dir with data files or a completed write's marker."""
+    return os.path.isdir(path) and any(
+        f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(path)
+    )
+
+
+def data_file_count(path: str) -> int:
+    """Parquet data files under a table dir, partition dirs included."""
+    return sum(f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs)
+
+
+def partition_columns_on_disk(path: str) -> list[str]:
+    """Partition layout inferred from the key=value directory chain."""
+    cols: list[str] = []
+    probe = path
+    while os.path.isdir(probe):
+        subs = [
+            d for d in os.listdir(probe)
+            if "=" in d and os.path.isdir(os.path.join(probe, d))
+        ]
+        if not subs:
+            break
+        cols.append(subs[0].split("=", 1)[0])
+        probe = os.path.join(probe, subs[0])
+    return cols
+
+
+def swap_overwrite(
+    path: str,
+    df: DataFrame,
+    partition_columns: Optional[list[str]] = None,
+    order_within_files: Optional[list[str]] = None,
+) -> None:
+    """Atomic overwrite of the parquet table at `path`: write to a shadow
+    dir, swap, drop the old data. The rename is the commit point.
+    ``order_within_files`` sorts rows inside each write task AFTER the
+    partition co-location shuffle (cluster_columns layout — applied last so
+    the repartition cannot undo it).
+
+    Zero-row results need a schema-bearing file (a partitioned/multi-task
+    empty write emits no parquet footer at all), but probing df.isEmpty()
+    up front would evaluate the WHOLE query once extra — for an MV refresh
+    or CDC rebuild that doubles the compute. Instead: write first, and
+    only if the shadow dir came out file-less rewrite it as one empty
+    single-task file (the second write runs on a known-empty frame, so the
+    slow path costs nothing).
+    """
+    shadow = f"{path}__swap_{uuid.uuid4().hex[:8]}"
+    out = df
+    if partition_columns:
+        out = out.repartition(*[F.col(c) for c in partition_columns])
+    if order_within_files:
+        out = out.sortWithinPartitions(
+            *_write_sort_cols(partition_columns, order_within_files)
+        )
+    w = out.write.mode("overwrite")
+    if partition_columns:
+        w = w.partitionBy(*partition_columns)
+    w.parquet(shadow)
+    if not any(
+        f.endswith(".parquet") for _, _, fs in os.walk(shadow) for f in fs
+    ):
+        df.sparkSession.createDataFrame([], df.schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(shadow)
+    backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
+    if os.path.isdir(path):
+        os.rename(path, backup)
+    os.rename(shadow, path)
+    if os.path.isdir(backup):
+        shutil.rmtree(backup, ignore_errors=True)
+    # invalidate cached file listings for THIS path only — clearCache()
+    # here would drop every cached relation in the session (including
+    # in-flight persisted frames and unrelated tables' file indexes)
+    df.sparkSession.catalog.refreshByPath(path)
+
+
+def append_path(
+    path: str,
+    df: DataFrame,
+    partition_columns: Optional[list[str]] = None,
+    order_within_files: Optional[list[str]] = None,
+) -> None:
+    """Append `df` to the parquet table at `path` as new files."""
+    if not _is_table(path):
+        # create through swap_overwrite: it guarantees a schema-bearing
+        # file even for zero-row frames (a partitioned/multi-task empty
+        # write emits no parquet footer) without probing isEmpty(), which
+        # would evaluate the frame once extra
+        swap_overwrite(path, df, partition_columns, order_within_files)
+        return
+    if partition_columns and not partition_columns_on_disk(path):
+        # the table exists but has no key=value dirs: either the zero-row
+        # placeholder swap_overwrite's fallback leaves behind (an empty
+        # partitioned write emits no files, so it writes one unpartitioned
+        # schema-bearing file), or a genuinely unpartitioned table.
+        # Appending partition dirs beside a root data file is an undefined
+        # mixed layout (current Spark happens to read it; other readers
+        # raise 'Conflicting directory structures'), so: replace an empty
+        # placeholder with the real partitioned write, refuse loudly
+        # otherwise.
+        if df.sparkSession.read.parquet(path).isEmpty():
+            swap_overwrite(path, df, partition_columns, order_within_files)
+            return
+        raise ValueError(
+            f"append to {path!r} with partition_columns="
+            f"{partition_columns} but the table on disk is "
+            "unpartitioned and non-empty — a mixed root-file/"
+            "partition-dir layout is not portable; rewrite the table "
+            "with overwrite(partition_columns=...) first"
+        )
+    out = df
+    if order_within_files:
+        out = out.sortWithinPartitions(
+            *_write_sort_cols(partition_columns, order_within_files)
+        )
+    w = out.write.mode("append")
+    if partition_columns:
+        w = w.partitionBy(*partition_columns)
+    w.parquet(path)
+
+
+def compact_path(
+    path: str,
+    target_rows_per_file: int = 4_000_000,
+    order_within_files: Optional[list[str]] = None,
+    morton: bool = False,
+) -> dict:
+    """Rewrite the parquet table at `path` into fewer files through
+    `swap_overwrite`, keeping its on-disk partition layout (rows co-located
+    one task per partition value) or, unpartitioned, sized to
+    ``target_rows_per_file``.
+
+    ``order_within_files`` re-establishes the cluster layout
+    (sort-within-files -> parquet min/max footer stats keep giving readers
+    data skipping): a compaction that interleaved rows would silently
+    destroy it. ``morton`` (cluster_by_auto tables) rebuilds the
+    interleaved-key range layout instead, so multi-column skipping survives
+    the rewrite — the parquet analogue of re-running OPTIMIZE ZORDER. On a
+    partitioned table the partition dirs already own their key; morton
+    degrades to within-partition lexicographic ordering there (the range
+    re-shuffle would fight the partition co-location).
+    """
+    before = data_file_count(path)
+    part_cols = partition_columns_on_disk(path)
+    df = SparkSession.active().read.parquet(path)
+    if part_cols:
+        swap_overwrite(path, df, part_cols, order_within_files)
+    else:
+        nfiles = max(1, -(-df.count() // target_rows_per_file))
+        if morton and order_within_files and len(order_within_files) >= 2:
+            swap_overwrite(path, morton_layout(df, order_within_files, nfiles))
+        else:
+            swap_overwrite(path, df.repartition(nfiles), order_within_files=order_within_files)
+    return {
+        "files_before": before,
+        "files_after": data_file_count(path),
+        "partition_columns": part_cols,
+    }
+
+
+def merge_compaction(a: tuple, b: tuple) -> tuple:
+    """Merge two (action_name, max_files, cluster_cols, morton) registrations
+    for one target: the strictest (smallest) max_files decides the bound,
+    cluster ordering survives from whichever side declared one (the morton
+    flag travels with its ordering), and the action name follows the ordering
+    (the logged event must name the flow whose layout is applied) — falling
+    back to the stricter side when neither orders."""
+    ordered = a if a[2] else b
+    strict = a if a[1] <= b[1] else b
+    name = (a if a[2] else b if b[2] else strict)[0]
+    return (name, strict[1], ordered[2], ordered[3] if ordered[2] else False)
 
 
 def _safe_name(name: str) -> str:
@@ -154,10 +342,7 @@ class ParquetTableStore:
 
     def exists(self, name: str) -> bool:
         self._heal_interrupted_swap(name)
-        p = self.path(name)
-        return os.path.isdir(p) and any(
-            f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(p)
-        )
+        return _is_table(self.path(name))
 
     def read(self, name: str) -> DataFrame:
         self._heal_interrupted_swap(name)
@@ -198,48 +383,8 @@ class ParquetTableStore:
         partition_columns: Optional[list[str]] = None,
         order_within_files: Optional[list[str]] = None,
     ) -> None:
-        if not self.exists(name):
-            # route table creation through overwrite: it guarantees a
-            # schema-bearing file even for zero-row frames (a partitioned/
-            # multi-task empty write emits no parquet footer) without
-            # probing isEmpty(), which would evaluate the frame once extra
-            self.overwrite(
-                name, df, partition_columns=partition_columns,
-                order_within_files=order_within_files,
-            )
-            return
-        if partition_columns and not self._partition_columns_on_disk(name):
-            # the table exists but has no key=value dirs: either the
-            # zero-row placeholder overwrite's fallback leaves behind (an
-            # empty partitioned write emits no files, so it writes one
-            # unpartitioned schema-bearing file), or a genuinely
-            # unpartitioned table.  Appending partition dirs beside a root
-            # data file is an undefined mixed layout (current Spark
-            # happens to read it; other readers raise 'Conflicting
-            # directory structures'), so: replace an empty placeholder
-            # with the real partitioned write, refuse loudly otherwise.
-            if self.read(name).isEmpty():
-                self.overwrite(
-                    name, df, partition_columns=partition_columns,
-                    order_within_files=order_within_files,
-                )
-                return
-            raise ValueError(
-                f"append to {name!r} with partition_columns="
-                f"{partition_columns} but the table on disk is "
-                "unpartitioned and non-empty — a mixed root-file/"
-                "partition-dir layout is not portable; rewrite the table "
-                "with overwrite(partition_columns=...) first"
-            )
-        out = df
-        if order_within_files:
-            out = out.sortWithinPartitions(
-                *_write_sort_cols(partition_columns, order_within_files)
-            )
-        w = out.write.format(self.FMT).mode("append")
-        if partition_columns:
-            w = w.partitionBy(*partition_columns)
-        w.save(self.path(name))
+        self._heal_interrupted_swap(name)
+        append_path(self.path(name), df, partition_columns, order_within_files)
 
     def overwrite(
         self,
@@ -248,52 +393,9 @@ class ParquetTableStore:
         partition_columns: Optional[list[str]] = None,
         order_within_files: Optional[list[str]] = None,
     ) -> None:
-        """Atomic overwrite: write to shadow dir, swap, drop the old data.
-
-        With Delta this is a single transactional overwrite; here the rename is
-        the commit point. ``order_within_files`` sorts rows inside each write
-        task AFTER the partition co-location shuffle (cluster_columns layout —
-        applied last so the repartition cannot undo it).
-
-        Zero-row results need a schema-bearing file (a partitioned/multi-task
-        empty write emits no parquet footer at all), but probing df.isEmpty()
-        up front would evaluate the WHOLE query once extra — for an MV refresh
-        or CDC rebuild that doubles the compute. Instead: write first, and
-        only if the shadow dir came out file-less rewrite it as one empty
-        single-task file (the second write runs on a known-empty frame, so the
-        slow path costs nothing).
-        """
-        target = self.path(name)
-        shadow = f"{target}__swap_{uuid.uuid4().hex[:8]}"
-        out = df
-        if partition_columns:
-            from pyspark.sql import functions as F
-
-            out = out.repartition(*[F.col(c) for c in partition_columns])
-        if order_within_files:
-            out = out.sortWithinPartitions(
-                *_write_sort_cols(partition_columns, order_within_files)
-            )
-        w = out.write.mode("overwrite")
-        if partition_columns:
-            w = w.partitionBy(*partition_columns)
-        w.parquet(shadow)
-        if not any(
-            f.endswith(".parquet") for _, _, fs in os.walk(shadow) for f in fs
-        ):
-            self.spark.createDataFrame([], df.schema).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(shadow)
-        backup = f"{target}__old_{uuid.uuid4().hex[:8]}"
-        if os.path.isdir(target):
-            os.rename(target, backup)
-        os.rename(shadow, target)
-        if os.path.isdir(backup):
-            shutil.rmtree(backup, ignore_errors=True)
-        # invalidate cached file listings for THIS path only — clearCache()
-        # here would drop every cached relation in the session (including
-        # in-flight persisted frames and unrelated tables' file indexes)
-        self.spark.catalog.refreshByPath(target)
+        """Atomic overwrite (`swap_overwrite`); with Delta this is a single
+        transactional overwrite."""
+        swap_overwrite(self.path(name), df, partition_columns, order_within_files)
 
     def overwrite_partitions(
         self, name: str, df: DataFrame, partition_columns: list[str]
@@ -304,8 +406,6 @@ class ParquetTableStore:
         Partitions of the table not represented in `df` are untouched on
         disk: work scales with the affected partitions, not the table size.
         """
-        from pyspark.sql import functions as F
-
         # co-locate each partition's rows before the write: without this every
         # task writes a file per partition value it holds (tasks x partitions
         # small files); with it, one-or-few files per partition
@@ -330,25 +430,7 @@ class ParquetTableStore:
             self.set_meta(name, "streaming_consumed", False)
 
     def _data_file_count(self, name: str) -> int:
-        n = 0
-        for _, _, fs in os.walk(self.path(name)):
-            n += sum(1 for f in fs if f.endswith(".parquet"))
-        return n
-
-    def _partition_columns_on_disk(self, name: str) -> list[str]:
-        """Partition layout inferred from the key=value directory chain."""
-        cols: list[str] = []
-        probe = self.path(name)
-        while os.path.isdir(probe):
-            subs = [
-                d for d in os.listdir(probe)
-                if "=" in d and os.path.isdir(os.path.join(probe, d))
-            ]
-            if not subs:
-                break
-            cols.append(subs[0].split("=", 1)[0])
-            probe = os.path.join(probe, subs[0])
-        return cols
+        return data_file_count(self.path(name))
 
     def compact(
         self,
@@ -365,13 +447,10 @@ class ParquetTableStore:
         Streaming appends and partition-scoped merges accumulate a file per
         micro-batch per partition; at scale the FILE COUNT, not the byte
         count, becomes the scan bottleneck (one task per file, a footer read
-        per file, ever-slower listings). Rewrites the table through the same
-        atomic shadow-swap as ``overwrite`` — readers see old or new, never
-        a mix — preserving the on-disk partition layout (rows co-located one
-        task per partition value) or, for unpartitioned tables, sized to
-        ``target_rows_per_file``. Content is byte-identical, so nothing is
-        logged to the change feed and table meta is untouched (both live
-        outside the table dir).
+        per file, ever-slower listings). ``compact_path`` rewrites the table
+        through the atomic shadow swap: readers see old or new, never a mix.
+        Content is byte-identical, so nothing is logged to the change feed
+        and table meta is untouched (both live outside the table dir).
 
         FILE IDENTITY is not preserved, though: every data file gets a new
         name, and a parquet FileStreamSource checkpoint tracks processed
@@ -395,53 +474,10 @@ class ParquetTableStore:
                 "pass force=True only if all consumer checkpoints are reset"
             )
         with self.writer_lock(name, owner="compact"):
-            return self._compact_locked(
-                name, target_rows_per_file, order_within_files, morton
+            self._heal_interrupted_swap(name)
+            return compact_path(
+                self.path(name), target_rows_per_file, order_within_files, morton
             )
-
-    def _compact_locked(
-        self,
-        name: str,
-        target_rows_per_file: int,
-        order_within_files: Optional[list[str]],
-        morton: bool,
-    ) -> dict:
-        before = self._data_file_count(name)
-        part_cols = self._partition_columns_on_disk(name)
-        df = self.read(name)
-        # order_within_files re-establishes the cluster layout
-        # (sort-within-files -> parquet min/max footer stats keep giving
-        # readers data skipping): a compaction that interleaved rows would
-        # silently destroy it. overwrite applies it after its co-location
-        # shuffle, so the repartition cannot undo the sort.
-        # `morton` (cluster_by_auto tables): rebuild the interleaved-key
-        # range layout instead, so multi-column skipping survives the
-        # rewrite — the parquet analogue of re-running OPTIMIZE ZORDER.
-        # On a partitioned table the partition dirs already own their key;
-        # morton degrades to within-partition lexicographic ordering there
-        # (the range re-shuffle would fight the partition co-location).
-        if part_cols:
-            self.overwrite(
-                name, df, partition_columns=part_cols,
-                order_within_files=order_within_files,
-            )
-        elif morton and order_within_files and len(order_within_files) >= 2:
-            from lakehouse_plumber_spark.functions.zorder import morton_layout
-
-            rows = df.count()
-            nfiles = max(1, -(-rows // target_rows_per_file))
-            self.overwrite(name, morton_layout(df, order_within_files, nfiles))
-        else:
-            rows = df.count()
-            nfiles = max(1, -(-rows // target_rows_per_file))
-            self.overwrite(
-                name, df.repartition(nfiles), order_within_files=order_within_files
-            )
-        return {
-            "files_before": before,
-            "files_after": self._data_file_count(name),
-            "partition_columns": part_cols,
-        }
 
     # ------------------------------------------------------------------
     # Change data feed emulation (Delta CDF: readChangeFeed /
@@ -479,8 +515,6 @@ class ParquetTableStore:
         for the table's full change history (Delta CDF gives the same property
         via its commit log).
         """
-        from pyspark.sql import functions as F
-
         if version is None:
             version = self.next_version(name)
         out = (
@@ -499,8 +533,6 @@ class ParquetTableStore:
         starting_version: int = 0,
         ending_version: Optional[int] = None,
     ) -> DataFrame:
-        from pyspark.sql import functions as F
-
         p = os.path.join(self._cdf_dir(name), "data")
         df = self.spark.read.format(self.FMT).load(p)
         # partition column: normalize to long, filters below prune partitions
@@ -745,10 +777,27 @@ class DeltaTableStore(ParquetTableStore):
         # parquet store's streaming_consumed marker is unnecessary here.
         return self.spark.readStream.format(self.FMT).load(self.path(name))
 
-    # read / append / log_changes / read_changes are inherited: they differ
-    # from the parquet store only in FMT. A Delta append is transactional
-    # even for empty frames, so the base append's create-via-overwrite
-    # routing is merely unnecessary, not wrong.
+    # read / log_changes / read_changes are inherited: they differ from the
+    # parquet store only in FMT.
+
+    def append(
+        self,
+        name: str,
+        df: DataFrame,
+        partition_columns: Optional[list[str]] = None,
+        order_within_files: Optional[list[str]] = None,
+    ) -> None:  # pragma: no cover - needs delta
+        # a Delta append is transactional even for empty frames (the commit
+        # log carries the schema), so it needs no create-via-overwrite routing
+        out = df
+        if order_within_files:
+            out = out.sortWithinPartitions(
+                *_write_sort_cols(partition_columns, order_within_files)
+            )
+        w = out.write.format(self.FMT).mode("append")
+        if partition_columns:
+            w = w.partitionBy(*partition_columns)
+        w.save(self.path(name))
 
     def overwrite(
         self,
@@ -762,8 +811,6 @@ class DeltaTableStore(ParquetTableStore):
         # so neither the shadow swap nor the empty-footer rewrite is needed
         out = df
         if partition_columns:
-            from pyspark.sql import functions as F
-
             out = out.repartition(*[F.col(c) for c in partition_columns])
         if order_within_files:
             out = out.sortWithinPartitions(
@@ -777,8 +824,6 @@ class DeltaTableStore(ParquetTableStore):
     def overwrite_partitions(
         self, name: str, df: DataFrame, partition_columns: list[str]
     ) -> None:  # pragma: no cover - needs delta
-        from pyspark.sql import functions as F
-
         df = df.repartition(*[F.col(c) for c in partition_columns])
         (
             df.write.format(self.FMT)
@@ -800,8 +845,6 @@ class DeltaTableStore(ParquetTableStore):
         (operators/cdc.py). Work scales with the files holding matched keys
         (Delta data skipping on the join keys), as bucket pruning does."""
         from delta.tables import DeltaTable
-        from pyspark.sql import functions as F
-
         if not self.exists(name):
             # first write: delete-marked rows must not materialize as live
             # data (the merge below would route them to whenMatchedDelete;
@@ -845,7 +888,7 @@ class DeltaTableStore(ParquetTableStore):
         return {
             "files_before": before,
             "files_after": self._data_file_count(name),
-            "partition_columns": self._partition_columns_on_disk(name),
+            "partition_columns": partition_columns_on_disk(self.path(name)),
         }
 
     def _data_file_count(self, name: str) -> int:  # pragma: no cover
@@ -885,8 +928,6 @@ class DeltaTableStore(ParquetTableStore):
 
     def prune_changes(self, name: str, up_to_version: int) -> int:  # pragma: no cover
         from delta.tables import DeltaTable
-        from pyspark.sql import functions as F
-
         p = os.path.join(self._cdf_dir(name), "data")
         if not os.path.isdir(p):
             return 0

@@ -20,12 +20,82 @@ def _load_module(path, name):
     return mod
 
 
+# The engine's own functions, copied verbatim at compile time from:
+# lakehouse_plumber_spark/tables.py
+import shutil
+import uuid
+from typing import Optional
+from pyspark.sql import DataFrame
+from pyspark.sql import SparkSession
+
+
+def _write_sort_cols(
+    partition_columns: Optional[list[str]], order_within_files: list[str]
+) -> list[str]:
+    """Task-sort columns for a clustered write: a partitionBy() writer
+    REQUIRES task rows ordered by the partition columns and inserts its own
+    (unstable) sort when they aren't — which would silently destroy the
+    cluster ordering. Sorting by (partition_cols + cluster_cols) satisfies
+    the writer's requirement, so it skips its sort and the within-file
+    cluster order survives."""
+    pre = list(partition_columns or [])
+    return pre + [c for c in order_within_files if c not in pre]
+
+
+def swap_overwrite(
+    path: str,
+    df: DataFrame,
+    partition_columns: Optional[list[str]] = None,
+    order_within_files: Optional[list[str]] = None,
+) -> None:
+    """Atomic overwrite of the parquet table at `path`: write to a shadow
+    dir, swap, drop the old data. The rename is the commit point.
+    ``order_within_files`` sorts rows inside each write task AFTER the
+    partition co-location shuffle (cluster_columns layout — applied last so
+    the repartition cannot undo it).
+
+    Zero-row results need a schema-bearing file (a partitioned/multi-task
+    empty write emits no parquet footer at all), but probing df.isEmpty()
+    up front would evaluate the WHOLE query once extra — for an MV refresh
+    or CDC rebuild that doubles the compute. Instead: write first, and
+    only if the shadow dir came out file-less rewrite it as one empty
+    single-task file (the second write runs on a known-empty frame, so the
+    slow path costs nothing).
+    """
+    shadow = f"{path}__swap_{uuid.uuid4().hex[:8]}"
+    out = df
+    if partition_columns:
+        out = out.repartition(*[F.col(c) for c in partition_columns])
+    if order_within_files:
+        out = out.sortWithinPartitions(
+            *_write_sort_cols(partition_columns, order_within_files)
+        )
+    w = out.write.mode("overwrite")
+    if partition_columns:
+        w = w.partitionBy(*partition_columns)
+    w.parquet(shadow)
+    if not any(
+        f.endswith(".parquet") for _, _, fs in os.walk(shadow) for f in fs
+    ):
+        df.sparkSession.createDataFrame([], df.schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(shadow)
+    backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
+    if os.path.isdir(path):
+        os.rename(path, backup)
+    os.rename(shadow, path)
+    if os.path.isdir(backup):
+        shutil.rmtree(backup, ignore_errors=True)
+    # invalidate cached file listings for THIS path only — clearCache()
+    # here would drop every cached relation in the session (including
+    # in-flight persisted frames and unrelated tables' file indexes)
+    df.sparkSession.catalog.refreshByPath(path)
+
+
 def build(spark, out_dir):
     """Run the pipeline; writes tables under out_dir, returns {name: DataFrame}."""
     views = {}
     written = {}
-    _pending_compact = {}
-    _uc_tags = {}
 
     def _tbl_path(name):
         return os.path.join(out_dir, name.replace(".", "/"))
@@ -45,60 +115,7 @@ def build(spark, out_dir):
 
     # action: write_orders (materialized_view)
     df = views['v_tagged']
-    df.write.mode('overwrite').parquet(_tbl_path('main.bronze.alice_orders_tagged'))
+    swap_overwrite(_tbl_path('main.bronze.alice_orders_tagged'), df)
     written['main.bronze.alice_orders_tagged'] = spark.read.parquet(_tbl_path('main.bronze.alice_orders_tagged'))
 
-    # auto-compaction (lhp.autoOptimize.maxFiles), deferred to after every
-    # action like the engine (operators/write.py:run_pending_compactions):
-    # compacting mid-build would delete the files behind DataFrames already
-    # captured in views/written. Same atomic shadow-swap as tables.py:compact,
-    # rewrite sized like the engine's, cluster ordering re-applied.
-    if _pending_compact:
-        import glob as _glob, os as _os, shutil as _shutil, uuid as _uuid
-        from pyspark.sql import functions as _F
-        for _cname, (_cpath, _cmax, _cpcols, _cccols, _czauto) in _pending_compact.items():
-            if len(_glob.glob(_cpath + "/**/*.parquet", recursive=True)) <= _cmax:
-                continue
-            _cdf = spark.read.parquet(_cpath)
-            if _cpcols:
-                # partition dirs own their key; morton degrades to
-                # within-partition lexicographic here (engine parity,
-                # tables.py:compact). Lead the sort with the partition
-                # columns so the partitionBy writer's own (unstable) sort
-                # is skipped and the cluster order reaches the files
-                _cdf = _cdf.repartition(*[_F.col(c) for c in _cpcols])
-                if _cccols:
-                    _cdf = _cdf.sortWithinPartitions(
-                        *(_cpcols + [c for c in _cccols if c not in _cpcols]))
-            elif _czauto and _cccols:
-                _rows = _cdf.count()
-                _cdf = morton_layout(_cdf, _cccols, max(1, -(-_rows // 4000000)))
-            else:
-                _rows = _cdf.count()
-                _cdf = _cdf.repartition(max(1, -(-_rows // 4000000)))
-                if _cccols:
-                    _cdf = _cdf.sortWithinPartitions(*_cccols)
-            _shadow = _cpath + "__swap_" + _uuid.uuid4().hex[:8]
-            _w = _cdf.write.mode("overwrite")
-            if _cpcols:
-                _w = _w.partitionBy(*_cpcols)
-            _w.parquet(_shadow)
-            _old = _cpath + "__old_" + _uuid.uuid4().hex[:8]
-            _os.rename(_cpath, _old)
-            _os.rename(_shadow, _cpath)
-            _shutil.rmtree(_old, ignore_errors=True)
-            # refresh only this path — clearCache() would drop every cached
-            # relation in the session (engine parity: tables.py:overwrite)
-            spark.catalog.refreshByPath(_cpath)
-            written[_cname] = spark.read.parquet(_cpath)
-    # UC tags, resolved at compile time: persisted as one artifact per build
-    # (the generated-code analogue of the reference's tagging hook; a
-    # UC-backed deployment turns these into ALTER TABLE ... SET TAGS)
-    if _uc_tags:
-        import json as _json
-        with open(os.path.join(out_dir, "_uc_tags.json"), "w") as _tf:
-            _json.dump(
-                {k: {"table_tags": v[0], "column_tags": v[1]}
-                 for k, v in _uc_tags.items()},
-                _tf, indent=2, sort_keys=True)
     return written

@@ -715,30 +715,38 @@ def _imv_spec(aggs):
 def test_compiled_cdc_carries_engine_functions_verbatim():
     """Compiled scripts run the engine's own functions, copied at compile
     time — not an engine import and not a second copy of the logic — and
-    only those they call: the SCD functions for a CDC write, the streaming
-    drain for a write that can stream, the Morton layout for
-    cluster_by_auto, the expectations for a data_quality action (the
-    quarantine functions too for quarantine mode), the partial
-    aggregates or the full recompute for an incremental MV, and the schema
-    rescue and single-file stream path for a cloudfiles load that uses
-    them."""
+    of each group only the functions the script calls and the functions
+    those call: the SCD functions for a CDC write, the streaming drain for
+    a write that can stream, the Morton layout for cluster_by_auto, the
+    expectations for a data_quality action (the fail check only where one
+    is registered, the quarantine functions too for quarantine mode), the
+    partial aggregates or the full recompute for an incremental MV, the
+    schema rescue and single-file stream path for a cloudfiles load that
+    uses them, and the store's own table writes: `swap_overwrite` for
+    every visible overwrite, `append_path` for the append flow and
+    `compact_path` (with the Morton layout it calls) for a registered
+    auto-compaction."""
     import inspect
 
-    from lakehouse_plumber_spark import context, expectations
+    from lakehouse_plumber_spark import context, expectations, tables
     from lakehouse_plumber_spark.functions import zorder
     from lakehouse_plumber_spark.operators import cdc, incremental, load, quarantine
 
     scd = [cdc._dedup_key_seq, cdc._rebuild_scd2]
     drain = [context.run_available_now, context.for_each_batch]
     morton = [zorder.morton_layout]
-    dqe = [expectations.Expectation, expectations.ExpectationFailedError,
-           expectations.apply_expectations, expectations.check_failures]
+    dqe = [expectations.Expectation, expectations.apply_expectations]
+    fail = [expectations.ExpectationFailedError, expectations.check_failures]
     quar = [quarantine.quarantine_split, quarantine.patch_rescued,
             quarantine._parse_and_revalidate]
-    imv = [incremental.batch_partials, incremental.finalize_partials,
-           incremental.recompute_aggs]
+    partials = [incremental.batch_partials, incremental.finalize_partials]
+    recompute = [incremental.recompute_aggs]
     files = [load.rescued_schema, load.file_stream_path]
-    every = scd + drain + morton + dqe + quar + imv + files
+    overwrite = [tables.swap_overwrite, tables._write_sort_cols]
+    append = overwrite + [tables.append_path, tables._is_table, tables.partition_columns_on_disk]
+    compact = [tables.compact_path, tables.data_file_count, tables.merge_compaction]
+    every = (scd + drain + morton + dqe + fail + quar + partials + recompute + files
+             + append + compact)
     stream = {
         "pipeline": "p", "flowgroup": "st",
         "actions": [
@@ -748,6 +756,10 @@ def test_compiled_cdc_carries_engine_functions_verbatim():
              "write_target": {"type": "streaming_table", "database": "m.s", "table": "t"}},
         ],
     }
+    compacted = {**stream, "flowgroup": "stc", "actions": [stream["actions"][0], {
+        **stream["actions"][1], "write_target": {
+            **stream["actions"][1]["write_target"],
+            "table_properties": {"lhp.autoOptimize.maxFiles": "4"}}}]}
     clustered = {
         "pipeline": "p", "flowgroup": "zo",
         "actions": [
@@ -759,14 +771,16 @@ def test_compiled_cdc_carries_engine_functions_verbatim():
         ],
     }
     for spec, carried in [
-        (_cdc_scd_spec(2), scd + drain),  # the raw-event append drains too
-        (stream, drain + files),
-        (clustered, morton),
-        (_dq_spec("dqe"), dqe),
-        (_dq_spec("quarantine"), dqe + quar + drain),
-        (_imv_spec({"n": "count(*)", "s": "sum(amt)"}), imv + drain + files),
-        (_imv_spec({"n": "count(DISTINCT amt)"}), imv + drain + files),
-        (FG_SPEC, []),
+        (_cdc_scd_spec(2), scd + drain + overwrite),  # the raw-event append drains too
+        (stream, drain + append + [load.file_stream_path]),
+        (compacted, drain + append + compact + morton + [load.file_stream_path]),
+        (clustered, morton + overwrite),
+        (_dq_spec("dqe"), dqe + overwrite),
+        (_dq_spec("dqe", action="fail"), dqe + fail + overwrite),
+        (_dq_spec("quarantine"), [expectations.Expectation] + quar + drain + overwrite),
+        (_imv_spec({"n": "count(*)", "s": "sum(amt)"}), partials + drain + files + overwrite),
+        (_imv_spec({"n": "count(DISTINCT amt)"}), recompute + drain + files + overwrite),
+        (FG_SPEC, overwrite),
     ]:
         src = compile_flowgroup(load_flowgroup(spec))
         assert "import lakehouse_plumber_spark" not in src
@@ -776,9 +790,11 @@ def test_compiled_cdc_carries_engine_functions_verbatim():
                 assert inspect.getsource(fn) in src, label
             else:
                 assert f"def {fn.__name__}(" not in src and f"class {fn.__name__}" not in src, label
-        assert "_dq_checks" not in src, spec["flowgroup"]  # no fail expectation here
-    src = compile_flowgroup(load_flowgroup(_dq_spec("dqe", action="fail")))
-    assert "_dq_checks = []" in src and "check_failures(_obs, _fails)" in src
+        # a registry and its end-of-build pass only where an action registers
+        assert ("_dq_checks = []" in src) == ("check_failures(_obs, _fails)" in src) \
+            == (expectations.check_failures in carried), spec["flowgroup"]
+        assert ("_pending_compact" in src) == (spec is compacted), spec["flowgroup"]
+        assert "_uc_tags" not in src, spec["flowgroup"]
 
 
 @pytest.mark.parametrize("scd", [1, 2])
@@ -802,7 +818,9 @@ def test_compiled_scd_rebuild_shuffles_once_on_keys(spark, tmp_path, monkeypatch
     ns: dict = {}
     exec(compile(src, "<generated>", "exec"), ns)
     written = ns["build"](spark, str(tmp_path))
-    plan = plans[str(tmp_path / "m" / "pl" / f"t{scd}")]
+    # the rebuild's write job, into the shadow dir swap_overwrite commits
+    shadow = str(tmp_path / "m" / "pl" / f"t{scd}__swap_")
+    plan = next(p for path, p in plans.items() if path.startswith(shadow))
     assert plan.count("Exchange hashpartitioning") == 1
     assert re.search(r"Exchange hashpartitioning\(id#\d+, \d+\)", plan)
     got = sorted(r.v for r in written[f"m.pl.t{scd}"].collect())
@@ -1989,3 +2007,117 @@ def test_streaming_fail_expectation_is_refused(spark, runner, tmp_path, path):
         assert not runner.store.exists("m.sd.t")
     else:
         assert not os.path.exists(tmp_path / "gen" / "m" / "sd" / "t")
+
+
+def _parquet_files(root):
+    import glob
+
+    return sorted(glob.glob(str(root) + "/**/*.parquet", recursive=True))
+
+
+@pytest.mark.parametrize("write", ["materialized_view", "streaming_table"])
+def test_zero_row_partitioned_write_matches_engine(spark, runner, tmp_path, write):
+    """A partitioned target fed zero rows builds in both paths and reads
+    back the query's schema with no rows: an empty partitioned write emits
+    no file, so the write falls back to one schema-bearing file."""
+    spec = {
+        "pipeline": "p", "flowgroup": "empty",
+        "actions": [
+            {"name": "ld", "type": "load", "target": "v",
+             "source": {"type": "sql", "sql": "SELECT id, CAST(id % 3 AS INT) AS b FROM range(0)"}},
+            {"name": "wr", "type": "write", "source": "v",
+             "write_target": {"type": write, "database": "m.e", "table": "t",
+                              "partition_columns": ["b"]}},
+        ],
+    }
+    engine = runner.run(load_flowgroup(spec)).resolve_view("m.e.t")
+    _, written = _build_compiled(spark, spec, tmp_path / "gen")
+    assert written["m.e.t"].dtypes == engine.dtypes == [("id", "bigint"), ("b", "int")]
+    assert written["m.e.t"].count() == engine.count() == 0
+
+
+def test_partitioned_clustered_mv_layout_matches_engine(spark, runner, tmp_path):
+    """A partitioned and clustered MV gets the engine's layout from its
+    compiled script: one file per partition value, rows sorted by the
+    cluster column within each file."""
+    spec = {
+        "pipeline": "p", "flowgroup": "pc",
+        "actions": [
+            {"name": "ld", "type": "load", "target": "v",
+             "source": {"type": "sql", "sql": (
+                 "SELECT id, CAST(id % 3 AS INT) AS b, (id * 7919) % 1000 AS c "
+                 "FROM range(0, 1000, 1, 8)")}},
+            {"name": "wr", "type": "write", "source": "v",
+             "write_target": {"type": "materialized_view", "database": "m.pc", "table": "t",
+                              "partition_columns": ["b"], "cluster_columns": ["c"]}},
+        ],
+    }
+    runner.run(load_flowgroup(spec))
+    _, written = _build_compiled(spark, spec, tmp_path / "gen")
+    layouts = []
+    for root in (runner.store.path("m.pc.t"), tmp_path / "gen" / "m" / "pc" / "t"):
+        files = _parquet_files(root)
+        for f in files:
+            c = [r.c for r in spark.read.parquet(f).select("c").collect()]
+            assert c == sorted(c), f
+        layouts.append(len(files))
+    assert layouts == [3, 3]
+    assert written["m.pc.t"].count() == 1000
+
+
+def test_compiled_cdc_partition_columns_match_engine(spark, runner, tmp_path):
+    """A compiled CDC target honours partition_columns, as the engine's
+    apply_changes does: k= dirs, and the engine's rows."""
+    import os
+
+    spec = _cdc_scd_spec(2)
+    spec["actions"][0]["source"]["sql"] = (
+        "SELECT id, id % 2 AS k, v, seq, op FROM (VALUES (1, 'a', 1, 'U'), "
+        "(1, 'b', 2, 'U'), (2, 'x', 1, 'U'), (3, 'y', 1, 'U'), (2, 'x', 2, 'D')) "
+        "AS t(id, v, seq, op)")
+    spec["actions"][1]["write_target"]["partition_columns"] = ["k"]
+    engine = runner.run(load_flowgroup(spec)).resolve_view("m.pl.t2")
+    _, written = _build_compiled(spark, spec, tmp_path / "gen")
+    parts = {d for d in os.listdir(tmp_path / "gen" / "m" / "pl" / "t2") if "=" in d}
+    assert parts == {"k=0", "k=1"}
+    cols = sorted(engine.columns)
+    assert sorted(written["m.pl.t2"].columns) == cols
+    got, want = ([tuple(r) for r in df.select(*cols).collect()] for df in (written["m.pl.t2"], engine))
+    assert sorted(got, key=str) == sorted(want, key=str)
+    assert len(want) == 4  # id 1 twice (SCD2 history), id 3, id 2 closed by its delete
+
+
+def test_compiled_snapshot_cdc_of_empty_snapshots_builds(spark, runner, tmp_path, monkeypatch):
+    """Snapshots that are all empty still build a table that reads back
+    the engine's schema. The write's own schema-bearing fallback covers
+    this, so the script never probes isEmpty(), which would run the SCD
+    rebuild once more."""
+    def pull(latest):
+        from pyspark.sql import SparkSession
+        nxt = 1 if latest is None else latest + 1
+        if nxt > 2:
+            return None
+        return SparkSession.builder.getOrCreate().createDataFrame([], "id int, v string"), nxt
+
+    spec = {
+        "pipeline": "p", "flowgroup": "snap_empty",
+        "actions": [
+            {"name": "wr", "type": "write",
+             "write_target": {"type": "streaming_table", "database": "m.se", "table": "t",
+                              "mode": "snapshot_cdc",
+                              "snapshot_cdc_config": {"keys": ["id"], "stored_as_scd_type": 2,
+                                                      "source_callable": pull}}},
+        ],
+    }
+    runner.run(load_flowgroup(spec))
+    cols = ["id", "v", "__start_at", "__end_at"]
+    engine = runner.store.read("m.se.t").select(*cols)
+    probes = []
+    cls = type(spark.range(1))
+    is_empty = cls.isEmpty
+    monkeypatch.setattr(cls, "isEmpty", lambda df: probes.append(1) or is_empty(df))
+    _, written = _build_compiled(spark, spec, tmp_path / "gen")
+    got = written["m.se.t"]
+    assert got.select(*cols).dtypes == engine.dtypes
+    assert got.count() == engine.count() == 0
+    assert probes == []

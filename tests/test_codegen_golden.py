@@ -228,6 +228,35 @@ def test_golden_sources_are_valid_python(name):
         compile(f.read(), f"{name}.golden", "exec")
 
 
+_SCRIPTS = sorted(
+    [os.path.join(BASELINE_DIR, f) for f in os.listdir(BASELINE_DIR) if f.endswith(".py.golden")]
+    + [os.path.join(root, f)
+       for tree in ("generated_baseline", "generated_baseline_sandbox")
+       for root in [os.path.join(os.path.dirname(__file__), "fixtures", "golden_project", tree)]
+       for f in os.listdir(root) if f.endswith(".py")]
+)
+
+
+@pytest.mark.parametrize("path", _SCRIPTS, ids=lambda p: os.path.relpath(p, os.path.dirname(__file__)))
+def test_golden_script_prelude_carries_no_dead_code(path):
+    """Every top-level function or class the prelude copies into a script
+    is used elsewhere in that script, and no script imports the engine."""
+    import ast
+
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    copied = [n for n in tree.body if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+              and n.name not in ("_load_module", "build")]  # the script's own frame
+    for node in copied:
+        used = {n.id for other in tree.body if other is not node
+                for n in ast.walk(other) if isinstance(n, ast.Name)}
+        assert node.name in used, f"{node.name} is copied but never used"
+    for node in ast.walk(tree):
+        mods = ([a.name for a in node.names] if isinstance(node, ast.Import)
+                else [node.module or ""] if isinstance(node, ast.ImportFrom) else [])
+        assert not any(m.startswith("lakehouse_plumber_spark") for m in mods), mods
+
+
 # ---------------------------------------------------------------------------
 # Compile-vs-refuse boundary (r12, VERDICT r11 item 4): for every extension
 # family, pin WHICH methods compile and the EXACT refusal message of those

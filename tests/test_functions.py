@@ -133,6 +133,21 @@ def test_peak_concurrency_midnight_clipping(spark):
         peak_concurrency(df, "ts", 0)
 
 
+def test_zorder_import_leaves_pandas_out():
+    """The table store imports the Morton layout, so importing it must stay
+    cheap: the llm package no longer imports its submodules (pandas among
+    them) when one of them is imported."""
+    import os
+    import subprocess
+    import sys
+
+    code = ("import sys, lakehouse_plumber_spark.functions.zorder, lakehouse_plumber_spark.tables; "
+            "print('pandas' in sys.modules)")
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True, check=True,
+                         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    assert out.stdout.strip() == "False"
+
+
 def test_zorder_key_matches_python_interleave(spark):
     from lakehouse_plumber_spark.functions.zorder import with_zorder_key
 

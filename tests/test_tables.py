@@ -209,21 +209,21 @@ def test_within_flowgroup_compaction_merge_strictest_bound(spark, tmp_path):
 
 
 def test_merge_compaction_rule():
-    """_merge_compaction unit contract: strictest bound, ordering survives,
+    """merge_compaction unit contract: strictest bound, ordering survives,
     logged action follows the ordering actually applied."""
-    from lakehouse_plumber_spark.operators.write import _merge_compaction
+    from lakehouse_plumber_spark.tables import merge_compaction
 
     # ordering on the loose side: bound from strict, ccols+name from orderer
-    assert _merge_compaction(("strict", 1, [], False), ("ordered", 9, ["c"], False)) == ("ordered", 1, ["c"], False)
+    assert merge_compaction(("strict", 1, [], False), ("ordered", 9, ["c"], False)) == ("ordered", 1, ["c"], False)
     # ordering on the strict side: everything from it
-    assert _merge_compaction(("s", 1, ["k"], False), ("loose", 9, [], False)) == ("s", 1, ["k"], False)
+    assert merge_compaction(("s", 1, ["k"], False), ("loose", 9, [], False)) == ("s", 1, ["k"], False)
     # neither orders: stricter side names the event
-    assert _merge_compaction(("a", 5, [], False), ("b", 2, [], False)) == ("b", 2, [], False)
+    assert merge_compaction(("a", 5, [], False), ("b", 2, [], False)) == ("b", 2, [], False)
     # both order: first registration's ordering wins (stable), strictest bound
-    assert _merge_compaction(("a", 5, ["x"], False), ("b", 2, ["y"], True)) == ("a", 2, ["x"], False)
+    assert merge_compaction(("a", 5, ["x"], False), ("b", 2, ["y"], True)) == ("a", 2, ["x"], False)
     # the morton flag travels with the ordering that survives
-    assert _merge_compaction(("a", 5, ["x", "y"], True), ("b", 2, [], False)) == ("a", 2, ["x", "y"], True)
-    assert _merge_compaction(("a", 5, [], False), ("b", 2, ["x", "y"], True)) == ("b", 2, ["x", "y"], True)
+    assert merge_compaction(("a", 5, ["x", "y"], True), ("b", 2, [], False)) == ("a", 2, ["x", "y"], True)
+    assert merge_compaction(("a", 5, [], False), ("b", 2, ["x", "y"], True)) == ("b", 2, ["x", "y"], True)
 
 
 def test_compact_refuses_streaming_consumed_table(spark, tmp_path):
@@ -662,16 +662,16 @@ def test_empty_partitioned_overwrite_then_append_restores_layout(spark, tmp_path
 
     import pytest
 
-    from lakehouse_plumber_spark.tables import ParquetTableStore
+    from lakehouse_plumber_spark.tables import ParquetTableStore, partition_columns_on_disk
 
     store = ParquetTableStore(spark, str(tmp_path / "s"))
     empty = spark.range(0).selectExpr("id", "cast(id % 4 AS int) AS __b")
     store.overwrite("l.p.idx", empty, partition_columns=["__b"])
-    assert store._partition_columns_on_disk("l.p.idx") == []
+    assert partition_columns_on_disk(store.path("l.p.idx")) == []
     rows = spark.range(100).selectExpr("id", "cast(id % 4 AS int) AS __b")
     store.append("l.p.idx", rows, partition_columns=["__b"])
     # clean partitioned layout: dirs present, no root-level data file
-    assert store._partition_columns_on_disk("l.p.idx") == ["__b"]
+    assert partition_columns_on_disk(store.path("l.p.idx")) == ["__b"]
     root_files = [
         f for f in os.listdir(store.path("l.p.idx")) if f.endswith(".parquet")
     ]
