@@ -142,13 +142,16 @@ Flowgroup: {flowgroup}
 No engine import: this file is exactly what executes.
 """
 
-import importlib.util
 import os
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+'''
 
+# only a script whose build calls it (python loads and transforms, snapshot
+# source functions, module-path sinks) carries `_load_module` and its import
+_LOAD_MODULE = '''
 def _load_module(path, name):
     spec = importlib.util.spec_from_file_location(name, path)
     mod = importlib.util.module_from_spec(spec)
@@ -1241,6 +1244,8 @@ def compile_flowgroup(fg: FlowGroup, base_dir: str | None = None) -> str:
         body_text = "".join(f"    {n} = {empty}\n" for n, empty, _ in used) + body_text
         build = "\n".join([_BUILD, body_text, *[p for _, _, p in used], "    return written\n"])
         head = _HEADER.format(pipeline=fg.pipeline, flowgroup=fg.flowgroup)
+        if "_load_module(" in build:
+            head = head.replace("\nimport os\n", "\nimport importlib.util\nimport os\n") + _LOAD_MODULE
         return "\n".join(p for p in (head, _prelude(build), build) if p)
     finally:
         _compile_written_views.reset(wtoken)

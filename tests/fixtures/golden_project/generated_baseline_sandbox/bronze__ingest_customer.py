@@ -6,18 +6,10 @@ Flowgroup: ingest_customer
 No engine import: this file is exactly what executes.
 """
 
-import importlib.util
 import os
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-
-
-def _load_module(path, name):
-    spec = importlib.util.spec_from_file_location(name, path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 # The engine's own functions, copied verbatim at compile time from:

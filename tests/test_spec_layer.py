@@ -51,6 +51,24 @@ class TestSubstitution:
         with pytest.raises(UnresolvedTokenError):
             substitute({"p": "${missing}"}, tokens={}, variables={})
 
+    def test_secret_value_is_inserted_verbatim(self, monkeypatch):
+        """Secrets are bound after every other substitution: `${x}` and
+        `%{x}` inside a secret's value are not substituted (nor refused as
+        unresolved)."""
+        monkeypatch.setenv("LHP_SECRET_API_TOKEN", "p${x}w%{y}")
+        spec = {"pipeline": "p", "flowgroup": "f", "actions": [
+            {**BASE_ACTIONS[0], "source": {"type": "sql",
+                                           "sql": "SELECT '${secret:api/token}' AS t"}},
+            BASE_ACTIONS[1]]}
+        fg = load_flowgroup(spec)
+        assert fg.actions[0].source["sql"] == "SELECT 'p${x}w%{y}' AS t"
+        assert substitute("${secret:api/token}", tokens={"x": "X"}) == "p${x}w%{y}"
+
+    def test_token_holding_a_secret_ref_resolves(self, monkeypatch):
+        monkeypatch.setenv("LHP_SECRET_API_TOKEN", "s3cr3t")
+        assert substitute({"pw": "${pw}"}, tokens={"pw": "${secret:api/token}"}) == \
+            {"pw": "s3cr3t"}
+
 
 class TestPresetsTemplates:
     def test_deep_merge_scalars_lists_dicts(self):
@@ -458,7 +476,7 @@ class TestParseCache:
     def test_shared_inputs_parsed_once_per_discovery(self, tmp_path, monkeypatch):
         """Each preset and template file is parsed and compiled once per
         discovery, however many flowgroups name it; a warm second discovery
-        parses no rendered template and no flowgroup file."""
+        reuses every resolved flowgroup and parses and compiles nothing."""
         from lakehouse_plumber_spark.parsers import discover_flowgroups
 
         n = 40
@@ -481,8 +499,7 @@ class TestParseCache:
         compiles.clear()
         assert [fg.model_dump() for fg in discover_flowgroups(str(proj))] == \
             [fg.model_dump() for fg in fgs]
-        assert [texts.count(t) for t in shared] == [1, 1, 1]
-        assert len(texts) == 4 and len(compiles) == 1
+        assert texts == [] and compiles == []
 
     def test_edits_leave_one_entry_per_live_input(self, tmp_path):
         """Ten edit steps, each followed by a whole-project discovery, leave
@@ -662,6 +679,161 @@ actions:
                     templates_dir=str(tmp_path / "templates"),
                     memo=memo,
                 )
+
+
+class TestResolvedCache:
+    """The resolved-flowgroup cache (`.lhp/cache/resolved`): a warm
+    discovery reuses each flowgroup's resolved spec while every input of its
+    resolution is unchanged, and gives what a fresh resolution gives."""
+
+    SECRET = "tok-4f1c9e"
+
+    def _proj(self, tmp_path, monkeypatch):
+        """A flowgroup resolved through a template, a two-level preset chain
+        and a token; one with a secret ref; one expanded from a blueprint."""
+        monkeypatch.setenv("LHP_SECRET_API_TOKEN", self.SECRET)
+        proj = tmp_path / "proj"
+        files = {
+            "substitutions/dev.yaml": "dev: {catalog: main}\n",
+            "presets/base.yaml": "defaults:\n  variables: {layer: bronze, tier: raw}\n",
+            "presets/silver.yaml": "extends: base\ndefaults:\n  variables: {layer: silver}\n",
+            "templates/agg.yaml": (
+                "parameters:\n  - {name: out, required: true}\n  - {name: lim, default: 7}\n"
+                "pipeline: p\nflowgroup: {{ out }}\nactions:\n"
+                "  - {name: ld, type: load, target: v, source: {type: sql,\n"
+                "     sql: 'SELECT %{tier} AS t FROM ${catalog}.s.src LIMIT {{ lim }}'}}\n"
+                "  - name: wr\n    type: write\n    source: v\n"
+                "    write_target: {type: materialized_view, database: m.s, table: {{ out }}}\n"),
+            "pipelines/fg.yaml": "use_template: agg\ntemplate_parameters: {out: t0}\n"
+                                 "presets: [silver]\n",
+            "pipelines/secret.yaml": (
+                "pipeline: p\nflowgroup: sec\nactions:\n"
+                "  - {name: ld, type: load, target: v, source: {type: sql,\n"
+                "     sql: \"SELECT '${secret:api/token}' AS tok\"}}\n"
+                "  - name: wr\n    type: write\n    source: v\n"
+                "    write_target: {type: materialized_view, database: m.s, table: sec}\n"),
+            "blueprints/ingest.yaml": yaml.safe_dump({
+                "name": "ingest", "parameters": [{"name": "dom", "required": True}],
+                "flowgroups": [{"pipeline": "b_%{dom}", "flowgroup": "ingest_%{dom}", "actions": [
+                    {**BASE_ACTIONS[0], "source": {"type": "sql", "sql": "SELECT 1 LIMIT 5"}},
+                    {**BASE_ACTIONS[1], "write_target": {
+                        "type": "materialized_view", "database": "m.s", "table": "%{dom}"}}]}]}),
+            "pipelines/inst.yaml": "use_blueprint: ingest\nparameters: {dom: d0}\n",
+        }
+        for rel, text in files.items():
+            (proj / rel).parent.mkdir(parents=True, exist_ok=True)
+            (proj / rel).write_text(text)
+        return proj
+
+    @staticmethod
+    def _dumps(proj):
+        from lakehouse_plumber_spark.__main__ import _load_tokens
+        from lakehouse_plumber_spark.parsers import discover_flowgroups
+
+        fgs = discover_flowgroups(str(proj), tokens=_load_tokens(str(proj), "dev"))
+        return [fg.model_dump() for fg in fgs]
+
+    def _fresh(self, proj, monkeypatch):
+        with monkeypatch.context() as m:
+            m.setenv("LHP_NO_PARSE_CACHE", "1")
+            return self._dumps(proj)
+
+    @staticmethod
+    def _entries(proj, kind="resolved"):
+        d = proj / ".lhp" / "cache" / kind
+        return sorted(d / f for f in os.listdir(d) if f.endswith(".pkl"))
+
+    @pytest.mark.parametrize("edited", [
+        "flowgroup", "parent_preset", "template", "tokens", "secret", "blueprint", "code_stamp"])
+    def test_next_discovery_sees_each_input_edit(self, tmp_path, monkeypatch, edited):
+        from lakehouse_plumber_spark import parsers
+
+        proj = self._proj(tmp_path, monkeypatch)
+        before = self._dumps(proj)
+        assert self._dumps(proj) == before == self._fresh(proj, monkeypatch)
+        edits = {
+            "flowgroup": ("pipelines/fg.yaml", "out: t0", "out: t1"),
+            "parent_preset": ("presets/base.yaml", "tier: raw", "tier: cooked"),
+            "template": ("templates/agg.yaml", "default: 7", "default: 9"),
+            "tokens": ("substitutions/dev.yaml", "catalog: main", "catalog: other"),
+            "blueprint": ("blueprints/ingest.yaml", "LIMIT 5", "LIMIT 6"),
+        }
+        if edited in edits:
+            rel, old, new = edits[edited]
+            (proj / rel).write_text((proj / rel).read_text().replace(old, new))
+        elif edited == "secret":
+            monkeypatch.setenv("LHP_SECRET_API_TOKEN", "tok-rotated")
+        else:
+            # a change to the resolution code: unseen while the stamp is the
+            # same, seen as soon as the stamp moves
+            real = parsers._expand_variable_definitions
+            monkeypatch.setattr(parsers, "_expand_variable_definitions",
+                                lambda v: {**real(v), "tier": "patched"})
+            assert self._dumps(proj) == before
+            monkeypatch.setattr(parsers, "_code_stamp", lambda: "another build")
+        after = self._dumps(proj)
+        assert after != before
+        assert after == self._fresh(proj, monkeypatch)
+
+    def test_warm_hit_reruns_graph_checks_only_for_bound_secrets(self, tmp_path, monkeypatch):
+        from lakehouse_plumber_spark import parsers
+
+        proj = self._proj(tmp_path, monkeypatch)
+        self._dumps(proj)
+        calls = []
+        real = parsers.validate_flowgroup_graph
+        monkeypatch.setattr(parsers, "validate_flowgroup_graph",
+                            lambda actions: calls.append(actions) or real(actions))
+        self._dumps(proj)
+        assert [a[0].source["sql"] for a in calls] == [f"SELECT '{self.SECRET}' AS tok"]
+
+    def test_one_entry_per_live_flowgroup_and_no_secret_on_disk(self, tmp_path, monkeypatch):
+        proj = self._proj(tmp_path, monkeypatch)
+        fgs = self._dumps(proj)
+        assert any(self.SECRET in str(fg) for fg in fgs)
+        for step in range(3):
+            fg = proj / "pipelines" / "fg.yaml"
+            fg.write_text(fg.read_text().replace(f"out: t{step}", f"out: t{step + 1}"))
+            assert len(self._dumps(proj)) == len(fgs) == len(self._entries(proj)) == 3
+        for base, _, files in os.walk(proj / ".lhp"):
+            for f in files:
+                with open(os.path.join(base, f), "rb") as fh:
+                    assert self.SECRET.encode() not in fh.read(), f
+
+    def test_truncated_entry_falls_back_to_fresh_resolution(self, tmp_path, monkeypatch):
+        proj = self._proj(tmp_path, monkeypatch)
+        before = self._dumps(proj)
+        for entry in self._entries(proj):
+            entry.write_bytes(entry.read_bytes()[:40])
+        assert self._dumps(proj) == before
+        # the fresh resolutions were stored again, whole
+        import pickle
+
+        assert all(pickle.loads(e.read_bytes())["spec"] for e in self._entries(proj))
+
+    def test_compile_project_same_warm_cold_and_uncached(self, tmp_path, monkeypatch):
+        import sys
+
+        sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench"))
+        try:
+            import gen
+        finally:
+            sys.path.pop(0)
+        from lakehouse_plumber_spark.__main__ import _load_tokens
+        from lakehouse_plumber_spark.parsers import discover_flowgroups
+
+        proj = tmp_path / "compile"
+        gen.make_compile_project(7, str(proj))
+        monkeypatch.setenv("LHP_SECRET_API_TOKEN", "bench-token")
+        tokens = _load_tokens(str(proj), "bench")
+
+        def dumps():
+            return [fg.model_dump() for fg in discover_flowgroups(str(proj), tokens=tokens)]
+
+        cold, warm = dumps(), dumps()
+        assert len(cold) == len(self._entries(proj)) == 200
+        monkeypatch.setenv("LHP_NO_PARSE_CACHE", "1")
+        assert cold == warm == dumps()
 
 
 class TestTableReadEdges:
