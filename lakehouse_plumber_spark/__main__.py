@@ -180,7 +180,8 @@ def cmd_run(args) -> int:
 def _print_perf_report(fgs: list, event_log: list[dict]) -> None:
     """--perf analog of the reference's performance_timer report
     (src/lhp/utils/performance_timer.py:150-166): per-operator-category
-    cnt/avg/min/max/total over the run's action timings, plus event counts.
+    cnt/avg/min/max/total over the run's action timings, each stage's wall
+    seconds and lanes, plus event counts.
     Driven entirely by the event log the engine already records, so enabling
     it adds zero overhead to the run itself."""
     # keyed by (pipeline, flowgroup, action): bare action names are only
@@ -207,6 +208,20 @@ def _print_perf_report(fgs: list, event_log: list[dict]) -> None:
             f"[PERF]   {cat:<28s} cnt={len(d):<4d} avg={sum(d)/len(d):.3f}s  "
             f"min={min(d):.3f}s  max={max(d):.3f}s  total={sum(d):>7.2f}s"
         )
+    stages = [ev["details"] for ev in event_log if ev.get("event") == "stage_completed"]
+    if stages:
+        print("[PERF] ============ stage walls ==============")
+        for st in stages:
+            print(
+                f"[PERF]   stage {st['stage']:<3d} flowgroups={len(st['flowgroups']):<4d} "
+                f"lanes={len(st['lanes']):<4d} wall={st['seconds']:>7.2f}s"
+            )
+        if any(len(st["lanes"]) > 1 for st in stages):
+            print(
+                "[PERF]   action seconds overlap in a stage with more than one "
+                "lane: its lanes run at the same time, so their totals above "
+                "can exceed the stage wall"
+            )
     print("[PERF] Event counts:")
     for name in sorted(event_counts):
         print(f"[PERF]   {name:<35s} {event_counts[name]:>8d}")
@@ -434,8 +449,12 @@ def cmd_jobs(args) -> int:
     reference JobGenerator, which emits staged job YAML from the
     cross-pipeline DAG (src/lhp/core/jobs/job_generator.py:60-108,
     job_builder.py:17-60: stages of tasks, each with depends_on and an
-    is-parallel marker). A scheduler that runs stage N's tasks concurrently
-    and stages in order reproduces exactly what `run` does in-process."""
+    is-parallel marker). `run` executes the same plan in-process: stages in
+    order, and a stage's flowgroups at the same time in lanes
+    (`dag.stage_lanes`). Flowgroups that share a view, a written table or a
+    user-module name run one after another in one lane, and a stage holding
+    a flowgroup with a per-table `spark_conf` runs as one lane. When a lane
+    fails, the running lanes finish and no later stage starts."""
     from lakehouse_plumber_spark.dag import CycleError
 
     try:

@@ -8,17 +8,21 @@ networkx needed at this scope.
 
 from __future__ import annotations
 
+import functools
 import re
 from collections import defaultdict, deque
+from typing import Optional
 
 from lakehouse_plumber_spark.models import Action, ActionType
+from lakehouse_plumber_spark.reporting import DEFAULT_RESULT_TABLE
 
 
 class CycleError(ValueError):
     pass
 
 
-def sql_table_refs(sql: str) -> set[str]:
+@functools.lru_cache(maxsize=4096)
+def sql_table_refs(sql: str) -> frozenset[str]:
     """Table/view identifiers read by a SQL string.
 
     Reference extracts reads with sqlglot + byte-exact token masking
@@ -26,9 +30,11 @@ def sql_table_refs(sql: str) -> set[str]:
     this image, so this is a masked-token scan: strip comments and string
     literals, then take identifiers after FROM/JOIN (skipping subqueries)
     plus `stream(ident)` refs. CTE names are excluded.
-    """
-    import re
 
+    Memoized on the text: one action's SQL is asked for on every
+    `Action.source_views` call (topo sort, graph checks, stage and lane
+    computation), and the answer is immutable so no caller can alter it.
+    """
     masked = re.sub(r"--[^\n]*", " ", sql)
     masked = re.sub(r"/\*.*?\*/", " ", masked, flags=re.S)
     # dynamic-SQL constructs carry their table ref as a QUOTED string —
@@ -54,7 +60,7 @@ def sql_table_refs(sql: str) -> set[str]:
     for m in re.finditer(r"\bstream\s*\(\s*([A-Za-z_][\w.]*)\s*\)", masked, re.I):
         refs.add(m.group(1))
     refs |= {d for d in dynamic if d.lower() not in ctes}
-    return refs
+    return frozenset(refs)
 
 
 class ValidationError(ValueError):
@@ -361,6 +367,100 @@ def execution_stages(deps: dict[int, set[int]], n: int) -> list[list[int]]:
         stages.append(stage)
         done.update(stage)
     return stages
+
+
+def _lane_name(name: str) -> str:
+    """A view or table name as the shared session's temp view namespace
+    sees it: dots folded (BuildContext.register), case-insensitive."""
+    return name.replace(".", "__").lower()
+
+
+def _imports_user_code(a: Action) -> bool:
+    """Whether the action may load a user module: `operators.load.
+    _import_module` registers it in sys.modules under a name built from the
+    action's name (`lhp_tf_<name>`, `lhp_sink_<name>`, ...)."""
+    src = a.source if isinstance(a.source, dict) else {}
+    wt = a.write_target
+    snap = wt.snapshot_cdc_config if wt is not None else None
+    return bool(
+        a.module_path
+        or src.get("module_path")
+        or (wt is not None and (wt.module_path or wt.batch_handler))
+        or (snap is not None and snap.source_function)
+    )
+
+
+def flowgroup_lane_keys(fg, reporting_default: Optional[dict] = None) -> set[str]:
+    """What a flowgroup's run touches that no flowgroup running at the same
+    time may touch:
+
+    - every view it registers or reads (`target`, `source_views()`,
+      `table_reads()`): views live in the one session, and reading a store
+      table from SQL registers it as a temp view too;
+    - every table it writes: the write target, the quarantine DLQ and its
+      `__outbox`/`__clean` tables, the incremental dedup index and grams
+      tables, and the test-reporting result table;
+    - the sys.modules names its user code is imported under
+      (`module:<action name>`, `module:lhp_test_reporter`).
+
+    `reporting_default` is the project's test_reporting block, used when
+    the flowgroup declares none (as `PipelineRunner` does)."""
+    names: list[str] = []
+    keys: set[str] = set()
+    for a in fg.actions:
+        names.extend(a.source_views())
+        names.extend(a.table_reads())
+        if a.target:
+            names.append(a.target)
+        if a.write_target is not None and a.write_target.full_name:
+            names.append(a.write_target.full_name)
+        if a.quarantine is not None:
+            dlq = a.quarantine.dlq_table
+            names.extend((dlq, f"{dlq}__outbox", f"{dlq}__clean"))
+        if a.dedup is not None:
+            names.extend(t for t in (a.dedup.index_table, a.dedup.grams_table) if t)
+        if _imports_user_code(a):
+            keys.add(f"module:{a.name}")
+    reporting = fg.test_reporting if fg.test_reporting is not None else reporting_default
+    if reporting and any(a.type == ActionType.TEST for a in fg.actions):
+        names.append((reporting.get("config") or {}).get("result_table", DEFAULT_RESULT_TABLE))
+        if reporting.get("module_path"):
+            keys.add("module:lhp_test_reporter")
+    keys.update(_lane_name(n) for n in names)
+    return keys
+
+
+def stage_lanes(
+    flowgroups: list, stage: list[int], reporting_default: Optional[dict] = None
+) -> list[list[int]]:
+    """Split one stage of `execution_stages` into lanes that may run at the
+    same time: flowgroups sharing a `flowgroup_lane_keys` key are one lane,
+    whose members run one after another in index order. Lanes come out
+    ordered by their first member.
+
+    A flowgroup whose write target sets `spark_conf` makes the whole stage
+    one lane: those confs are session-global for the length of its write."""
+    if any(
+        a.write_target is not None and a.write_target.spark_conf
+        for i in stage for a in flowgroups[i].actions
+    ):
+        return [list(stage)]
+    root = {i: i for i in stage}
+
+    def find(i: int) -> int:
+        while root[i] != i:
+            i = root[i]
+        return i
+
+    holder: dict[str, int] = {}
+    for i in stage:
+        for key in flowgroup_lane_keys(flowgroups[i], reporting_default):
+            a, b = find(i), find(holder.setdefault(key, i))
+            root[max(a, b)] = min(a, b)
+    lanes: dict[int, list[int]] = {}
+    for i in stage:
+        lanes.setdefault(find(i), []).append(i)
+    return list(lanes.values())
 
 
 def validate_streaming_compaction(flowgroups: list) -> list[str]:

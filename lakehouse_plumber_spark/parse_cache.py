@@ -41,6 +41,16 @@ import yaml
 
 MISSING = object()  # `get`'s answer when there is no readable entry
 
+# libyaml's loader when PyYAML was built with it: it builds the same objects
+# as the pure-Python SafeLoader, several times faster
+_LOADER = yaml.CSafeLoader if yaml.__with_libyaml__ else yaml.SafeLoader
+
+
+def parse_yaml(data: Any) -> Any:
+    """Parse one YAML document (text, bytes or a file): every discovery
+    parse goes through here."""
+    return yaml.load(data, Loader=_LOADER)
+
 
 class ParseCache:
     def __init__(self, project_root: str, kind: str = "parse") -> None:
@@ -66,7 +76,7 @@ class ParseCache:
         name = self.name(data)
         spec = self.get(name)
         if spec is MISSING:
-            spec = yaml.safe_load(data)
+            spec = parse_yaml(data)
             self.put(name, spec)
         return spec
 

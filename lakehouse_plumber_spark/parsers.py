@@ -50,6 +50,7 @@ from typing import Any, Callable, Mapping, Optional
 import yaml
 from pydantic import ValidationError as PydanticValidationError
 
+from lakehouse_plumber_spark import parse_cache
 from lakehouse_plumber_spark.dag import validate_flowgroup_graph
 from lakehouse_plumber_spark.models import FlowGroup, SpecError
 from lakehouse_plumber_spark.substitution import bind_secrets, substitute_tokens
@@ -124,7 +125,7 @@ def _shared_file(path: str, memo: dict) -> Optional[tuple[str, bytes]]:
 
 def _parse_shared(data: bytes, memo: dict) -> Any:
     cache = memo["shared_cache"]
-    return cache.load_text(data) if cache is not None else yaml.safe_load(data)
+    return cache.load_text(data) if cache is not None else parse_cache.parse_yaml(data)
 
 
 def _load_presets(preset_names: list[str], presets_dir: Optional[str], memo: dict) -> dict:
@@ -175,7 +176,7 @@ def _extract_parameters_block(raw: str) -> list:
             break
         block.append(ln)
     try:
-        parsed = yaml.safe_load("\n".join(block)) or {}
+        parsed = parse_cache.parse_yaml("\n".join(block)) or {}
     except yaml.YAMLError:
         return []
     decl = parsed.get("parameters")
@@ -255,7 +256,7 @@ def _expand_template(
         memo["names"].append(cache.name(data))
         template = cache.load_text(data) or {}
     else:
-        template = yaml.safe_load(rendered) or {}
+        template = parse_cache.parse_yaml(rendered) or {}
     merged = deep_merge({k: v for k, v in template.items() if k != "parameters"}, spec)
     merged.pop("use_template", None)
     merged.pop("template_parameters", None)
@@ -336,7 +337,7 @@ def load_flowgroup_file(
     templates_dir: Optional[str] = None,
 ) -> FlowGroup:
     with open(path) as f:
-        spec = yaml.safe_load(f)
+        spec = parse_cache.parse_yaml(f)
     base = os.path.dirname(os.path.abspath(path))
     return load_flowgroup(
         spec,
@@ -370,7 +371,7 @@ def load_project_config(project_root: str):
     if key in _project_config_cache:
         return _project_config_cache[key]
     try:
-        spec = yaml.safe_load(raw) or {}
+        spec = parse_cache.parse_yaml(raw) or {}
     except yaml.YAMLError as e:
         raise SpecError(f"lhp.yaml: {e}") from e
     try:
@@ -462,7 +463,7 @@ def discover_flowgroups(
             if data is None:
                 with open(p, "rb") as f:
                     data = f.read()
-            return yaml.safe_load(data) or {}
+            return parse_cache.parse_yaml(data) or {}
         except yaml.YAMLError as e:
             # malformed user YAML is a spec defect, not an engine traceback
             raise SpecError(f"{p}: {e}") from e

@@ -30,6 +30,8 @@ from typing import Any, Callable, Optional
 
 _TERMINAL_OK = "COMPLETED"
 _TERMINAL_FAIL = "FAILED"
+# where store_test_reporter appends when the config names no result_table
+DEFAULT_RESULT_TABLE = "_audit.lhp_test_results"
 
 
 def store_test_reporter(results: list[dict], config: dict, context: dict, spark) -> dict:
@@ -37,9 +39,9 @@ def store_test_reporter(results: list[dict], config: dict, context: dict, spark)
     (≙ reference providers/delta_test_reporter.py:38-120).
 
     ``context["store"]`` carries the runner's table store; ``result_table``
-    names the target (default ``_audit.lhp_test_results``)."""
+    names the target (default ``DEFAULT_RESULT_TABLE``)."""
     store = context.get("store")
-    table = config.get("result_table", "_audit.lhp_test_results")
+    table = config.get("result_table", DEFAULT_RESULT_TABLE)
     if store is None or not results:
         return {"published": 0, "failed": len(results)}
     if config.get("dry_run"):

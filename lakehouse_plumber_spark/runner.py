@@ -7,16 +7,25 @@ expectations, and emits an event log (≙ DLT event log flow_progress rows).
 
 Cross-pipeline orchestration (reference `lhp deps` / job stages,
 src/lhp/core/jobs/job_generator.py:60-108) is `run_many`: flowgroups are
-staged by table-level dependencies and executed stage by stage.
+staged by table-level dependencies and executed stage by stage. Inside a
+stage, flowgroups that share a view, a written table or a user-module name
+(`dag.stage_lanes`) form one lane and run one after another; different
+lanes run at the same time on the one SparkSession. A stage holding a
+flowgroup with a per-table `spark_conf` runs as one lane. When a lane
+fails, the lanes already running finish, the error of the lowest-index
+failing flowgroup is raised, and no later stage starts.
 """
 
 from __future__ import annotations
 
+import contextlib
 import sys
 import time
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from lakehouse_plumber_spark.context import BuildContext
 from lakehouse_plumber_spark.dag import topo_sort, validate_flowgroup_graph
@@ -24,6 +33,9 @@ from lakehouse_plumber_spark.expectations import check_failures
 from lakehouse_plumber_spark.models import FlowGroup
 from lakehouse_plumber_spark.operators import REGISTRY
 from lakehouse_plumber_spark.tables import ParquetTableStore, new_store
+
+# lanes run per core at most: a lane's thread mostly waits on its Spark jobs
+LANES_PER_CORE = 2
 
 
 class PipelineRunner:
@@ -148,21 +160,54 @@ class PipelineRunner:
         here by write-target/view names plus SQL/python ref extraction).
         `conf` is passed to every flowgroup's run (the CLI's --backfill
         rides here).
+
+        Each stage is split into lanes (`dag.stage_lanes`): flowgroups that
+        share a view name, a written table (target, DLQ, dedup index, test
+        results) or a user-module name are one lane and run serially in
+        index order, and a stage holding a `spark_conf` flowgroup is one
+        lane. Lanes run at the same time on threads that inherit the
+        caller's job group and local properties; a one-lane stage runs on
+        the calling thread. When a lane raises, the lanes already running
+        finish, lanes not yet started are skipped, the error of the
+        lowest-index failing flowgroup is raised and no later stage starts.
+        The event log keeps flowgroup order, and each finished stage adds a
+        `stage_completed` event with its flowgroups, lanes and wall seconds.
         """
         # one shared edge-builder AND stage computation with the CLI's
         # dag/deps/jobs commands (dag.cross_flowgroup_deps +
         # dag.execution_stages) — scheduling, reporting, and the exported
         # job plan must agree
-        from lakehouse_plumber_spark.dag import cross_flowgroup_deps, execution_stages
+        from lakehouse_plumber_spark.dag import (
+            cross_flowgroup_deps,
+            execution_stages,
+            stage_lanes,
+        )
 
         deps, warnings = cross_flowgroup_deps(flowgroups, self.base_dir)
         for w in warnings:
             print(w, file=sys.stderr)
 
+        def label(i: int) -> str:
+            return f"{flowgroups[i].pipeline}/{flowgroups[i].flowgroup}"
+
+        reporting_default = self.project_config.test_reporting if self.project_config else None
         out: list[BuildContext] = [None] * len(flowgroups)  # type: ignore[list-item]
-        for stage in execution_stages(deps, len(flowgroups)):
+        for number, stage in enumerate(execution_stages(deps, len(flowgroups)), 1):
+            t0 = time.time()
+            lanes = stage_lanes(flowgroups, stage, reporting_default)
+            first_event = len(self.event_log)
+            errors = self._run_lanes(flowgroups, lanes, conf, out)
+            # lanes finish in any order; each run appended its events in one
+            # piece, so a stable sort restores flowgroup order
+            rank: dict[tuple, int] = {}
             for i in stage:
-                out[i] = self.run(flowgroups[i], conf=conf, defer_compactions=True)
+                rank.setdefault((flowgroups[i].pipeline, flowgroups[i].flowgroup), i)
+            self.event_log[first_event:] = sorted(
+                self.event_log[first_event:],
+                key=lambda e: rank.get((e["pipeline"], e["flowgroup"]), len(flowgroups)),
+            )
+            if errors:
+                raise errors[min(errors)]
             # compact BETWEEN stages, not per-flowgroup and not after
             # everything. Per-flowgroup would delete the files behind a
             # SIBLING context's registered DataFrame (file indexes are
@@ -181,7 +226,58 @@ class PipelineRunner:
                 # run() already flushed each context's event log into the
                 # runner's — forward post-flush compaction events explicitly
                 run_pending_compactions(finished, forward_log=self.event_log.append)
+            self.event_log.append({
+                "pipeline": "", "flowgroup": "", "run_id": "",
+                "action": f"stage_{number}", "event": "stage_completed",
+                "details": {
+                    "stage": number,
+                    "flowgroups": [label(i) for i in stage],
+                    "lanes": [[label(i) for i in lane] for lane in lanes],
+                    "seconds": round(time.time() - t0, 3),
+                },
+            })
         return out
+
+    def _run_lanes(
+        self,
+        flowgroups: list[FlowGroup],
+        lanes: list[list[int]],
+        conf: Optional[dict],
+        out: list,
+    ) -> dict[int, BaseException]:
+        """Run one stage's lanes, filling `out[i]` with each flowgroup's
+        context; returns {flowgroup index: error} for the runs that raised."""
+        errors: dict[int, BaseException] = {}
+
+        def lane(members: list[int]) -> None:
+            for i in members:
+                try:
+                    out[i] = self.run(flowgroups[i], conf=conf, defer_compactions=True)
+                except BaseException as e:
+                    errors[i] = e
+                    raise
+
+        if len(lanes) == 1:
+            # the error is in `errors`: run_many raises it once the event
+            # log is in order
+            with contextlib.suppress(BaseException):
+                lane(lanes[0])
+            return errors
+        workers = min(len(lanes), LANES_PER_CORE * self.spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(workers, thread_name_prefix="lhp-lane") as pool:
+            # one wrapper per lane: each lane thread gets its own copy of the
+            # caller's local properties (job group, and room for Spark's
+            # per-thread SQL execution id)
+            futures = [pool.submit(inheritable_thread_target(self.spark)(lane), m) for m in lanes]
+            wait(futures, return_when=FIRST_EXCEPTION)
+            for f in futures:
+                f.cancel()  # lanes still queued do not start; running ones finish
+        # a lane that raised before its first run (setting up its thread)
+        # recorded nothing: charge the error to its first flowgroup
+        for members, f in zip(lanes, futures):
+            if not f.cancelled() and f.exception() and errors.keys().isdisjoint(members):
+                errors[members[0]] = f.exception()
+        return errors
 
     def event_log_df(self) -> DataFrame:
         import json

@@ -315,6 +315,12 @@ def test_cli_run_perf_report(spark, testdata, capsys):
     assert any("write.materialized_view" in l for l in perf_rows)
     assert "[PERF] Event counts:" in out
     assert "action_completed" in out
+    # stage walls: the fixture's first stage runs two lanes, its second one
+    stages = [l for l in out.splitlines() if l.startswith("[PERF]   stage ")]
+    assert [l.split()[2] for l in stages] == ["1", "2"]
+    assert "lanes=2" in stages[0] and "lanes=1" in stages[1]
+    assert all("wall=" in l for l in stages)
+    assert "action seconds overlap" in out
 
 
 def test_cli_compile_parallel_matches_serial(tmp_path, capsys):
@@ -396,7 +402,7 @@ def test_cli_validate_flags_streaming_compaction_conflict(tmp_path, capsys):
     assert "lhp.autoOptimize.maxFiles" in out and "'m.s.t'" in out
 
 
-def test_cli_jobs_exports_staged_plan_matching_run_many(capsys, monkeypatch):
+def test_cli_jobs_exports_staged_plan_matching_run_many(capsys, monkeypatch, spark):
     """VERDICT r4 item 6: `jobs` exports the staged orchestration plan as a
     scheduler-ready artifact, and its stage grouping must match the order
     run_many actually executes (both sides consume dag.execution_stages)."""
@@ -414,8 +420,8 @@ def test_cli_jobs_exports_staged_plan_matching_run_many(capsys, monkeypatch):
         for t in s["tasks"]:
             assert set(t["depends_on"]) <= all_keys
 
-    # replay run_many's scheduling without Spark: record the order run()
-    # would be called in
+    # replay run_many's scheduling without running a flowgroup: record the
+    # order run() is called in
     from lakehouse_plumber_spark.__main__ import _load_tokens
     from lakehouse_plumber_spark.parsers import discover_flowgroups
     from lakehouse_plumber_spark.runner import PipelineRunner
@@ -433,6 +439,8 @@ def test_cli_jobs_exports_staged_plan_matching_run_many(capsys, monkeypatch):
     monkeypatch.setattr(PipelineRunner, "run", fake_run)
     runner = PipelineRunner.__new__(PipelineRunner)
     runner.base_dir = PROJECT
+    # stage 1 has two lanes, which run on threads of this session
+    runner.spark, runner.event_log, runner.project_config = spark, [], None
     runner.run_many(fgs)
 
     stage_of = {k: n for n, s in enumerate(exported, 1) for k in s}

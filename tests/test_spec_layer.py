@@ -453,14 +453,17 @@ class TestParseCache:
 
     @staticmethod
     def _count_parses(monkeypatch):
-        """Record the text of every yaml.safe_load and the number of
-        jinja2.Template compiles."""
+        """Record the text of every discovery parse
+        (parse_cache.parse_yaml) and the number of jinja2.Template
+        compiles."""
         import jinja2
 
-        texts, compiles = [], []
-        real_load, real_template = yaml.safe_load, jinja2.Template
+        from lakehouse_plumber_spark import parse_cache
 
-        def safe_load(stream):
+        texts, compiles = [], []
+        real_load, real_template = parse_cache.parse_yaml, jinja2.Template
+
+        def parse_yaml(stream):
             text = stream.read() if hasattr(stream, "read") else stream
             texts.append(text.decode() if isinstance(text, bytes) else text)
             return real_load(text)
@@ -469,7 +472,7 @@ class TestParseCache:
             compiles.append(a[0])
             return real_template(*a, **kw)
 
-        monkeypatch.setattr(yaml, "safe_load", safe_load)
+        monkeypatch.setattr(parse_cache, "parse_yaml", parse_yaml)
         monkeypatch.setattr(jinja2, "Template", template)
         return texts, compiles
 
@@ -968,3 +971,38 @@ class TestSchemaTransformFileShapes:
         })
         assert out == [{"name": "order_id", "rename_from": "l_orderkey",
                         "type": "BIGINT"}]
+
+
+def test_libyaml_loader_parses_like_safe_load(tmp_path):
+    """parse_cache.parse_yaml (libyaml's CSafeLoader when present) builds
+    the same objects as the pure-Python SafeLoader for every YAML file of
+    the test fixtures and of both generated perfbench projects; a file one
+    loader refuses, the other refuses too."""
+    import glob
+    import os
+    import sys
+
+    if not yaml.__with_libyaml__:
+        pytest.skip("PyYAML built without libyaml")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(root, "perfbench"))
+    try:
+        import gen
+    finally:
+        sys.path.pop(0)
+    gen.make_increment_project(str(tmp_path / "increment"), str(tmp_path / "landing"))
+    gen.make_compile_project(1, str(tmp_path / "compile"))
+    files = [p for d in (os.path.join(root, "tests"), str(tmp_path)) for ext in ("yaml", "yml")
+             for p in glob.glob(os.path.join(d, "**", f"*.{ext}"), recursive=True)]
+    assert len(files) > 200
+
+    def load(loader, data):
+        try:
+            return list(yaml.load_all(data, Loader=loader))
+        except yaml.YAMLError:
+            return "refused"
+
+    for p in files:
+        with open(p, "rb") as f:
+            data = f.read()
+        assert load(yaml.CSafeLoader, data) == load(yaml.SafeLoader, data), p
