@@ -451,9 +451,11 @@ def cmd_jobs(args) -> int:
     job_builder.py:17-60: stages of tasks, each with depends_on and an
     is-parallel marker). `run` executes the same plan in-process: stages in
     order, and a stage's flowgroups at the same time in lanes
-    (`dag.stage_lanes`). Flowgroups that share a view, a written table or a
-    user-module name run one after another in one lane, and a stage holding
-    a flowgroup with a per-table `spark_conf` runs as one lane. When a lane
+    (`dag.stage_lanes`). Flowgroups that share a view, a written table or
+    path, a user-module name or the data-source registry, or where one reads
+    a table or path the other writes, run one after another in one lane, and
+    a stage holding a flowgroup with a per-table `spark_conf` runs as one
+    lane. When a lane
     fails, the running lanes finish and no later stage starts."""
     from lakehouse_plumber_spark.dag import CycleError
 

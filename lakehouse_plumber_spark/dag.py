@@ -9,12 +9,13 @@ networkx needed at this scope.
 from __future__ import annotations
 
 import functools
+import os
 import re
 from collections import defaultdict, deque
-from typing import Optional
+from typing import Callable, Optional
 
 from lakehouse_plumber_spark.models import Action, ActionType
-from lakehouse_plumber_spark.reporting import DEFAULT_RESULT_TABLE
+from lakehouse_plumber_spark.reporting import result_table
 
 
 class CycleError(ValueError):
@@ -390,53 +391,104 @@ def _imports_user_code(a: Action) -> bool:
     )
 
 
-def flowgroup_lane_keys(fg, reporting_default: Optional[dict] = None) -> set[str]:
-    """What a flowgroup's run touches that no flowgroup running at the same
-    time may touch:
+def _registers_data_source(a: Action) -> bool:
+    """Whether the action calls `spark.dataSource.register`, which binds a
+    format name session-wide: a custom sink or a custom data-source load."""
+    src = a.source if isinstance(a.source, dict) else {}
+    wt = a.write_target
+    return src.get("type") == "custom_datasource" or (
+        wt is not None and wt.sink_type is not None and wt.sink_type.value == "custom"
+    )
 
-    - every view it registers or reads (`target`, `source_views()`,
-      `table_reads()`): views live in the one session, and reading a store
-      table from SQL registers it as a temp view too;
-    - every table it writes: the write target, the quarantine DLQ and its
-      `__outbox`/`__clean` tables, the incremental dedup index and grams
-      tables, and the test-reporting result table;
+
+def _read_paths(a: Action) -> list[str]:
+    """File paths a load reads: a cloudfiles `path`, a kafka load's
+    `simulate_from`."""
+    src = a.source if isinstance(a.source, dict) else {}
+    return [str(p) for p in (
+        src.get("path"), src.get("simulate_from"), (src.get("options") or {}).get("simulate_from"),
+    ) if p]
+
+
+def flowgroup_lane_keys(
+    fg, reporting_cfg: Optional[dict] = None, base_dir: str = "."
+) -> tuple[set[str], set[str]]:
+    """What a flowgroup's run touches, as (read keys, write keys). Two
+    flowgroups conflict when one's write key is among the other's read or
+    write keys.
+
+    Written:
+    - every view it registers or reads (`target`, `source_views()`):
+      views live in the one session, where a later
+      `createOrReplaceTempView` of the name replaces them, and reading a
+      store table from SQL registers it as a temp view too;
+    - every table it writes: the write target, a sink's `options.tableName`,
+      the quarantine DLQ and its `__outbox`/`__clean` tables, the
+      incremental dedup index and grams tables, and the test-reporting
+      result table;
+    - every path it writes files under (`WriteTarget.written_paths`),
+      resolved against `base_dir`;
     - the sys.modules names its user code is imported under
-      (`module:<action name>`, `module:lhp_test_reporter`).
+      (`module:<action name>`, `module:lhp_test_reporter`), and the
+      session's data-source registry when it registers a custom format.
 
-    `reporting_default` is the project's test_reporting block, used when
-    the flowgroup declares none (as `PipelineRunner` does)."""
-    names: list[str] = []
-    keys: set[str] = set()
+    Read: the store tables its delta loads read (`table_reads()`) and the
+    paths its loads read files from. A reader in the same stage as a writer
+    of one table is rare (`cross_flowgroup_deps` stages readers after the
+    table's last writer) but happens when another writer of it lands in the
+    reader's stage.
+
+    `reporting_cfg` is the test_reporting block the flowgroup's run
+    publishes with (`PipelineRunner._reporting_cfg`)."""
+    read_names: list[str] = []
+    written_names: list[str] = []
+    writes: set[str] = set()
+    read_paths: list[str] = []
+    written_paths: list[str] = []
     for a in fg.actions:
-        names.extend(a.source_views())
-        names.extend(a.table_reads())
+        written_names.extend(a.source_views())
+        read_names.extend(a.table_reads())
+        read_paths.extend(_read_paths(a))
         if a.target:
-            names.append(a.target)
-        if a.write_target is not None and a.write_target.full_name:
-            names.append(a.write_target.full_name)
+            written_names.append(a.target)
+        wt = a.write_target
+        if wt is not None:
+            written_names.extend(n for n in (wt.full_name, wt.sink_table) if n)
+            written_paths.extend(wt.written_paths())
         if a.quarantine is not None:
             dlq = a.quarantine.dlq_table
-            names.extend((dlq, f"{dlq}__outbox", f"{dlq}__clean"))
+            written_names.extend((dlq, f"{dlq}__outbox", f"{dlq}__clean"))
         if a.dedup is not None:
-            names.extend(t for t in (a.dedup.index_table, a.dedup.grams_table) if t)
+            written_names.extend(t for t in (a.dedup.index_table, a.dedup.grams_table) if t)
         if _imports_user_code(a):
-            keys.add(f"module:{a.name}")
-    reporting = fg.test_reporting if fg.test_reporting is not None else reporting_default
-    if reporting and any(a.type == ActionType.TEST for a in fg.actions):
-        names.append((reporting.get("config") or {}).get("result_table", DEFAULT_RESULT_TABLE))
-        if reporting.get("module_path"):
-            keys.add("module:lhp_test_reporter")
-    keys.update(_lane_name(n) for n in names)
-    return keys
+            writes.add(f"module:{a.name}")
+        if _registers_data_source(a):
+            writes.add("data_source_registry")
+    if reporting_cfg and any(a.type == ActionType.TEST for a in fg.actions):
+        written_names.append(result_table(reporting_cfg.get("config") or {}))
+        if reporting_cfg.get("module_path"):
+            writes.add("module:lhp_test_reporter")
+
+    def path_key(p: str) -> str:
+        return "path:" + os.path.normpath(os.path.join(base_dir, p))
+
+    writes.update(_lane_name(n) for n in written_names)
+    writes.update(path_key(p) for p in written_paths)
+    reads = {_lane_name(n) for n in read_names} | {path_key(p) for p in read_paths}
+    return reads, writes
 
 
 def stage_lanes(
-    flowgroups: list, stage: list[int], reporting_default: Optional[dict] = None
+    flowgroups: list,
+    stage: list[int],
+    reporting_cfg: Callable = lambda fg: fg.test_reporting,
+    base_dir: str = ".",
 ) -> list[list[int]]:
     """Split one stage of `execution_stages` into lanes that may run at the
-    same time: flowgroups sharing a `flowgroup_lane_keys` key are one lane,
-    whose members run one after another in index order. Lanes come out
-    ordered by their first member.
+    same time: flowgroups that conflict on a `flowgroup_lane_keys` key are
+    one lane, whose members run one after another in index order. Lanes
+    come out ordered by their first member. `reporting_cfg(fg)` gives the
+    test_reporting block a flowgroup publishes with.
 
     A flowgroup whose write target sets `spark_conf` makes the whole stage
     one lane: those confs are session-global for the length of its write."""
@@ -452,10 +504,17 @@ def stage_lanes(
             i = root[i]
         return i
 
-    holder: dict[str, int] = {}
+    holders: dict[str, list[int]] = defaultdict(list)
+    written: set[str] = set()
     for i in stage:
-        for key in flowgroup_lane_keys(flowgroups[i], reporting_default):
-            a, b = find(i), find(holder.setdefault(key, i))
+        reads, writes = flowgroup_lane_keys(flowgroups[i], reporting_cfg(flowgroups[i]), base_dir)
+        for key in reads | writes:
+            holders[key].append(i)
+        written |= writes
+    for key in written:
+        first, *rest = holders[key]
+        for i in rest:
+            a, b = find(first), find(i)
             root[max(a, b)] = min(a, b)
     lanes: dict[int, list[int]] = {}
     for i in stage:

@@ -753,6 +753,21 @@ class WriteTarget(BaseModel):
         parts = [p for p in (self.catalog, self.database, self.table) if p]
         return ".".join(parts) if parts else (self.path or "")
 
+    @property
+    def sink_table(self) -> Optional[str]:
+        """The table a sink names in `options.tableName`: a delta sink with
+        no path appends to it through the store, and the sandbox renames it
+        as a produced table."""
+        name = (self.options or {}).get("tableName") if self.type == WriteTargetType.SINK else None
+        return str(name) if name else None
+
+    def written_paths(self) -> list[str]:
+        """Paths this target writes files under outside the store, as
+        spelled in the spec: `path`, `options.path` and a kafka sink's
+        `options.simulate_path`."""
+        opts = self.options or {}
+        return [str(p) for p in (self.path, opts.get("path"), opts.get("simulate_path")) if p]
+
 
 class Action(BaseModel):
     """One typed pipeline step (reference: src/lhp/models/_action.py:65-128)."""

@@ -30,18 +30,22 @@ from typing import Any, Callable, Optional
 
 _TERMINAL_OK = "COMPLETED"
 _TERMINAL_FAIL = "FAILED"
-# where store_test_reporter appends when the config names no result_table
-DEFAULT_RESULT_TABLE = "_audit.lhp_test_results"
+
+
+def result_table(config: dict) -> str:
+    """The table `store_test_reporter` appends to for a test_reporting
+    block's `config`: its `result_table`, else `_audit.lhp_test_results`."""
+    return config.get("result_table", "_audit.lhp_test_results")
 
 
 def store_test_reporter(results: list[dict], config: dict, context: dict, spark) -> dict:
     """Built-in provider: append results to a store table
     (≙ reference providers/delta_test_reporter.py:38-120).
 
-    ``context["store"]`` carries the runner's table store; ``result_table``
-    names the target (default ``DEFAULT_RESULT_TABLE``)."""
+    ``context["store"]`` carries the runner's table store; the target is
+    ``result_table(config)``."""
     store = context.get("store")
-    table = config.get("result_table", DEFAULT_RESULT_TABLE)
+    table = result_table(config)
     if store is None or not results:
         return {"published": 0, "failed": len(results)}
     if config.get("dry_run"):

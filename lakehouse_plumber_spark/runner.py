@@ -8,11 +8,12 @@ expectations, and emits an event log (≙ DLT event log flow_progress rows).
 Cross-pipeline orchestration (reference `lhp deps` / job stages,
 src/lhp/core/jobs/job_generator.py:60-108) is `run_many`: flowgroups are
 staged by table-level dependencies and executed stage by stage. Inside a
-stage, flowgroups that share a view, a written table or a user-module name
-(`dag.stage_lanes`) form one lane and run one after another; different
-lanes run at the same time on the one SparkSession. A stage holding a
-flowgroup with a per-table `spark_conf` runs as one lane. When a lane
-fails, the lanes already running finish, the error of the lowest-index
+stage, flowgroups that share a view, a written table or path, a user-module
+name or the data-source registry, or where one reads a table or path the
+other writes (`dag.stage_lanes`), form one lane and run one after another;
+different lanes run at the same time on the one SparkSession. A stage
+holding a flowgroup with a per-table `spark_conf` runs as one lane. When a
+lane fails, the lanes already running finish, the error of the lowest-index
 failing flowgroup is raised, and no later stage starts.
 """
 
@@ -34,7 +35,8 @@ from lakehouse_plumber_spark.models import FlowGroup
 from lakehouse_plumber_spark.operators import REGISTRY
 from lakehouse_plumber_spark.tables import ParquetTableStore, new_store
 
-# lanes run per core at most: a lane's thread mostly waits on its Spark jobs
+# a bound on lane threads per core, as a safety limit on thread count; a
+# lane's thread mostly waits on its Spark jobs. The value is not tuned.
 LANES_PER_CORE = 2
 
 
@@ -143,7 +145,8 @@ class PipelineRunner:
         return self.run(fg, conf=c)
 
     def _reporting_cfg(self, fg: FlowGroup):
-        """Flowgroup test_reporting block, falling back to the project's."""
+        """Flowgroup test_reporting block, falling back to the project's:
+        what run() publishes with and what run_many's lanes key on."""
         if fg.test_reporting is not None:
             return fg.test_reporting
         return self.project_config.test_reporting if self.project_config else None
@@ -162,10 +165,11 @@ class PipelineRunner:
         rides here).
 
         Each stage is split into lanes (`dag.stage_lanes`): flowgroups that
-        share a view name, a written table (target, DLQ, dedup index, test
-        results) or a user-module name are one lane and run serially in
-        index order, and a stage holding a `spark_conf` flowgroup is one
-        lane. Lanes run at the same time on threads that inherit the
+        share a view name, a written table (target, sink table, DLQ, dedup
+        index, test results), a written path, a user-module name or the
+        data-source registry, or where one reads a table or path the other
+        writes, are one lane and run serially in index order, and a stage
+        holding a `spark_conf` flowgroup is one lane. Lanes run at the same time on threads that inherit the
         caller's job group and local properties; a one-lane stage runs on
         the calling thread. When a lane raises, the lanes already running
         finish, lanes not yet started are skipped, the error of the
@@ -190,11 +194,10 @@ class PipelineRunner:
         def label(i: int) -> str:
             return f"{flowgroups[i].pipeline}/{flowgroups[i].flowgroup}"
 
-        reporting_default = self.project_config.test_reporting if self.project_config else None
         out: list[BuildContext] = [None] * len(flowgroups)  # type: ignore[list-item]
         for number, stage in enumerate(execution_stages(deps, len(flowgroups)), 1):
             t0 = time.time()
-            lanes = stage_lanes(flowgroups, stage, reporting_default)
+            lanes = stage_lanes(flowgroups, stage, self._reporting_cfg, self.base_dir)
             first_event = len(self.event_log)
             errors = self._run_lanes(flowgroups, lanes, conf, out)
             # lanes finish in any order; each run appended its events in one
@@ -265,10 +268,7 @@ class PipelineRunner:
             return errors
         workers = min(len(lanes), LANES_PER_CORE * self.spark.sparkContext.defaultParallelism)
         with ThreadPoolExecutor(workers, thread_name_prefix="lhp-lane") as pool:
-            # one wrapper per lane: each lane thread gets its own copy of the
-            # caller's local properties (job group, and room for Spark's
-            # per-thread SQL execution id)
-            futures = [pool.submit(inheritable_thread_target(self.spark)(lane), m) for m in lanes]
+            futures = [pool.submit(self._inheriting(lane), m) for m in lanes]
             wait(futures, return_when=FIRST_EXCEPTION)
             for f in futures:
                 f.cancel()  # lanes still queued do not start; running ones finish
@@ -278,6 +278,16 @@ class PipelineRunner:
             if not f.cancelled() and f.exception() and errors.keys().isdisjoint(members):
                 errors[members[0]] = f.exception()
         return errors
+
+    def _inheriting(self, fn):
+        """`fn` wrapped to run with a copy of the calling thread's local
+        properties (job group, and room for Spark's per-thread SQL execution
+        id). One wrapper per lane, so each lane thread gets its own copy.
+        Without pinned threads (PYSPARK_PIN_THREAD=false) JVM properties do
+        not follow Python threads, and `inheritable_thread_target` hands the
+        session back: `fn` then runs as it is."""
+        wrap = inheritable_thread_target(self.spark)
+        return fn if wrap is self.spark else wrap(fn)
 
     def event_log_df(self) -> DataFrame:
         import json

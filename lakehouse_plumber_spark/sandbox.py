@@ -125,9 +125,8 @@ def produced_tables(flowgroups: list[FlowGroup]) -> dict[str, str]:
             wt = a.write_target
             if wt.type.value in ("materialized_view", "streaming_table") and wt.table:
                 out[_canon(wt.full_name)] = _canon(wt.table)
-            elif wt.type.value == "sink" and (wt.options or {}).get("tableName"):
-                full = str(wt.options["tableName"])
-                out[_canon(full)] = _canon(full.rsplit(".", 1)[-1])
+            elif wt.sink_table:
+                out[_canon(wt.sink_table)] = _canon(wt.sink_table.rsplit(".", 1)[-1])
     return out
 
 

@@ -15,7 +15,7 @@ from types import SimpleNamespace
 
 import pytest
 
-from lakehouse_plumber_spark.dag import stage_lanes
+from lakehouse_plumber_spark.dag import cross_flowgroup_deps, execution_stages, stage_lanes
 from lakehouse_plumber_spark.parsers import load_flowgroup
 from lakehouse_plumber_spark.runner import PipelineRunner
 from lakehouse_plumber_spark.tables import ParquetTableStore
@@ -30,6 +30,11 @@ def _mv(view: str, table: str, **target) -> dict:
     return {"name": "w", "type": "write", "source": view,
             "write_target": {"type": "materialized_view", "catalog": "main",
                              "schema": "s", "table": table, **target}}
+
+
+def _sink(view: str, **target) -> dict:
+    return {"name": "w", "type": "write", "source": view,
+            "write_target": {"type": "sink", "sink_type": "delta", **target}}
 
 
 def _fg(name: str, actions: list[dict]):
@@ -102,10 +107,81 @@ class TestStageLanes:
         fgs = [tested("a"), tested("b", {"config": {"result_table": "main.audit.b"}}),
                tested("c")]
         # a and c publish to the project default's table; b to its own
-        lanes = stage_lanes(fgs, [0, 1, 2], reporting_default={"config": {}})
+        lanes = stage_lanes(fgs, [0, 1, 2], lambda fg: fg.test_reporting or {"config": {}})
         assert [[fgs[i].flowgroup for i in lane] for lane in lanes] == [["a", "c"], ["b"]]
         # with no project default, a and c publish nothing
         assert _lanes(fgs) == [["a"], ["b"], ["c"]]
+
+    def test_shared_sink_table(self):
+        """Two delta sinks appending to one `options.tableName` share a lane,
+        though neither names it in `table`, so `cross_flowgroup_deps` leaves
+        them in one stage."""
+        fgs = [_fg("a", [_load("va"), _sink("va", options={"tableName": "main.ext.events"})]),
+               _fg("b", [_load("vb"), _sink("vb", options={"tableName": "main.ext.other"})]),
+               _fg("c", [_load("vc"), _sink("vc", options={"tableName": "main.ext.events"})])]
+        assert execution_stages(cross_flowgroup_deps(fgs, ".")[0], 3) == [[0, 1, 2]]
+        assert _lanes(fgs) == [["a", "c"], ["b"]]
+
+    def test_shared_sink_path(self):
+        """`path`, `options.path` and `./`-spelled paths name one directory."""
+        fgs = [_fg("a", [_load("va"), _sink("va", path="out/events")]),
+               _fg("b", [_load("vb"), _sink("vb", options={"path": "./out/events"})]),
+               _fg("c", [_load("vc"), _sink("vc", path="out/other")])]
+        assert _lanes(fgs) == [["a", "b"], ["c"]]
+
+    def test_load_of_a_path_another_flowgroup_writes(self):
+        """A kafka load of the directory a simulated kafka sink writes shares
+        its lane; two cloudfiles loads of one landing directory only read
+        it and run apart."""
+        kafka_in = {"name": "ld", "type": "load", "target": "vk", "readMode": "batch",
+                    "source": {"type": "kafka", "bootstrap_servers": "x:9092",
+                               "subscribe": "t", "simulate_from": "sim/topic"}}
+
+        def landing(view: str) -> dict:
+            return {"name": "ld", "type": "load", "target": view, "readMode": "stream",
+                    "source": {"type": "cloudfiles", "path": "landing/events",
+                               "format": "parquet", "schema": "id BIGINT"}}
+
+        fgs = [_fg("a", [_load("va"), _sink("va", sink_type="kafka", topic="t",
+                                            bootstrap_servers="x:9092",
+                                            options={"simulate_path": "sim/topic"})]),
+               _fg("b", [kafka_in, _mv("vk", "tb")]),
+               _fg("c", [landing("vc"), _mv("vc", "tc")]),
+               _fg("d", [landing("vd"), _mv("vd", "td")])]
+        assert _lanes(fgs) == [["a", "b"], ["c"], ["d"]]
+
+    def test_custom_sinks_share_the_data_source_registry(self):
+        class Fmt:
+            @classmethod
+            def name(cls):
+                return "fmt"
+
+        fgs = [_fg(n, [_load(f"v{n}"), _sink(f"v{n}", sink_type="custom",
+                                             options={"sink_class_obj": Fmt})])
+               for n in ("a", "b")] + [_fg("c", [_load("vc"), _mv("vc", "tc")])]
+        assert _lanes(fgs) == [["a", "b"], ["c"]]
+
+    def test_delta_load_of_a_table_written_in_its_stage(self):
+        """b and c both write main.s.t; d's delta load of it is staged after
+        c, its last writer. b also reads main.s.x, which a writes, so b runs
+        in d's stage: d's read of main.s.t puts the two in one lane. Two
+        delta loads of one table only read it and run apart."""
+        def delta_load(view: str, table: str) -> dict:
+            return {"name": "ld", "type": "load", "target": view,
+                    "source": {"type": "delta", "catalog": "main", "database": "s",
+                               "table": table}}
+
+        fgs = [_fg("a", [_load("va"), _mv("va", "x")]),
+               _fg("b", [delta_load("vb", "x"), _mv("vb", "t")]),
+               _fg("c", [_load("vc"), _mv("vc", "t")]),
+               _fg("d", [delta_load("vd", "t"), _mv("vd", "td")]),
+               _fg("e", [delta_load("ve", "t"), _mv("ve", "te")])]
+        stages = execution_stages(cross_flowgroup_deps(fgs, ".")[0], len(fgs))
+        assert stages == [[0, 2], [1, 3, 4]]
+        lanes = stage_lanes(fgs, stages[1])
+        assert [[fgs[i].flowgroup for i in lane] for lane in lanes] == [["b", "d", "e"]]
+        assert [[fgs[i].flowgroup for i in lane] for lane in stage_lanes(fgs, [3, 4])] == [
+            ["d"], ["e"]]
 
     def test_spark_conf_flowgroup_makes_the_stage_one_lane(self):
         fgs = [_fg("a", [_load("va"), _mv("va", "ta")]),
@@ -145,6 +221,18 @@ def test_independent_flowgroups_overlap(spark, tmp_path):
     assert [c.resolve_view(t).count() for c, t in zip(ctxs, ("main.s.ta", "main.s.tb"))] == [3, 3]
     [stage] = [e["details"] for e in runner.event_log if e["event"] == "stage_completed"]
     assert stage["lanes"] == [["p/a"], ["p/b"]] and stage["seconds"] > 0
+
+
+def test_lanes_run_without_pinned_threads(spark, tmp_path, monkeypatch):
+    """With PYSPARK_PIN_THREAD=false `inheritable_thread_target(session)`
+    returns the session itself; lanes then run unwrapped."""
+    import lakehouse_plumber_spark.runner as runner_mod
+
+    monkeypatch.setattr(runner_mod, "inheritable_thread_target", lambda f=None: f)
+    barrier = threading.Barrier(2, timeout=60)
+    fgs = [_py_fg("a", barrier.wait, "ta"), _py_fg("b", barrier.wait, "tb")]
+    ctxs = _runner(spark, tmp_path).run_many(fgs)
+    assert [c.resolve_view(t).count() for c, t in zip(ctxs, ("main.s.ta", "main.s.tb"))] == [3, 3]
 
 
 def test_one_lane_stage_runs_on_the_calling_thread(spark, tmp_path):
